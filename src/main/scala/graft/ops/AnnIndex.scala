@@ -148,12 +148,19 @@ object AnnIndex {
     * snapshot maintained through (no-op when already current).
     */
   def maintainSq8Index(s: SparkSession, corpusRoot: String,
-      indexRoot: String): Long = {
+      indexRoot: String): Long =
+    maintainSq8Index(s, corpusRoot, indexRoot, cowDeletes = false)
+
+  /** `cowDeletes` rewrites touched files instead of publishing equality
+    * deletes: the SQL procedure's form (see [[applyFeed]]).
+    */
+  private[graft] def maintainSq8Index(s: SparkSession, corpusRoot: String,
+      indexRoot: String, cowDeletes: Boolean): Long = {
     val from = maintainedThrough(s, indexRoot)
     val to = SnapshotTable.currentSnapshot(s, corpusRoot)
     if (to <= from) return from
     applyFeed(s, indexRoot,
-      SnapshotTable.changeFeed(s, corpusRoot, from, to), to)
+      SnapshotTable.changeFeed(s, corpusRoot, from, to), to, cowDeletes)
   }
 
   /** Fold one change-feed FRAME into the index — the shared core of
@@ -164,7 +171,12 @@ object AnnIndex {
     * exactly-once contract a restarted stream needs.
     */
   def applyFeed(s: SparkSession, indexRoot: String, feedFrame: DataFrame,
-      throughSnapshot: Long): Long = {
+      throughSnapshot: Long): Long =
+    applyFeed(s, indexRoot, feedFrame, throughSnapshot, cowDeletes = false)
+
+  private[graft] def applyFeed(s: SparkSession, indexRoot: String,
+      feedFrame: DataFrame, throughSnapshot: Long,
+      cowDeletes: Boolean): Long = {
     val from = maintainedThrough(s, indexRoot)
     if (throughSnapshot <= from) return from
     val st = statsOf(s, indexRoot)
@@ -217,25 +229,25 @@ object AnnIndex {
     // delta-sized and folded on the [[SnapshotTable.settleOnDebt]]
     // cadence below. Replay stays idempotent: a replayed pass's
     // deletes outrank the crashed attempt's appends (strictly-older
-    // sequence scoping) before re-appending them.
-    // Conf-gated (`graft.index.maintain.eq`, default on) so the COW
-    // form stays A/B-measurable in one JVM; both forms produce
-    // row-identical tables (the eq-delta spec pins it).
-    val eqMode =
-      s.conf.get("graft.index.maintain.eq", "true").toBoolean
+    // sequence scoping) before re-appending them. The eq form won 7 of
+    // 8 alternating full-gate pairs against the COW rewrite.
+    // `cowDeletes` keeps the COW delete + merge for the SQL procedure,
+    // whose table must carry no delete entries; its confluence is
+    // pinned by SnapshotProcedureSpec.
     if (anyRemovedOnly) {
-      if (eqMode) SnapshotTable.deleteByKeysEq(removedOnly, indexRoot)
-      else SnapshotTable.deleteByKeys(removedOnly, indexRoot, "vec_id")
+      if (cowDeletes)
+        SnapshotTable.deleteByKeys(removedOnly, indexRoot, "vec_id")
+      else SnapshotTable.deleteByKeysEq(removedOnly, indexRoot)
     }
     val floor = Map(s"stream.$FloorTag.batch" -> throughSnapshot.toString,
       StatsProp -> renderStats(st))
     if (anyAdds) {
-      if (eqMode)
-        SnapshotTable.upsertEq(quantize(addRows, st), indexRoot,
-          Seq("vec_id"), extraProps = floor)
-      else
+      if (cowDeletes)
         SnapshotTable.merge(quantize(addRows, st), indexRoot, "vec_id",
           extraProps = floor)
+      else
+        SnapshotTable.upsertEq(quantize(addRows, st), indexRoot,
+          Seq("vec_id"), extraProps = floor)
     } else // deletes only: advance the floor with an empty append
       SnapshotTable.commit(
         SnapshotTable.read(s, indexRoot).limit(0), indexRoot,

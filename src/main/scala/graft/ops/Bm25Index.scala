@@ -131,25 +131,37 @@ object Bm25Index {
   }
 
   /** Fold the corpus change feed since the last maintenance into the
-    * tf/dl tables: per touched doc, delete its old rows (join-form
-    * keyed COW, stats-pruned) and append its re-tokenized new ones.
+    * tf/dl tables: per touched doc, delete its old rows (an equality
+    * delete of its key) and append its re-tokenized new ones.
     * O(churn tokens); idempotent via the floor. Returns the corpus
     * snapshot maintained through (no-op when already current).
     */
   def maintainBm25Index(s: SparkSession, corpusRoot: String,
-      indexRoot: String): Long = {
+      indexRoot: String): Long =
+    maintainBm25Index(s, corpusRoot, indexRoot, cowDeletes = false)
+
+  /** `cowDeletes` rewrites touched files instead of publishing equality
+    * deletes: the SQL procedure's form (see [[applyFeed]]).
+    */
+  private[graft] def maintainBm25Index(s: SparkSession, corpusRoot: String,
+      indexRoot: String, cowDeletes: Boolean): Long = {
     val from = maintainedThrough(s, indexRoot)
     val to = SnapshotTable.currentSnapshot(s, corpusRoot)
     if (to <= from) return from
     applyFeed(s, indexRoot,
-      SnapshotTable.changeFeed(s, corpusRoot, from, to), to)
+      SnapshotTable.changeFeed(s, corpusRoot, from, to), to, cowDeletes)
   }
 
   /** Fold one change-feed frame — shared by batch catch-up and a
     * streaming CDF tail's `foreachBatch`, like [[AnnIndex.applyFeed]].
     */
   def applyFeed(s: SparkSession, indexRoot: String, feedFrame: DataFrame,
-      throughSnapshot: Long): Long = {
+      throughSnapshot: Long): Long =
+    applyFeed(s, indexRoot, feedFrame, throughSnapshot, cowDeletes = false)
+
+  private[graft] def applyFeed(s: SparkSession, indexRoot: String,
+      feedFrame: DataFrame, throughSnapshot: Long,
+      cowDeletes: Boolean): Long = {
     val from = maintainedThrough(s, indexRoot)
     if (throughSnapshot <= from) return from
     val feed = feedFrame.localCheckpoint(eager = true) // multi-consumer
@@ -181,19 +193,17 @@ object Bm25Index {
     // ZERO table read) instead of the COW [[SnapshotTable.deleteByKeys]]
     // rewrite, which read AND rewrote every touched tf/dl file on every
     // pass — O(touched files), i.e. O(corpus slice), where the churn is
-    // O(delta). The read-side debt (one broadcast key anti-join per
-    // scan) is delta-sized and is settled on the [[settleOnDebt]]
-    // cadence below. Replay stays idempotent: a replayed pass's
-    // eq-delete outranks (kills) the crashed attempt's appended rows —
-    // strictly-older-sequence scoping — before re-appending them.
-    // Conf-gated (`graft.index.maintain.eq`, default on) so the COW
-    // form stays A/B-measurable in one JVM; both forms produce
-    // row-identical tables (the eq-delta spec pins it).
-    val eqMode =
-      s.conf.get("graft.index.maintain.eq", "true").toBoolean
+    // O(delta); the eq form won 7 of 8 alternating full-gate pairs. The
+    // read-side debt (one broadcast key anti-join per scan) is
+    // delta-sized and is settled on the [[settleOnDebt]] cadence below.
+    // Replay stays idempotent: a replayed pass's eq-delete outranks
+    // (kills) the crashed attempt's appended rows — strictly-older-
+    // sequence scoping — before re-appending them. `cowDeletes` keeps
+    // the rewrite for the SQL procedure, whose tables must carry no
+    // delete entries; its confluence is pinned by SnapshotProcedureSpec.
     def dropKeys(root: String): Unit =
-      if (eqMode) SnapshotTable.deleteByKeysEq(touchedKeys, root)
-      else SnapshotTable.deleteByKeys(touchedKeys, root, "doc_id")
+      if (cowDeletes) SnapshotTable.deleteByKeys(touchedKeys, root, "doc_id")
+      else SnapshotTable.deleteByKeysEq(touchedKeys, root)
     if (anyTouched) dropKeys(tfRoot(indexRoot))
     if (anyChanged) {
       val toks = tokensOf(changed).cache()

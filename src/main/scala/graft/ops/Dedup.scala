@@ -312,23 +312,13 @@ object Dedup {
     * shuffle of the frame replaces two (window + sets each re-shuffled
     * the full shingle strings by doc_id; the shingle-keyed df
     * aggregation is map-side-combined either way) — measured −34% on
-    * the whole prefix chain at sf0.1, and one full-frame exchange
-    * saved at any scale.
-    *
-    * Conf-gated (`graft.dedup.shingles.prepartition`, default on —
-    * r16, the same measured-both-ways treatment the merge cache got):
-    * at 100 TB the shingle frame is a multiple of corpus size, and on
-    * corpora where the cache-build write cost outweighs the two saved
-    * exchanges (the minhash_error lesson: pre-partitioning loses to
-    * combine-friendly consumers) the gate falls back to the plain
-    * cached frame. MEMORY_AND_DISK either way — spills, never OOMs.
+    * the whole prefix chain at sf0.1 (7.70 → 5.11 s) and 46.4 → 28.5 s
+    * at sf1, where the per-doc verify stage reuses the layout
+    * (40.4 → 19.6 s); one full-frame exchange saved at any scale.
+    * MEMORY_AND_DISK — spills, never OOMs.
     */
-  private def docShingles(docs: DataFrame): DataFrame = {
-    val pre = docs.sparkSession.conf
-      .get("graft.dedup.shingles.prepartition", "true").toBoolean
-    val sh = shingles(docs)
-    (if (pre) sh.repartition(col("doc_id")) else sh).cache()
-  }
+  private def docShingles(docs: DataFrame): DataFrame =
+    shingles(docs).repartition(col("doc_id")).cache()
 
   /** The prefix index's candidate-pair stage alone — exposed so the
     * scale probe can measure its cardinality (the quantity the 100 TB

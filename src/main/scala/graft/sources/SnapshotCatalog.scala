@@ -815,6 +815,12 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
   // ('db.t') against THIS catalog's warehouse, delegates to the
   // library call, and returns a one-row result scan summarizing what
   // happened — all driver-side metadata work.
+  //
+  // maintain_sq8_index / maintain_bm25_index pass `cowDeletes = true`:
+  // catalog scans REFUSE merge-on-read debt by design, so the SQL
+  // lifecycle's index tables must carry no equality-delete entries —
+  // and a COW delete is cheaper than an equality delete plus an
+  // immediate fold.
 
   import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
 
@@ -840,24 +846,6 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
     val ns = nsPath(ident.namespace)
     if (!fs(ns).exists(ns)) throw new NoSuchNamespaceException(ident.namespace)
     tablePath(ident).toString
-  }
-
-  /** Run an index-maintenance body with the COW delete form forced:
-    * the SQL lifecycle's contract is that the index tables stay
-    * DSv2-addressable (catalog scans REFUSE merge-on-read debt, by
-    * design), so the procedures must not leave eq-delete entries
-    * behind — and COW directly is strictly cheaper than eq-delete +
-    * an immediate fold. The library surface (`applyFeed` callers that
-    * read via SnapshotTable.read) keeps the eq fast path.
-    */
-  private def cowMaintain[A](body: => A): A = {
-    val prev = spark.conf.getOption("graft.index.maintain.eq")
-    spark.conf.set("graft.index.maintain.eq", "false")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set("graft.index.maintain.eq", v)
-      case None => spark.conf.unset("graft.index.maintain.eq")
-    }
   }
 
   /** One self-bound procedure: fixed IN parameters (name, type,
@@ -980,8 +968,8 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
         Seq(("table", StringType, None), ("index_table", StringType, None)),
         Seq(("maintained_through", LongType)),
         { case Seq(t: String, ix: String) =>
-          Seq(Long.box(cowMaintain(graft.ops.AnnIndex.maintainSq8Index(
-            spark, rootOf(t), rootOf(ix))))) }),
+          Seq(Long.box(graft.ops.AnnIndex.maintainSq8Index(
+            spark, rootOf(t), rootOf(ix), cowDeletes = true))) }),
       Proc("build_bm25_index",
         "build the maintained BM25 index (tf/dl snapshot tables) of " +
           "`table`'s doc_id/text columns under `index_prefix` — the " +
@@ -1003,8 +991,8 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
           ("index_prefix", StringType, None)),
         Seq(("maintained_through", LongType)),
         { case Seq(t: String, ix: String) =>
-          Seq(Long.box(cowMaintain(graft.ops.Bm25Index.maintainBm25Index(
-            spark, rootOf(t), newRootOf(ix))))) }),
+          Seq(Long.box(graft.ops.Bm25Index.maintainBm25Index(
+            spark, rootOf(t), newRootOf(ix), cowDeletes = true))) }),
       Proc("create_tag",
         "pin snapshot `version` (default: current) under an immutable " +
           "name; expire keeps tagged snapshots alive until drop_ref",

