@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * byte-stable across partitionings/re-runs. Per-id seeding uses the
   * probe-proven mix (id * 0xC2B2AE3D27D4EB4FL + salt) — NOT multiples
   * of SplittableRandom's internal gamma, which would make consecutive
-  * ids' draw streams shift-by-one copies (see DedupScaleProbe).
+  * ids' draw streams shift-by-one copies (see `Profile.docText`).
   *
   * Fidelity notes (what downstream queries actually depend on):
   *  - key ranges/referential integrity: lineitem→orders→customer,

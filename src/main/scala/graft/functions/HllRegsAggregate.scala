@@ -31,7 +31,7 @@ import org.apache.spark.sql.types._
   * keys — 128 by default — where the composed codegen'd plan hash-aggs
   * and spills normally.)
   *
-  * MEASURED (OpScaleProbe, local[32], repeated isolated runs): the
+  * MEASURED (`graft.Profile ops`, local[32], repeated isolated runs): the
   * native pass is faster at every probed scale — 0.5 s vs 1.0 s at x1,
   * 1.4-1.6 s vs 2.0-2.5 s at x10, and 7.2-15.0 s vs 7.4-18.4 s at x100
   * (50M tokens; run-order noise dominates there, both paths are bounded

@@ -42,8 +42,8 @@ import graft.sources.SnapshotTable
   * delta, and both the upsert and the delete are equality-delete
   * commits that write O(delta) bytes and read NOTHING; the deferred
   * read-side debt folds on the [[SnapshotTable.settleOnDebt]] cadence.
-  * The OpScaleProbe `snap_annmaint` axis pins maintain flat vs
-  * rebuild growing as the corpus scales ×1/×10/×100.
+  * Measured (SURVEY §6.15): maintain stays flat while rebuild grows
+  * as the corpus scales ×1/×10/×100.
   */
 object AnnIndex {
 

@@ -297,7 +297,7 @@ object Dedup {
     * returned lazy frame is consumed. Callers that invoke it repeatedly
     * in one JVM — probes, benches — MUST clear caches between
     * invocations (`spark.sharedState.cacheManager.clearCache()`;
-    * Verify/Bench/OpScaleProbe all do) or retained blocks accumulate
+    * Verify/Bench/Profile all do) or retained blocks accumulate
     * into GC contention that reads as a phantom regression.
     */
   def prefixJaccardDocs(docs: DataFrame): DataFrame = {

@@ -54,8 +54,7 @@ object GraphOps {
     * CACHE CONTRACT: the event/edge/node frames stay cached for the
     * iteration's reuse and cannot unpersist before the returned lazy
     * frame is consumed; repeat callers in one JVM (Bench, probes)
-    * clear caches between invocations (Verify/Bench/OpScaleProbe all
-    * do).
+    * clear caches between invocations (Verify/Bench/Profile all do).
     */
   def pagerank(events: DataFrame): DataFrame = {
     val ev = itemEvents(events).cache()
@@ -136,7 +135,7 @@ object GraphOps {
     * event/edge/node frames stay cached for the iteration's reuse and
     * cannot unpersist before the returned lazy frame is consumed;
     * repeat callers in one JVM (Bench, probes) clear caches between
-    * invocations (Verify/Bench/OpScaleProbe all do).
+    * invocations (Verify/Bench/Profile all do).
     */
   def personalizedPagerank(events: DataFrame): DataFrame = {
     val ev = itemEvents(events).cache()

@@ -175,7 +175,7 @@ object PipelineOps {
 
   /** NOTE the bench shingle set stays cached for the life of the query
     * (it feeds the m-sizing count, the bit table, AND the exact-overlap
-    * join) — callers that loop (Bench, OpScaleProbe) clear caches
+    * join) — callers that loop (Bench, Profile) clear caches
     * between invocations, which is the same contract every cached
     * operator here carries.
     */

@@ -794,8 +794,8 @@ object TextAnalysis {
     * one per-doc aggregation. Nothing iterates over the corpus; the
     * merge loop touches only the vocabulary.
     *
-    * Two apply arms, same semantics (spec-locked equal, probe-measured
-    * in `BpeScaleProbe`): tables ≤ [[BpeFoldMaxMerges]] fold as chained
+    * Two apply arms, same semantics (spec-locked equal, measured in
+    * SURVEY §6.9): tables ≤ [[BpeFoldMaxMerges]] fold as chained
     * codegen `replace` columns; a REALISTIC vocabulary-scale table
     * (1k–50k merges) would build a 1k-deep expression tree — past the
     * JIT/codegen sweet spot — so the large arm broadcasts the merge

@@ -19,16 +19,19 @@ object TeraQueries {
     math.max(10000L, (sf * 1e7).toLong)
   }
 
+  /** Sort partitions for `n` records. Spill-aware: each holds under
+    * ~64 MB of raw records, so the per-task working set fits executor
+    * memory at any scale (empirically: 10 GB / 128 partitions OOMs an
+    * 8g heap; /512 sails through).
+    */
+  private[graft] def sortPartitions(s: SparkSession, n: Long): Int =
+    math.max(s.sparkContext.defaultParallelism,
+      (n * TeraGen.RecordLen / (64L << 20)).toInt + 1)
+
   def teraPipeline(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val n = recordsFor(dir)
-    // spill-aware sizing: keep each sort partition under ~64 MB of raw
-    // records so the per-task working set fits executor memory at any
-    // scale (empirically: 10 GB / 128 partitions OOMs an 8g heap; /512
-    // sails through)
-    val parts = math.max(
-      s.sparkContext.defaultParallelism,
-      (n * TeraGen.RecordLen / (64L << 20)).toInt + 1)
+    val parts = sortPartitions(s, n)
     // the TPCx-HS-style protocol (reference apps/terasort/run.sh `for i
     // in seq 1 2`): TWO consecutive timed gen+sort+validate runs, each
     // reported as SF-per-hour with SF = bytes/10^10. TPCx-HS designates

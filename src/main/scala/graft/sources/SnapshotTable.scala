@@ -3478,6 +3478,14 @@ object SnapshotTable {
     steps.reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
   }
 
+  /** Row-removing steps [[applyChanges]] folds between lineage-truncating
+    * checkpoints. Measured on 200 commits over a 150k-key state
+    * (SURVEY §6.15): K=8 126 s, K=16 118 s, K=32 133 s, K=64 169 s —
+    * small K pays barrier materialization, large K pays the
+    * O(K²)-pushed-join segments.
+    */
+  private[sources] val FoldBarrier = 16
+
   /** Fold a [[changeFeed]] over a consumer's `state`: commits apply in
     * order; an append step unions its `A` rows; a merge step removes
     * its touched keys (anti-join on `keyCol` over the `U`/`UB` rows)
@@ -3496,16 +3504,12 @@ object SnapshotTable {
     * commits would otherwise fold one anti-join + union PER COMMIT
     * into a single lazy plan — the structural class that
     * StackOverflowed the BPE fold arm at ~1k merges (SURVEY §6.9) and
-    * that Catalyst analyzes superlinearly. Every
-    * `graft.cdf.fold.barrier` row-removing steps (default 16 —
-    * probed on the OpScaleProbe `snap_cdf_fold` axis, 200 commits
-    * over a 150k-key state: K=8 126 s, K=16 118 s, K=32 133 s, K=64
-    * 169 s; small K pays barrier materialization, large K pays the
-    * O(K²)-pushed-join segments) the accumulated state is
-    * materialized with `localCheckpoint`, truncating the lineage so a
-    * catch-up of ANY commit count analyzes O(barrier)-deep plans and
-    * fold cost grows ~linearly in commit count (2 / 20 / 200 commits
-    * → 2.2 / 7.5 / 118 s on the probe).
+    * that Catalyst analyzes superlinearly. Every [[FoldBarrier]]
+    * row-removing steps the accumulated state is materialized with
+    * `localCheckpoint`, truncating the lineage so a catch-up of ANY
+    * commit count analyzes O(barrier)-deep plans and fold cost grows
+    * ~linearly in commit count (2 / 20 / 200 commits → 2.2 / 7.5 /
+    * 118 s, SURVEY §6.15).
     * Append-only steps never force a barrier — unions are flat and
     * coalesce in Catalyst; only join depth counts.
     */
@@ -3513,7 +3517,6 @@ object SnapshotTable {
       keyCol: String): DataFrame = {
     import org.apache.spark.sql.functions.col
     val s = state.sparkSession
-    val barrier = s.conf.get("graft.cdf.fold.barrier", "16").toInt
     val commits = feed.select("_commit").distinct()
       .collect().map(_.getLong(0)).sorted
     var joinsSinceBarrier = 0
@@ -3530,7 +3533,7 @@ object SnapshotTable {
           .join(step.filter(col("_op").isin("U", "UB", "D", "XB"))
             .select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
           .unionByName(rows, allowMissingColumns = true)
-        if (joinsSinceBarrier >= barrier) {
+        if (joinsSinceBarrier >= FoldBarrier) {
           joinsSinceBarrier = 0
           stepped.localCheckpoint(eager = true)
         } else stepped
@@ -3546,8 +3549,8 @@ object SnapshotTable {
     * The join output is just the touched FILE set (O(files), aggregated
     * distinct), so driver memory scales with the table's file count,
     * not the delta. `MergeLargeSpec` proves the touched/carried split
-    * identical to [[merge]]'s collect form; the OpScaleProbe axis pins
-    * the join form flat as the delta grows ×100.
+    * identical to [[merge]]'s collect form; the join form measured
+    * flat as the delta grows ×100 (SURVEY §6.10).
     */
   def mergeLarge(updates: DataFrame, root: String,
       keyCol: String): (Long, Int, Int) = {
@@ -3718,8 +3721,7 @@ object SnapshotTable {
     * resurrecting deleted rows.
     *
     * Returns (new snapshot id, files dropped, files marked via the
-    * vector, files carried untouched); also recorded for
-    * [[lastMorStats]].
+    * vector, files carried untouched).
     */
   def deleteWhereMor(s: SparkSession, root: String,
       filters: Seq[org.apache.spark.sql.sources.Filter]): (Long, Int, Int, Int) = {
@@ -3814,7 +3816,6 @@ object SnapshotTable {
     val id = publishStaged(s, root, commitId, staging, carried, cur,
       Seq.empty, Map("delete.mor" -> filters.mkString(" AND ")) ++ cdfProps,
       schema.getOrElse(readAt(s, root, cur).schema))
-    lastMor.put(root, (drop.size, newDvLine.size, keep.size + ambiguous.size))
     (id, drop.size, if (newDvLine.isDefined) ambiguous.size else 0,
       keep.size)
   }
@@ -3881,16 +3882,6 @@ object SnapshotTable {
     lastDelete.put(root, (0, touched.size, carried.size))
     (id, touched.size, carried.size)
   }
-
-  private[sources] val lastMor =
-    new scala.collection.concurrent.TrieMap[String, (Int, Int, Int)]
-
-  /** The most recent [[deleteWhereMor]] decision for `root`:
-    * (files dropped metadata-only, delete-vector files written,
-    * files carried verbatim).
-    */
-  def lastMorStats(root: String): Option[(Int, Int, Int)] =
-    lastMor.get(root)
 
   /** CDC UPSERT with ZERO table read at write time (Iceberg-v2
     * EQUALITY DELETES — the Flink-CDC write shape): one commit that
@@ -4122,8 +4113,7 @@ object SnapshotTable {
     * driver (the replaced-partition set is small — the delta — by the
     * same contract as [[merge]]); null partition values refuse.
     * Returns (new snapshot id, files dropped, files rewritten, files
-    * carried); the decision is also recorded for
-    * [[lastReplaceStats]].
+    * carried).
     */
   def commitReplace(df: DataFrame, root: String,
       statsCol: Option[String] = None): (Long, Int, Int, Int) = {
@@ -4175,18 +4165,8 @@ object SnapshotTable {
       carriedHeadLines(s, root, cur, keep.map(_.path).toSet), cur,
       statsCol, Map("replace.partitions" -> tuples.length.toString),
       baseSchema = schema, partitionCols = parts)
-    lastReplace.put(root, (drop.size, rewrite.size, keep.size))
     (id, drop.size, rewrite.size, keep.size)
   }
-
-  private[sources] val lastReplace =
-    new scala.collection.concurrent.TrieMap[String, (Int, Int, Int)]
-
-  /** The most recent [[commitReplace]] decision for `root`:
-    * (files dropped metadata-only, files rewritten, files carried).
-    */
-  def lastReplaceStats(root: String): Option[(Int, Int, Int)] =
-    lastReplace.get(root)
 
   /** Can [[deleteWhere]] run this filter set? True iff every conjunct
     * translates to an evaluable predicate — the `canDeleteWhere`

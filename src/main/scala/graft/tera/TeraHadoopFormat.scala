@@ -15,8 +15,9 @@ import org.apache.hadoop.mapreduce.lib.output.FileOutputFormat
   * (reference `apps/terasort/TeraSort.scala:60-63`), so a user ports a
   * job verbatim by switching the import to `graft.tera`. The engine's
   * own paths ([[TeraIO]], the `graft-fixed` DataSourceV2 source) remain
-  * the preferred Spark-native surface; these classes exist purely for
-  * source compatibility.
+  * the preferred Spark-native surface: [[TeraIO.write]] writes through
+  * [[TeraOutputFormat]], and [[TeraInputFormat]] exists for source
+  * compatibility.
   *
   * Independent implementation, not the reference's (which buffers chunk
   * reads and drives termination off EOFException — reference
@@ -80,8 +81,8 @@ class TeraInputFormat extends FileInputFormat[Array[Byte], Array[Byte]] {
     }
 }
 
-/** key(10) ‖ value(90) back to raw 100-byte records — the write half of
-  * the verbatim-port surface.
+/** key(10) ‖ value(90) back to raw 100-byte records: the write half of
+  * the verbatim-port surface, and the format [[TeraIO.write]] uses.
   */
 class TeraOutputFormat extends FileOutputFormat[Array[Byte], Array[Byte]] {
   override def getRecordWriter(ctx: TaskAttemptContext)

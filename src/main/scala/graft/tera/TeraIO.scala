@@ -1,12 +1,8 @@
 package graft.tera
 
-import java.io.DataOutputStream
-
 import org.apache.hadoop.fs.Path
-import org.apache.hadoop.io.{BytesWritable, LongWritable, NullWritable}
-import org.apache.hadoop.mapreduce.{RecordWriter, TaskAttemptContext}
+import org.apache.hadoop.io.{BytesWritable, LongWritable}
 import org.apache.hadoop.mapreduce.lib.input.FixedLengthInputFormat
-import org.apache.hadoop.mapreduce.lib.output.FileOutputFormat
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 
@@ -15,37 +11,19 @@ import org.apache.spark.sql.SparkSession
   * `apps/terasort/TeraInputFormat.scala:47-113` / `TeraOutputFormat.scala`).
   *
   * Reading uses Hadoop's stock `FixedLengthInputFormat` (record-aligned
-  * splits for free), so unlike the reference we carry no custom input
-  * format at all; writing is a minimal `FileOutputFormat` that concatenates
-  * the pair back to 100 bytes. Both scale with partition count — one
-  * split/file per task, no driver involvement.
+  * splits for free); writing uses [[TeraOutputFormat]], which
+  * concatenates the pair back to 100 bytes. Both scale with partition
+  * count — one split/file per task, no driver involvement.
   */
 object TeraIO {
 
   /** Writes (key, value) pairs as back-to-back fixed-length records. */
-  final class RawPairOutputFormat
-      extends FileOutputFormat[Array[Byte], Array[Byte]] {
-    override def getRecordWriter(ctx: TaskAttemptContext)
-        : RecordWriter[Array[Byte], Array[Byte]] = {
-      val file = getDefaultWorkFile(ctx, "")
-      val out = file.getFileSystem(ctx.getConfiguration).create(file, false)
-      new RecordWriter[Array[Byte], Array[Byte]] {
-        private val stream = new DataOutputStream(out)
-        override def write(key: Array[Byte], value: Array[Byte]): Unit = {
-          stream.write(key)
-          stream.write(value)
-        }
-        override def close(ctx: TaskAttemptContext): Unit = stream.close()
-      }
-    }
-  }
-
   def write(data: RDD[(Array[Byte], Array[Byte])], path: String): Unit =
     data.saveAsNewAPIHadoopFile(
       path,
       classOf[Array[Byte]],
       classOf[Array[Byte]],
-      classOf[RawPairOutputFormat])
+      classOf[TeraOutputFormat])
 
   /** FixedLengthInputFormat with the file listing sorted by path, so the
     * RDD's partition order follows part-file order — without this a

@@ -8,9 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Guards the `graft.*` session keys against creep: every key the
   * library reads is listed in README's configuration table (and every
-  * listed key is still read), and no library file passes an argument
-  * by setting or unsetting one on the shared session — only the
-  * `*Probe` mains may flip them.
+  * listed key is still read), and no file under `src/main/scala`
+  * passes an argument by setting or unsetting one on the session.
   */
 class ConfKeysSpec extends AnyFunSuite {
 
@@ -50,8 +49,7 @@ class ConfKeysSpec extends AnyFunSuite {
   test("no library file sets or unsets a graft.* key on the session") {
     val setter = "conf\\s*\\.\\s*(?:set|unset)\\(\\s*\"graft\\.".r
     val offenders = sources.collect {
-      case (p, src) if !p.getFileName.toString.endsWith("Probe.scala") &&
-          setter.findFirstIn(src).isDefined => p.toString
+      case (p, src) if setter.findFirstIn(src).isDefined => p.toString
     }
     assert(offenders.isEmpty,
       "pass the choice as an argument instead of flipping session conf")

@@ -89,7 +89,7 @@ class PlanShapeLockSpec extends AnyFunSuite {
     // round-8 session-4 additions. The iterative graph queries lock at
     // ONE shuffle because localCheckpoint truncates each round's
     // lineage out of the final static plan (the per-round cost is
-    // probed by OpScaleProbe instead); mr_grep is RDD-built (no SQL
+    // measured by `graft.Profile ops` instead); mr_grep is RDD-built (no SQL
     // joins); knn's single broadcast NLJ is the test-fold broadcast.
     "graph_kcore" -> PlanShape(0, 0, 0, 0, 1),
     "graph_cc_star" -> PlanShape(0, 0, 0, 0, 1),

@@ -327,7 +327,7 @@ class SnapshotCdfFullSpec extends SparkSpec {
     // optimizer pushes each anti-join through the union into every
     // appended branch — but nesting depth is what Catalyst analysis
     // and the JVM stack pay for, and it is what the barrier bounds.)
-    val barrier = spark.conf.get("graft.cdf.fold.barrier", "16").toInt
+    val barrier = SnapshotTable.FoldBarrier
     import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
     def joinDepth(p: LogicalPlan): Int = {
       val self = p match { case _: Join => 1; case _ => 0 }
