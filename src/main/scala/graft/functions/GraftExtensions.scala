@@ -33,6 +33,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new graft.plans.SnapViewParser(session, delegate))
     ext.injectResolutionRule(session =>
       graft.plans.ResolveSnapViews(session))
+    // SQL reads of merge-on-read snapshots plan the library's
+    // delete-applying read (graft.sources.ResolveSnapshotDeletes)
+    ext.injectResolutionRule(session =>
+      graft.sources.ResolveSnapshotDeletes(session))
     ext.injectFunction((
       FunctionIdentifier("elf_hash"),
       new ExpressionInfo(classOf[ElfHashExpr].getName, "elf_hash"),

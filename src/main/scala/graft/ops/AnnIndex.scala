@@ -148,19 +148,12 @@ object AnnIndex {
     * snapshot maintained through (no-op when already current).
     */
   def maintainSq8Index(s: SparkSession, corpusRoot: String,
-      indexRoot: String): Long =
-    maintainSq8Index(s, corpusRoot, indexRoot, cowDeletes = false)
-
-  /** `cowDeletes` rewrites touched files instead of publishing equality
-    * deletes: the SQL procedure's form (see [[applyFeed]]).
-    */
-  private[graft] def maintainSq8Index(s: SparkSession, corpusRoot: String,
-      indexRoot: String, cowDeletes: Boolean): Long = {
+      indexRoot: String): Long = {
     val from = maintainedThrough(s, indexRoot)
     val to = SnapshotTable.currentSnapshot(s, corpusRoot)
     if (to <= from) return from
     applyFeed(s, indexRoot,
-      SnapshotTable.changeFeed(s, corpusRoot, from, to), to, cowDeletes)
+      SnapshotTable.changeFeed(s, corpusRoot, from, to), to)
   }
 
   /** Fold one change-feed FRAME into the index — the shared core of
@@ -171,12 +164,7 @@ object AnnIndex {
     * exactly-once contract a restarted stream needs.
     */
   def applyFeed(s: SparkSession, indexRoot: String, feedFrame: DataFrame,
-      throughSnapshot: Long): Long =
-    applyFeed(s, indexRoot, feedFrame, throughSnapshot, cowDeletes = false)
-
-  private[graft] def applyFeed(s: SparkSession, indexRoot: String,
-      feedFrame: DataFrame, throughSnapshot: Long,
-      cowDeletes: Boolean): Long = {
+      throughSnapshot: Long): Long = {
     val from = maintainedThrough(s, indexRoot)
     if (throughSnapshot <= from) return from
     val st = statsOf(s, indexRoot)
@@ -231,24 +219,14 @@ object AnnIndex {
     // deletes outrank the crashed attempt's appends (strictly-older
     // sequence scoping) before re-appending them. The eq form won 7 of
     // 8 alternating full-gate pairs against the COW rewrite.
-    // `cowDeletes` keeps the COW delete + merge for the SQL procedure,
-    // whose table must carry no delete entries; its confluence is
-    // pinned by SnapshotProcedureSpec.
-    if (anyRemovedOnly) {
-      if (cowDeletes)
-        SnapshotTable.deleteByKeys(removedOnly, indexRoot, "vec_id")
-      else SnapshotTable.deleteByKeysEq(removedOnly, indexRoot)
-    }
+    if (anyRemovedOnly)
+      SnapshotTable.deleteByKeysEq(removedOnly, indexRoot)
     val floor = Map(s"stream.$FloorTag.batch" -> throughSnapshot.toString,
       StatsProp -> renderStats(st))
-    if (anyAdds) {
-      if (cowDeletes)
-        SnapshotTable.merge(quantize(addRows, st), indexRoot, "vec_id",
-          extraProps = floor)
-      else
-        SnapshotTable.upsertEq(quantize(addRows, st), indexRoot,
-          Seq("vec_id"), extraProps = floor)
-    } else // deletes only: advance the floor with an empty append
+    if (anyAdds)
+      SnapshotTable.upsertEq(quantize(addRows, st), indexRoot,
+        Seq("vec_id"), extraProps = floor)
+    else // deletes only: advance the floor with an empty append
       SnapshotTable.commit(
         SnapshotTable.read(s, indexRoot).limit(0), indexRoot,
         props = floor)

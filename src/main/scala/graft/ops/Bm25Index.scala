@@ -137,31 +137,19 @@ object Bm25Index {
     * snapshot maintained through (no-op when already current).
     */
   def maintainBm25Index(s: SparkSession, corpusRoot: String,
-      indexRoot: String): Long =
-    maintainBm25Index(s, corpusRoot, indexRoot, cowDeletes = false)
-
-  /** `cowDeletes` rewrites touched files instead of publishing equality
-    * deletes: the SQL procedure's form (see [[applyFeed]]).
-    */
-  private[graft] def maintainBm25Index(s: SparkSession, corpusRoot: String,
-      indexRoot: String, cowDeletes: Boolean): Long = {
+      indexRoot: String): Long = {
     val from = maintainedThrough(s, indexRoot)
     val to = SnapshotTable.currentSnapshot(s, corpusRoot)
     if (to <= from) return from
     applyFeed(s, indexRoot,
-      SnapshotTable.changeFeed(s, corpusRoot, from, to), to, cowDeletes)
+      SnapshotTable.changeFeed(s, corpusRoot, from, to), to)
   }
 
   /** Fold one change-feed frame — shared by batch catch-up and a
     * streaming CDF tail's `foreachBatch`, like [[AnnIndex.applyFeed]].
     */
   def applyFeed(s: SparkSession, indexRoot: String, feedFrame: DataFrame,
-      throughSnapshot: Long): Long =
-    applyFeed(s, indexRoot, feedFrame, throughSnapshot, cowDeletes = false)
-
-  private[graft] def applyFeed(s: SparkSession, indexRoot: String,
-      feedFrame: DataFrame, throughSnapshot: Long,
-      cowDeletes: Boolean): Long = {
+      throughSnapshot: Long): Long = {
     val from = maintainedThrough(s, indexRoot)
     if (throughSnapshot <= from) return from
     val feed = feedFrame.localCheckpoint(eager = true) // multi-consumer
@@ -198,24 +186,21 @@ object Bm25Index {
     // delta-sized and is settled on the [[settleOnDebt]] cadence below.
     // Replay stays idempotent: a replayed pass's eq-delete outranks
     // (kills) the crashed attempt's appended rows — strictly-older-
-    // sequence scoping — before re-appending them. `cowDeletes` keeps
-    // the rewrite for the SQL procedure, whose tables must carry no
-    // delete entries; its confluence is pinned by SnapshotProcedureSpec.
-    def dropKeys(root: String): Unit =
-      if (cowDeletes) SnapshotTable.deleteByKeys(touchedKeys, root, "doc_id")
-      else SnapshotTable.deleteByKeysEq(touchedKeys, root)
-    if (anyTouched) dropKeys(tfRoot(indexRoot))
+    // sequence scoping — before re-appending them.
+    if (anyTouched)
+      SnapshotTable.deleteByKeysEq(touchedKeys, tfRoot(indexRoot))
     if (anyChanged) {
       val toks = tokensOf(changed).cache()
       try {
         SnapshotTable.commit(tfFromToks(toks), tfRoot(indexRoot),
           statsCol = Some("doc_id"))
-        dropKeys(dlRoot(indexRoot))
+        SnapshotTable.deleteByKeysEq(touchedKeys, dlRoot(indexRoot))
         SnapshotTable.commit(dlFromToks(changed, toks), dlRoot(indexRoot),
           statsCol = Some("doc_id"), props = floor)
       } finally toks.unpersist(blocking = false)
     } else {
-      if (anyTouched) dropKeys(dlRoot(indexRoot))
+      if (anyTouched)
+        SnapshotTable.deleteByKeysEq(touchedKeys, dlRoot(indexRoot))
       SnapshotTable.commit( // deletes only: advance the floor empty
         SnapshotTable.read(s, dlRoot(indexRoot)).limit(0),
         dlRoot(indexRoot), props = floor)

@@ -53,6 +53,26 @@ object FormatQueries {
   private def scratch(tag: String): String =
     new java.io.File(scratchRoot, tag).getAbsolutePath
 
+  /** 1 when the DSv2 connector's own scan refuses `root`'s head: the
+    * stock parquet scan cannot subtract merge-on-read deletes. SQL
+    * reads in a GraftExtensions session never reach it for such a head
+    * (they plan the delete-applying read,
+    * [[graft.sources.ResolveSnapshotDeletes]]); the refusal guards
+    * sessions built without the extension.
+    */
+  private def dsv2ScanRefuses(root: String): Long = {
+    val opts = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+      java.util.Map.of("path", root))
+    val provider = new graft.sources.SnapshotSource
+    val table = provider.getTable(provider.inferSchema(opts),
+      Array.empty[org.apache.spark.sql.connector.expressions.Transform], opts)
+    try {
+      table.asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
+        .newScanBuilder(opts)
+      0L
+    } catch { case _: IllegalArgumentException => 1L }
+  }
+
   /** lineitem → CSV → read back (explicit schema, header) → q1-style
     * aggregate. CSV is the hostile format: doubles must survive
     * shortest-round-trip text, timestamps the default ISO rendering,
@@ -962,8 +982,8 @@ object FormatQueries {
     * [[graft.sources.SnapshotTable.applyEqDeletes]]) and the manifest
     * row count honestly goes undefined; `rewriteDeletes` then settles
     * it — stats-refuted files carry verbatim — and the gate reads the
-    * FOLDED table through the DSv2 connector (which refuses the
-    * unfolded one) against the oracle's latest-wins derivation. At
+    * FOLDED table through the DSv2 connector (whose raw scan refuses
+    * the unfolded one) against the oracle's latest-wins derivation. At
     * 100 TB this is the CDC ingestion shape: write cost O(delta) per
     * batch whatever the table size, amortized fold on the touched
     * files only.
@@ -993,9 +1013,7 @@ object FormatQueries {
     val carried = SnapshotTable.fileList(s, root, v1)
       .forall(SnapshotTable.fileList(s, root, v4).contains)
     val countUndef = SnapshotTable.rowCount(s, root, v4).isEmpty
-    val refused =
-      try { s.read.format("graft-snap").load(root).count(); 0L }
-      catch { case _: IllegalArgumentException => 1L }
+    val refused = dsv2ScanRefuses(root)
     val v5 = SnapshotTable.rewriteDeletes(s, root)
     val foldedClean = !SnapshotTable.fileList(s, root, v5)
       .exists(_.startsWith("deletes/"))
@@ -1424,12 +1442,12 @@ object FormatQueries {
   /** Settling merge-on-read's debt
     * ([[graft.sources.SnapshotTable.rewriteDeletes]]): after two
     * OVERLAPPING vector deletes (the second marks through the first's
-    * vector — pairs are never duplicated), the DSv2/SQL scan REFUSES
-    * the vectored snapshot (it cannot subtract vectors; resurrecting
-    * deleted rows is the failure mode refused away), and the fold
-    * rewrites exactly the vector-referenced files, drops the vectors,
-    * and re-opens the stock vectorized scan — which this gate then
-    * reads for the hash check. The flags pin the pre-fold refusal and
+    * vector — pairs are never duplicated), the DSv2 connector's raw
+    * scan REFUSES the vectored snapshot (it cannot subtract vectors;
+    * resurrecting deleted rows is the failure mode refused away), and
+    * the fold rewrites exactly the vector-referenced files, drops the
+    * vectors, and re-opens the stock vectorized scan — which this gate
+    * then reads for the hash check. The flags pin the pre-fold refusal and
     * the vector-free post-fold manifest. At 100 TB: deletes are cheap
     * and immediate, the fold is amortized compaction on only the
     * touched files.
@@ -1444,9 +1462,7 @@ object FormatQueries {
     SnapshotTable.commit(li.repartitionByRange(16, col("l_orderkey")),
       root, statsCol = Some("l_orderkey"))
     SnapshotTable.deleteWhereMor(s, root, Seq(LessThan("l_quantity", 5.0)))
-    val refused =
-      try { s.read.format("graft-snap").load(root).count(); 0L }
-      catch { case _: IllegalArgumentException => 1L }
+    val refused = dsv2ScanRefuses(root)
     SnapshotTable.deleteWhereMor(s, root, Seq(LessThan("l_orderkey", 1000L)))
     val v = SnapshotTable.rewriteDeletes(s, root)
     val folded =

@@ -176,20 +176,15 @@ object CommitGroup {
     // soundness test as single-table WAP; the member's publish then
     // fast-forward-rebases). A doomed pass refuses here, before any
     // member becomes visible.
-    val rebaseOk =
-      s.conf.get("graft.snapshot.wap.rebase", "true").toBoolean
     val bases: Map[String, Long] = ordered.map { root =>
       val base = SnapshotTable.wapBase(s, root, wapIdOf(group))
       val cur = SnapshotTable.currentSnapshot(s, root)
-      if (cur != base) {
-        val why =
-          if (!rebaseOk) Some("auto-rebase disabled")
-          else SnapshotTable.rebaseCheck(s, root, base, cur)
-        why.foreach(w => throw new IllegalArgumentException(
-          s"commit group '$group': member $root advanced to v$cur past " +
-            s"its stage's base v$base and cannot rebase ($w) — drop " +
-            "the group and re-stage against the new heads"))
-      }
+      if (cur != base)
+        SnapshotTable.rebaseCheck(s, root, base, cur).foreach(w =>
+          throw new IllegalArgumentException(
+            s"commit group '$group': member $root advanced to v$cur " +
+              s"past its stage's base v$base and cannot rebase ($w) — " +
+              "drop the group and re-stage against the new heads"))
       root -> base
     }.toMap
     // the FIRST marker create IS the commit decision: markers go to

@@ -815,12 +815,6 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
   // ('db.t') against THIS catalog's warehouse, delegates to the
   // library call, and returns a one-row result scan summarizing what
   // happened — all driver-side metadata work.
-  //
-  // maintain_sq8_index / maintain_bm25_index pass `cowDeletes = true`:
-  // catalog scans REFUSE merge-on-read debt by design, so the SQL
-  // lifecycle's index tables must carry no equality-delete entries —
-  // and a COW delete is cheaper than an equality delete plus an
-  // immediate fold.
 
   import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
 
@@ -969,7 +963,7 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
         Seq(("maintained_through", LongType)),
         { case Seq(t: String, ix: String) =>
           Seq(Long.box(graft.ops.AnnIndex.maintainSq8Index(
-            spark, rootOf(t), rootOf(ix), cowDeletes = true))) }),
+            spark, rootOf(t), rootOf(ix)))) }),
       Proc("build_bm25_index",
         "build the maintained BM25 index (tf/dl snapshot tables) of " +
           "`table`'s doc_id/text columns under `index_prefix` — the " +
@@ -992,7 +986,7 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
         Seq(("maintained_through", LongType)),
         { case Seq(t: String, ix: String) =>
           Seq(Long.box(graft.ops.Bm25Index.maintainBm25Index(
-            spark, rootOf(t), newRootOf(ix), cowDeletes = true))) }),
+            spark, rootOf(t), newRootOf(ix)))) }),
       Proc("create_tag",
         "pin snapshot `version` (default: current) under an immutable " +
           "name; expire keeps tagged snapshots alive until drop_ref",
@@ -1044,8 +1038,8 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
         { case Seq(t: String, v: java.lang.Long) =>
           Seq(Long.box(SnapshotTable.rollback(spark, rootOf(t), v))) }),
       Proc("rewrite_deletes",
-        "fold merge-on-read delete vectors into their data files, " +
-          "re-opening the vector-refusing scan paths",
+        "fold merge-on-read delete vectors and equality deletes into " +
+          "their data files, re-opening SQL DML and the pruned scan",
         Seq(("table", StringType, None)),
         Seq(("current_version", LongType)),
         { case Seq(t: String) =>

@@ -35,7 +35,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * the snapshot layer contributes exactly what it should — the file
   * list — and nothing else. At 100 TB this is one manifest read of
   * metadata on the driver; no directory listing of `data/` ever
-  * happens. An unknown or expired snapshot id fails at load() time.
+  * happens. An unknown or expired snapshot id fails at load() time. A
+  * snapshot carrying merge-on-read deletes resolves instead to the
+  * library's delete-applying read of the same pinned entries
+  * ([[ResolveSnapshotDeletes]], installed by `GraftExtensions`).
   *
   * WRITE: the standard DSv2 V1Write bridge (the same one Spark's JDBC
   * connector uses) maps `mode("append")` to [[SnapshotTable.commit]]
@@ -211,6 +214,20 @@ private[sources] class SnapshotSourceTable(root: String, id: Long,
     caps
   }
 
+  /** Does the pinned snapshot carry delete vectors or equality
+    * deletes? Such a table is read through [[deleteApplyingRead]]
+    * ([[ResolveSnapshotDeletes]]) instead of the scan below.
+    */
+  private[sources] lazy val hasDeletes: Boolean = entries.exists(_.isDelete)
+
+  /** The library read ([[SnapshotTable.readEntries]]) of exactly the
+    * pinned entries, schema and column mapping — a commit landing after
+    * resolution cannot change what it sees.
+    */
+  private[sources] def deleteApplyingRead(s: SparkSession): DataFrame =
+    SnapshotTable.readEntries(s, root, id, entries, Some(tableSchema),
+      SnapshotTable.physMapOf(s, root, id))
+
   override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder = {
     // a zero-file snapshot with a KNOWN schema (a freshly created
     // catalog table, or an empty commit) reads as an empty relation;
@@ -218,12 +235,12 @@ private[sources] class SnapshotSourceTable(root: String, id: Long,
     require(entries.nonEmpty || tableSchema.nonEmpty,
       s"graft-snap: table at $root is empty (no committed snapshot); " +
         "write one first")
-    // merge-on-read delete vectors subtract rows at read time; this
-    // scan hands files to Spark's stock parquet reader, which cannot —
-    // refuse loudly rather than resurrect deleted rows. The library
-    // read ([[SnapshotTable.read]]) applies vectors; rewriteDeletes
-    // folds them and re-opens this path.
-    require(!entries.exists(_.isDelete),
+    // merge-on-read deletes subtract rows at read time; this scan hands
+    // files to Spark's stock parquet reader, which cannot. Sessions
+    // with GraftExtensions never get here for such a snapshot
+    // ([[ResolveSnapshotDeletes]] plans the delete-applying read
+    // instead); without them, refuse rather than resurrect deleted rows.
+    require(!hasDeletes,
       s"graft-snap: snapshot v$id of $root carries merge-on-read " +
         "delete vectors or equality deletes; read via " +
         "SnapshotTable.read / readAt, or fold them with " +
@@ -444,8 +461,7 @@ private[sources] class SnapshotScanBuilder(root: String, id: Long,
     // counts give the scan's EXACT cardinality — handed to the planner
     // in place of parquet's size-derived estimate.
     val manifestRows: Option[Long] =
-      if (scanEntries.exists(_.isDelete) || scanEntries.isEmpty ||
-          !scanEntries.forall(_.rows.isDefined)) None
+      if (scanEntries.isEmpty || !scanEntries.forall(_.rows.isDefined)) None
       else if (!filtered) Some(scanEntries.map(_.rows.get).sum)
       else if (!nonNotNullPushed && notNullCols.distinct.size == 1 &&
           scanEntries.forall(e =>
@@ -515,7 +531,7 @@ private[sources] class SnapshotScanBuilder(root: String, id: Long,
       case DateType => Some(v.toInt)
       case _ => None
     }
-    val mapped = scanEntries.filterNot(_.isDelete).map { e =>
+    val mapped = scanEntries.map { e =>
       val key = partCols.zip(types).map { case (c, dt) =>
         e.statsFor(c) match {
           case Some(st) if st.mn == st.mx && st.nulls.contains(0L) =>
@@ -547,7 +563,7 @@ private[sources] class SnapshotScanBuilder(root: String, id: Long,
     * arithmetic the manifest already paid for at commit. Declines
     * (falls back to the parquet delegate's own footer-level pushdown)
     * whenever exactness is not PROVABLE: pushed filters, group-bys,
-    * delete vectors, a file missing row counts or the column's stats,
+    * a file missing row counts or the column's stats,
     * non-numeric min/max domains (string footer stats may be
     * truncated by writers — never trusted for extrema), or a type
     * outside the integer/double stats domains.
@@ -559,10 +575,8 @@ private[sources] class SnapshotScanBuilder(root: String, id: Long,
     import org.apache.spark.sql.connector.expressions.aggregate.{Count, CountStar, Max, Min}
     import org.apache.spark.sql.types._
     if (groupMode || filtered || agg.groupByExpressions.nonEmpty) return None
-    val data = entries.filterNot(_.isDelete)
-    if (entries.exists(_.isDelete)) return None // MOR rows are subtracted
-    if (data.isEmpty || data.exists(_.rows.isEmpty)) return None
-    val total = data.map(_.rows.get).sum
+    if (entries.isEmpty || entries.exists(_.rows.isEmpty)) return None
+    val total = entries.map(_.rows.get).sum
     def colOf(e: org.apache.spark.sql.connector.expressions.Expression)
         : Option[String] = e match {
       case nr: NamedReference if nr.fieldNames().length == 1 =>
@@ -580,7 +594,7 @@ private[sources] class SnapshotScanBuilder(root: String, id: Long,
         case DoubleType | FloatType => "d"
         case _ => return None
       }
-      val sts = data.map(e =>
+      val sts = entries.map(e =>
         e.statsFor(physMap.getOrElse(c, c)).map(st => (st, e.rows.get)))
       if (sts.exists(_.isEmpty)) return None
       val good = sts.flatten
@@ -612,7 +626,7 @@ private[sources] class SnapshotScanBuilder(root: String, id: Long,
         case _: CountStar => Some((LongType: DataType, total: Any))
         case c: Count if !c.isDistinct =>
           colOf(c.column).flatMap { col =>
-            val sts = data.map(_.statsFor(physMap.getOrElse(col, col)))
+            val sts = entries.map(_.statsFor(physMap.getOrElse(col, col)))
             if (sts.exists(s => s.isEmpty || s.get.nulls.isEmpty)) None
             else Some((LongType,
               total - sts.flatten.map(_.nulls.get).sum))
@@ -710,8 +724,7 @@ private[sources] class SnapshotScanWrapper(root: String,
   override def filterAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
     if (rebuild == null || spj.isDefined) Array.empty
-    else runtimeEntries.filterNot(_.isDelete)
-      .flatMap(_.stats.map(_.col)).distinct
+    else runtimeEntries.flatMap(_.stats.map(_.col)).distinct
       .map(c => if (c.startsWith("#bloom:")) c.stripPrefix("#bloom:") else c)
       // other pseudo-stats groups (#ndv: registers) carry no runtime
       // refutation evidence — only bands and blooms prune
@@ -725,11 +738,10 @@ private[sources] class SnapshotScanWrapper(root: String,
     if (rebuild == null || spj.isDefined) return
     val v1s = predicates.flatMap(p => SnapshotTable.v2PredicateToV1(p))
     if (v1s.isEmpty) return
-    val data = runtimeEntries.filterNot(_.isDelete)
-    val kept = data.filterNot(e =>
+    val kept = runtimeEntries.filterNot(e =>
       v1s.exists(f => SnapshotTable.v1ProvesNone(e, f, physMap)))
-    if (kept.size < data.size) {
-      SnapshotSource.pruneLog.put(root, (kept.size, data.size))
+    if (kept.size < runtimeEntries.size) {
+      SnapshotSource.pruneLog.put(root, (kept.size, runtimeEntries.size))
       delegate = rebuild(kept.map(e => s"$root/${e.path}"))
     }
   }
@@ -841,7 +853,6 @@ private[sources] class SnapshotScanWrapper(root: String,
     * rewrite refreshed after the index build, withdraws that column's
     * stat rather than under-reporting); nullCount = summed footer null
     * counts. Physical names map back to the snapshot's logical names.
-    * Empty on eq-burdened scans (live counts undefined until fold).
     */
   private def manifestColumnStats(): java.util.Map[
       org.apache.spark.sql.connector.expressions.NamedReference,
@@ -850,16 +861,15 @@ private[sources] class SnapshotScanWrapper(root: String,
     val out = new java.util.HashMap[
       org.apache.spark.sql.connector.expressions.NamedReference,
       org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
-    val data = runtimeEntries.filterNot(_.isDelete)
-    if (data.isEmpty || runtimeEntries.exists(_.isEqDelete)) return out
-    val physCols = data.head.stats.map(_.col)
+    if (runtimeEntries.isEmpty) return out
+    val physCols = runtimeEntries.head.stats.map(_.col)
       .filter(_.startsWith("#ndv:")).map(_.stripPrefix("#ndv:"))
     physCols.foreach { pc =>
-      val regs = data.map(_.ndvRegsFor(pc))
+      val regs = runtimeEntries.map(_.ndvRegsFor(pc))
       if (regs.forall(_.isDefined)) {
         val ndv = graft.ops.Sketches.estimateFromRegs(
           regs.flatten.reduce(graft.ops.Sketches.mergeRegs))
-        val nulls = data.map(_.statsFor(pc).flatMap(_.nulls))
+        val nulls = runtimeEntries.map(_.statsFor(pc).flatMap(_.nulls))
         val nullsTotal =
           if (nulls.forall(_.isDefined)) Some(nulls.flatten.sum) else None
         out.put(V2Ex.column(logicalOf.getOrElse(pc, pc)),
@@ -958,6 +968,47 @@ private[sources] class SnapshotMicroBatchStream(root: String,
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
+}
+
+/** SQL reads of merge-on-read snapshots: a `DataSourceV2Relation` over
+  * a snapshot whose pinned entries include delete vectors or equality
+  * deletes resolves to the LIBRARY read of those entries
+  * ([[SnapshotSourceTable.deleteApplyingRead]] — data scan, then the
+  * broadcast anti-joins that subtract the deletes), projected onto the
+  * relation's own output attributes. `format("graft-snap")`, catalog
+  * `SELECT` and `VERSION AS OF` therefore read the same rows as
+  * [[SnapshotTable.readAt]] at the pinned id. Snapshots without deletes
+  * keep the DSv2 scan (manifest pruning, storage-partitioned joins,
+  * manifest-answered aggregates). The TARGET of `DELETE` / `UPDATE` /
+  * `MERGE` is left alone: a copy-on-write rewrite cannot carry the
+  * deletes, so those keep refusing ([[SnapshotTable.deleteWhere]],
+  * [[SnapshotRowLevelOperation]]). Injected by
+  * [[graft.functions.GraftExtensions]].
+  */
+private[graft] case class ResolveSnapshotDeletes(session: SparkSession)
+    extends org.apache.spark.sql.catalyst.rules.Rule[
+      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
+  import org.apache.spark.sql.catalyst.expressions.Alias
+  import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, LogicalPlan, MergeIntoTable, Project, UpdateTable}
+  import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+
+  override def apply(plan: LogicalPlan): LogicalPlan = plan match {
+    case _: DeleteFromTable | _: UpdateTable => plan
+    case m: MergeIntoTable => m.copy(sourceTable = apply(m.sourceTable))
+    // subqueries too: a MERGE's rewrite copies its source into a
+    // group-filter subquery
+    case _ => plan.resolveOperatorsUpWithSubqueriesAndPruning(_ => true) {
+      case r: DataSourceV2Relation if (r.table match {
+            case t: SnapshotSourceTable => t.hasDeletes
+            case _ => false
+          }) =>
+        val lib = r.table.asInstanceOf[SnapshotSourceTable]
+          .deleteApplyingRead(session).queryExecution.analyzed
+        Project(r.output.zip(lib.output).map { case (a, b) =>
+          Alias(b, a.name)(exprId = a.exprId, qualifier = a.qualifier)
+        }, lib)
+    }
+  }
 }
 
 object SnapshotSource {

@@ -23,66 +23,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the batch write itself plus one manifest write. Single writer per
   * table, per the layer's contract — fan-in goes through the query, not
   * through concurrent sinks.
+  *
+  * Debt: a per-minute sink is the system's most prolific producer of
+  * small files (one per batch per partition, forever) and, for
+  * [[upsertEqWriter]], of equality deletes (one per batch). Every
+  * writer runs [[SnapshotTable.settleOnDebt]] after each committed
+  * batch — the cadence maintained indexes run — which folds the
+  * deletes and bin-packs on manifest arithmetic alone. Its commits
+  * carry the `stream.<tag>.batch` floor and cross the change feed as
+  * empty steps, so redelivery skipping and CDF consumers are
+  * undisturbed.
   */
 object SnapshotStreamSink {
 
   private def propKey(tag: String) = s"stream.$tag.batch"
-
-  /** Small-file-debt cadence for sink tables — the same hook the
-    * maintained indexes run after every applyFeed pass
-    * ([[graft.ops.Bm25Index]] / [[graft.ops.AnnIndex]]), because the
-    * per-minute micro-batch sink is the system's most prolific
-    * small-file producer: one file per batch per partition, forever,
-    * unless something folds them. Called after every successful batch
-    * commit; the trigger check is manifest `rc=` arithmetic alone
-    * (zero file reads), so the steady-state cost is nil and when it
-    * fires the work is O(small-file rows) with large files carried
-    * verbatim. The compaction commit carries the `stream.<tag>.batch`
-    * floor forward (every commit shape does), so exactly-once
-    * redelivery skipping is undisturbed, and the change feed crosses
-    * it as an empty step, so CDF consumers see no phantom rows.
-    * Disabled, like the index cadence, via
-    * `graft.index.compact.max.small <= 0`; the eq-delete sink's
-    * snapshots carry delete entries, for which the check returns None
-    * by contract (those tables owe a `rewriteDeletes` first — the
-    * caller's maintenance cadence, as documented on
-    * [[upsertEqWriter]]).
-    */
-  private def settleDebt(s: SparkSession, root: String): Unit = {
-    SnapshotTable.compactOnDebt(s, root)
-    ()
-  }
-
-  /** EQUALITY-DELETE debt cadence for the zero-read CDC sink
-    * ([[upsertEqWriter]]): each batch lands one `deletes/eq-*` file,
-    * and every reader pays the whole accreted set on every scan until
-    * a [[SnapshotTable.rewriteDeletes]] folds them. The default
-    * contract keeps that fold as the operator's maintenance window
-    * (it reads back the delete-overlapped files — real IO a per-minute
-    * micro-batch should not absorb blindly); setting
-    * `graft.stream.eq.rewrite.max.deletes` to N > 0 opts the sink
-    * into self-maintenance: once the head carries >= N eq-delete
-    * entries, the batch that crossed the threshold folds them and
-    * then runs the small-file cadence (armed now that the deletes are
-    * gone). The trigger check is manifest arithmetic (zero file
-    * reads); the fold itself is stats-pruned to the files the keys
-    * can touch. The fold and compaction both carry the
-    * `stream.<tag>.batch` floor and cross the change feed as empty
-    * steps, so exactly-once and CDF consumers are undisturbed.
-    */
-  private def settleEqDebt(s: SparkSession, root: String): Unit = {
-    val maxEq =
-      s.conf.get("graft.stream.eq.rewrite.max.deletes", "0").toInt
-    if (maxEq > 0) {
-      val cur = SnapshotTable.currentSnapshot(s, root)
-      if (cur > 0L &&
-          SnapshotTable.entries(s, root, cur).count(_.isEqDelete) >= maxEq) {
-        SnapshotTable.rewriteDeletes(s, root)
-        SnapshotTable.compactOnDebt(s, root)
-        ()
-      }
-    }
-  }
 
   /** Highest batch id any LIVE snapshot committed for `tag`; -1 when
     * none. One manifest-header scan — called once per writer lifetime.
@@ -127,7 +81,7 @@ object SnapshotStreamSink {
         SnapshotTable.commit(df, root, statsCol = statsCol,
           props = Map(propKey(tag) -> batchId.toString))
         last = Some(batchId)
-        settleDebt(s, root)
+        SnapshotTable.settleOnDebt(s, root)
       }
       // else: redelivery of an already-visible batch — exactly-once skip
     }
@@ -179,7 +133,7 @@ object SnapshotStreamSink {
             props = props)
         else SnapshotTable.merge(batch, root, keyCol, extraProps = props)
         last = Some(batchId)
-        settleDebt(s, root)
+        SnapshotTable.settleOnDebt(s, root)
       }
     }
   }
@@ -191,9 +145,9 @@ object SnapshotStreamSink {
     * the same within-batch last-wins collapse. The CDC-at-100 TB sink:
     * per-batch write cost is O(batch) whatever the table size (probed
     * flat ×1/×10/×100 where the merge sink pays the touched-file
-    * read-back); the read-side debt is settled by a periodic
-    * `rewriteDeletes` — the caller's maintenance cadence, exactly like
-    * Flink→Iceberg deployments compact equality deletes.
+    * read-back); the read-side debt folds on the shared
+    * [[SnapshotTable.settleOnDebt]] cadence, so readers — SQL ones
+    * included — pay at most that cadence's delete count.
     */
   def upsertEqWriter(root: String, tag: String, keyCol: String,
       seqCol: Option[String] = None): (DataFrame, Long) => Unit = {
@@ -222,12 +176,7 @@ object SnapshotStreamSink {
         else SnapshotTable.upsertEq(batch, root, Seq(keyCol),
           extraProps = props)
         last = Some(batchId)
-        // settleEqDebt owns the eq sink's whole cadence: it runs
-        // compactOnDebt itself right after a fold (the only moment
-        // compaction CAN fire here — compactIfFragmented returns None
-        // while delete entries are carried, so a per-batch settleDebt
-        // would be a guaranteed-None entries scan every batch)
-        settleEqDebt(s, root)
+        SnapshotTable.settleOnDebt(s, root)
       }
     }
   }

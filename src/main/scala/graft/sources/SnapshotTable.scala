@@ -172,9 +172,9 @@ object SnapshotTable {
       * parquet file of KEY VALUES under `deletes/eq-*` that kills every
       * matching row of data files SEQUENCED BEFORE it (Iceberg-v2
       * equality deletes — the Flink-CDC write shape). Living under
-      * `deletes/` means every existing vector guard (DSv2 refusal,
-      * merge/DML/compaction fences, carry and expiry machinery) covers
-      * it with no new code path to forget.
+      * `deletes/` means every existing vector path (the delete-applying
+      * SQL read, merge/DML/compaction fences, carry and expiry
+      * machinery) covers it with no new code path to forget.
       */
     def isEqDelete: Boolean = isDelete && fileName.startsWith("eq-")
     /** The bare file name — what `_metadata.file_name` reports, and the
@@ -2547,12 +2547,6 @@ object SnapshotTable {
     val fs = fsOf(s, new Path(root))
     val lines = wapLines(s, root, wapId)
     val base = wapBase(s, root, wapId)
-    def refuse(cur: Long, extra: String): Nothing =
-      throw new IllegalStateException(
-        s"wap publish of '$wapId' on $root: staged against v$base but " +
-          s"the table is at v$cur$extra — the audit no longer describes " +
-          "what publish would create; drop the stage and re-stage " +
-          "against the current head")
     val maxRetries = s.conf.get("graft.snapshot.commit.retries", "3").toInt
     var attempt = 0
     while (true) {
@@ -2573,10 +2567,13 @@ object SnapshotTable {
           // forcing a full re-stage. Any overwrite / merge /
           // compaction / shape / constraint interleaving keeps the
           // strict refusal — the audit's subject no longer exists.
-          if (!s.conf.get("graft.snapshot.wap.rebase", "true").toBoolean)
-            refuse(cur, "")
           rebaseCheck(s, root, base, cur).foreach(why =>
-            refuse(cur, s" (auto-rebase refused: $why)"))
+            throw new IllegalStateException(
+              s"wap publish of '$wapId' on $root: staged against " +
+                s"v$base but the table is at v$cur (auto-rebase " +
+                s"refused: $why) — the audit no longer describes what " +
+                "publish would create; drop the stage and re-stage " +
+                "against the current head"))
           val newId0 = cur + 1
           val baseExp = entryLines(s, root, base).toSet
           val delta = expandEntrySection(fs, root, entrySectionOf(lines))
@@ -2653,16 +2650,25 @@ object SnapshotTable {
     * time travel sees each version's own schema — no footer sampling,
     * no mergeSchema scan of every file).
     */
-  def readAt(s: SparkSession, root: String, id: Long): DataFrame = {
-    val es = entries(s, root, id)
+  def readAt(s: SparkSession, root: String, id: Long): DataFrame =
+    readEntries(s, root, id, entries(s, root, id),
+      storedSchema(s, root, id), physMapOf(s, root, id))
+
+  /** [[readAt]] over an already-resolved snapshot: its entries, schema
+    * and column mapping — data files read, then delete vectors and
+    * equality deletes subtracted. The SQL read of a merge-on-read
+    * snapshot plans exactly this over its pinned entries
+    * ([[ResolveSnapshotDeletes]]), so both surfaces give one answer.
+    */
+  private[sources] def readEntries(s: SparkSession, root: String, id: Long,
+      es: Seq[FileEntry], schema: Option[StructType],
+      physMap: Map[String, String]): DataFrame = {
     require(es.nonEmpty, s"snapshot v$id of $root lists no files")
     val (dels, data) = es.partition(_.isDelete)
     val (eqs, dvs) = dels.partition(_.isEqDelete)
-    val base = readData(s, root, data.map(_.path),
-      storedSchema(s, root, id), physMapOf(s, root, id))
+    val base = readData(s, root, data.map(_.path), schema, physMap)
     applyEqDeletes(s, root,
-      applyDeleteVectors(s, root, base, dvs), eqs, data,
-      physMapOf(s, root, id))
+      applyDeleteVectors(s, root, base, dvs), eqs, data, physMap)
   }
 
   /** Read data files under `schema`'s LOGICAL names. With an active
@@ -3715,10 +3721,11 @@ object SnapshotTable {
     * write, vs copy-on-write's full rewrite of every touched file. The
     * debt is read-side (one broadcast probe per row) and is settled by
     * [[rewriteDeletes]] (fold vectors into the affected files) or any
-    * overwrite compaction. Readers that cannot apply vectors — the
-    * DSv2/SQL scan, merge, copy-on-write delete, commitReplace, and
-    * file-level incremental reads — refuse loudly rather than
-    * resurrecting deleted rows.
+    * overwrite compaction. SQL reads apply the vector like [[read]]
+    * does ([[ResolveSnapshotDeletes]]); writers that cannot — merge,
+    * copy-on-write delete, SQL DML, commitReplace — and file-level
+    * incremental reads refuse loudly rather than resurrecting deleted
+    * rows.
     *
     * Returns (new snapshot id, files dropped, files marked via the
     * vector, files carried untouched).
@@ -3891,10 +3898,10 @@ object SnapshotTable {
     * is read, scanned, or rewritten — write cost is O(delta) whatever
     * the table size, vs [[merge]]'s read-back of every touched file.
     * The debt moves to readers (two broadcast probes per scan,
-    * [[applyEqDeletes]]) and is settled by [[rewriteDeletes]]; the
-    * vector-refusing paths (DSv2/SQL scans, merge, COW delete,
-    * commitReplace, compaction, file-level incremental reads) refuse
-    * equality-delete tables the same way, so a stale reader can never
+    * [[applyEqDeletes]], SQL reads included) and is settled by
+    * [[rewriteDeletes]]; the vector-refusing paths (merge, COW delete,
+    * SQL DML, commitReplace, compaction, file-level incremental reads)
+    * refuse equality-delete tables the same way, so no path can
     * resurrect a replaced row. Sequencing: the commit's new files and
     * its delete share the new snapshot id as their data sequence, and
     * a delete applies only to STRICTLY older files — the upsert's own
@@ -3998,11 +4005,11 @@ object SnapshotTable {
     * file a vector references is rewritten WITHOUT its dead rows, every
     * untouched file carries verbatim, and the new snapshot lists no
     * vectors — the compaction that settles merge-on-read's read-side
-    * debt and re-opens the vector-refusing paths (DSv2/SQL scans,
-    * merge, copy-on-write delete). IO = the referenced files once; the
-    * old files and vectors stay for time travel until
-    * [[expireSnapshots]]. No-op (returns the current id) when the
-    * table has no vectors.
+    * debt, re-opens the vector-refusing paths (merge, copy-on-write
+    * delete, SQL DML) and hands SQL reads back to the pruned DSv2
+    * scan. IO = the referenced files once; the old files and vectors
+    * stay for time travel until [[expireSnapshots]]. No-op (returns
+    * the current id) when the table has no vectors.
     */
   def rewriteDeletes(s: SparkSession, root: String): Long = {
     import org.apache.spark.sql.functions.{col, max => smax, min => smin}
@@ -4386,83 +4393,52 @@ object SnapshotTable {
     (id, small.size, fileList(s, root, id).size - large.size)
   }
 
-  /** Small-file-DEBT cadence: compact iff at least `maxSmall` data
-    * files sit below `minRows` — the trigger maintained indexes hook
-    * after every [[graft.ops.Bm25Index.applyFeed]] /
-    * [[graft.ops.AnnIndex.applyFeed]] pass, because each pass appends
-    * churn-sized files and NOTHING else ever rewrites them: after
-    * thousands of passes the search-side scan would pay the fragment
-    * count. The check is manifest `rc=` arithmetic alone (zero file
-    * reads, no listing); when it fires, work is O(small-file rows)
-    * ([[compactSmallFiles]] — large files carry verbatim) and the
-    * change feed crosses it as an empty step, so maintenance floors
-    * and incremental consumers are undisturbed. Skipped (None) while
-    * the snapshot carries delete entries or unknown row counts — those
-    * tables need [[rewriteDeletes]] first. Returns Some((id, packed,
+  /** The DEBT cadence every table that accrues small files or
+    * merge-on-read deletes on a maintenance loop runs after each write:
+    * maintained indexes after every [[graft.ops.Bm25Index.applyFeed]] /
+    * [[graft.ops.AnnIndex.applyFeed]] pass, and the streaming sinks
+    * ([[SnapshotStreamSink]]) after every micro-batch. Each such write
+    * appends churn-sized files (and, for the equality-delete writers,
+    * one delta-sized delete), and nothing else ever rewrites them.
+    *
+    * One manifest read decides; no data IO happens on the no-debt fast
+    * path:
+    *  - FOLD the deletes ([[rewriteDeletes]]) once EITHER the
+    *    delete-entry count reaches `graft.index.eqdelete.max.files`
+    *    (default 16 — read scans pay at most that many extra broadcast
+    *    probes) OR the small-file count reaches the compaction
+    *    threshold below (bin-packing is what the fold re-opens);
+    *  - then BIN-PACK ([[compactSmallFiles]] — large files carry
+    *    verbatim) once at least `graft.index.compact.max.small`
+    *    (default 24; `<= 0` disables) data files hold fewer than
+    *    `graft.index.compact.min.rows` (default 2048) rows, towards
+    *    `graft.index.compact.target.rows` (default 65536) per file.
+    *    Skipped while delete entries are live (packing raw files would
+    *    resurrect deleted rows) or a row count is unknown.
+    * Both commits carry the `stream.*` floors and cross the change feed
+    * as empty steps, so maintenance floors, exactly-once sinks and
+    * incremental consumers are undisturbed. Returns Some((id, packed,
     * written)) when compaction ran.
-    */
-  def compactIfFragmented(s: SparkSession, root: String, minRows: Long,
-      targetRows: Long, maxSmall: Int): Option[(Long, Int, Int)] = {
-    val cur = currentSnapshot(s, root)
-    if (cur == 0L) return None
-    val es = entries(s, root, cur)
-    if (es.exists(_.isDelete) || !es.forall(_.rows.isDefined)) return None
-    val nSmall = es.count(_.rows.get < minRows)
-    if (nSmall >= maxSmall)
-      Some(compactSmallFiles(s, root, minRows, targetRows))
-    else None
-  }
-
-  /** [[compactIfFragmented]] under the session's index-cadence conf —
-    * `graft.index.compact.{max.small,min.rows,target.rows}` (defaults
-    * 24 / 2048 / 65536; max.small <= 0 disables).
-    */
-  def compactOnDebt(s: SparkSession,
-      root: String): Option[(Long, Int, Int)] = {
-    val maxSmall =
-      s.conf.get("graft.index.compact.max.small", "24").toInt
-    if (maxSmall <= 0) None
-    else compactIfFragmented(s, root,
-      s.conf.get("graft.index.compact.min.rows", "2048").toLong,
-      s.conf.get("graft.index.compact.target.rows", "65536").toLong,
-      maxSmall)
-  }
-
-  /** [[compactOnDebt]] for tables that accrue MERGE-ON-READ debt
-    * (equality deletes / delete vectors) on a maintenance cadence:
-    * while delete entries are live, [[compactIfFragmented]] is a
-    * deliberate no-op (bin-packing raw files would resurrect deleted
-    * rows), so debt-writing maintenance loops would otherwise grow
-    * both the delete count (read-side probes) and the small-file count
-    * without bound. Folds the deletes ([[rewriteDeletes]]) once EITHER
-    * the delete-entry count reaches `graft.index.eqdelete.max.files`
-    * (default 16 — each maintenance pass adds one delta-sized delete,
-    * so read scans pay at most that many extra broadcast probes before
-    * a fold) OR the small-file count crosses the compaction cadence's
-    * own threshold (the fold is what re-opens bin-packing), then runs
-    * the normal [[compactOnDebt]] check. One manifest read decides;
-    * no data IO happens on the no-debt fast path.
     */
   def settleOnDebt(s: SparkSession, root: String): Option[(Long, Int, Int)] = {
     val cur = currentSnapshot(s, root)
-    if (cur > 0L) {
-      val es = entries(s, root, cur)
-      val dels = es.count(_.isDelete)
-      if (dels > 0) {
-        val maxEq =
-          s.conf.get("graft.index.eqdelete.max.files", "16").toInt
-        val maxSmall =
-          s.conf.get("graft.index.compact.max.small", "24").toInt
-        val minRows =
-          s.conf.get("graft.index.compact.min.rows", "2048").toLong
-        val nSmall =
-          es.count(e => !e.isDelete && e.rows.exists(_ < minRows))
-        if ((maxEq > 0 && dels >= maxEq) ||
-            (maxSmall > 0 && nSmall >= maxSmall))
-          rewriteDeletes(s, root)
-      }
-    }
-    compactOnDebt(s, root)
+    if (cur == 0L) return None
+    val maxSmall = s.conf.get("graft.index.compact.max.small", "24").toInt
+    val minRows = s.conf.get("graft.index.compact.min.rows", "2048").toLong
+    def nSmall(es: Seq[FileEntry]): Int =
+      es.count(e => !e.isDelete && e.rows.exists(_ < minRows))
+    val es0 = entries(s, root, cur)
+    val dels = es0.count(_.isDelete)
+    val maxEq = s.conf.get("graft.index.eqdelete.max.files", "16").toInt
+    val es =
+      if (dels > 0 && ((maxEq > 0 && dels >= maxEq) ||
+          (maxSmall > 0 && nSmall(es0) >= maxSmall)))
+        entries(s, root, rewriteDeletes(s, root))
+      else es0
+    if (maxSmall <= 0 || es.exists(_.isDelete) ||
+        !es.forall(_.rows.isDefined) || nSmall(es) < maxSmall) None
+    else Some(compactSmallFiles(s, root, minRows,
+      s.conf.get("graft.index.compact.target.rows", "65536").toLong))
   }
 
   /** The files of the CURRENT snapshot a merge keyed on `keyCol` would

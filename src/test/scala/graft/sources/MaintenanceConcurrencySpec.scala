@@ -3,15 +3,17 @@ package graft.sources
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 
+import org.apache.spark.sql.functions.sum
+
 import graft.SparkSpec
 import graft.ops.Bm25Index
 
-/** The two delete forms of index maintenance in ONE session at once:
-  * the SQL `maintain_bm25_index` procedure rewrites touched files (its
-  * tables must stay DSv2-readable) while the library
-  * [[Bm25Index.maintainBm25Index]] publishes equality deletes. The form
-  * is an argument of the call, so neither caller can see the other's
-  * choice, and the session conf is never touched.
+/** Index maintenance through SQL and through the library in ONE
+  * session at once: the `maintain_bm25_index` procedure and
+  * [[Bm25Index.maintainBm25Index]] run the same code, so both publish
+  * equality deletes; SQL reads the procedure's merge-on-read index
+  * tables through the delete-applying plan, and the session conf is
+  * never touched.
   */
 class MaintenanceConcurrencySpec extends SparkSpec {
 
@@ -26,8 +28,8 @@ class MaintenanceConcurrencySpec extends SparkSpec {
   }
 
   test("CALL maintain_bm25_index and library maintenance on two threads " +
-      "keep their own delete forms, stay confluent, and leave the " +
-      "session conf unchanged") {
+      "both publish equality deletes, read correctly through SQL, stay " +
+      "confluent, and leave the session conf unchanged") {
     import spark.implicits._
     spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
     spark.sql(s"CREATE TABLE $cat.db.pcorp (doc_id BIGINT, text STRING)")
@@ -67,15 +69,18 @@ class MaintenanceConcurrencySpec extends SparkSpec {
         SnapshotTable.currentSnapshot(spark, procCorpus))
       assert(Await.result(viaLib, 5.minutes) ==
         SnapshotTable.currentSnapshot(spark, libCorpus))
-      // the procedure's tables carry no delete entries: SQL reads them
-      Seq(Bm25Index.tfRoot(procIx), Bm25Index.dlRoot(procIx)).foreach {
-        root => assert(!entries(root).exists(_.isDelete),
-          s"round $r: the procedure left delete entries in $root")
+      // one delete form: both callers publish deletes/eq-* files
+      Seq(Bm25Index.tfRoot(procIx), Bm25Index.dlRoot(procIx),
+          Bm25Index.tfRoot(libIx), Bm25Index.dlRoot(libIx)).foreach {
+        root => assert(entries(root).exists(_.isEqDelete),
+          s"round $r: maintenance published no equality delete in $root")
       }
+      // SQL subtracts them: counts match the library read
       assert(spark.sql(s"SELECT count(*) FROM $cat.db.pcix.dl")
         .head.getLong(0) == 4L + r)
-      assert(entries(Bm25Index.tfRoot(libIx)).exists(_.isEqDelete),
-        s"round $r: library maintenance must publish equality deletes")
+      assert(spark.sql(s"SELECT sum(tf) FROM $cat.db.pcix.tf")
+        .head.getLong(0) == SnapshotTable.read(spark,
+          Bm25Index.tfRoot(procIx)).agg(sum("tf")).head.getLong(0))
       assert(Bm25Index.confluenceAudit(spark, procCorpus, procIx)._2 == 0L)
       assert(Bm25Index.confluenceAudit(spark, libCorpus, libIx)._2 == 0L)
     } finally pool.shutdown()

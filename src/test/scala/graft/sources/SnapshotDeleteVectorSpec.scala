@@ -8,8 +8,9 @@ import graft.SparkSpec
 /** Merge-on-read deletes ([[SnapshotTable.deleteWhereMor]] /
   * [[SnapshotTable.rewriteDeletes]]): vector correctness, no-rewrite
   * invariant, idempotent marking through existing vectors, exact
-  * manifest row counts, the refusal surface (COW ops, DSv2 scans,
-  * incremental reads), fold-and-reopen, and vacuum of vector files.
+  * manifest row counts, the refusal surface (COW ops, file-level
+  * incremental reads) next to the vector-applying DSv2 read,
+  * fold-and-reopen, and vacuum of vector files.
   */
 class SnapshotDeleteVectorSpec extends SparkSpec {
 
@@ -87,8 +88,9 @@ class SnapshotDeleteVectorSpec extends SparkSpec {
     assert(SnapshotTable.rowCount(spark, root, v4).contains(0L))
   }
 
-  test("the refusal surface: COW delete/merge/replace, the DSv2 scan, " +
-      "and incremental reads all refuse on a vectored snapshot") {
+  test("the refusal surface: COW delete/merge and file-level " +
+      "incremental reads refuse on a vectored snapshot, while the DSv2 " +
+      "read applies the vector") {
     import spark.implicits._
     val root = tmpRoot("refuse")
     seed(root)
@@ -99,9 +101,12 @@ class SnapshotDeleteVectorSpec extends SparkSpec {
     assert(intercept[IllegalArgumentException] {
       SnapshotTable.merge(Seq((1L, 9L, "x")).toDF("k", "m", "v"), root, "k")
     }.getMessage.contains("rewriteDeletes"))
-    assert(intercept[IllegalArgumentException] {
-      spark.read.format("graft-snap").load(root).count()
-    }.getMessage.contains("rewriteDeletes"))
+    assert(spark.read.format("graft-snap").load(root).select("k")
+      .as[Long].collect().sorted.toSeq ==
+      SnapshotTable.read(spark, root).select("k").as[Long].collect()
+        .sorted.toSeq)
+    assert(spark.read.format("graft-snap").load(root).count() ==
+      (1L to 20L).count(_ % 3 != 1).toLong)
     assert(intercept[IllegalStateException] {
       SnapshotTable.changesBetween(spark, root, 1L, 2L).collect()
     }.getMessage.contains("merge-on-read"))

@@ -12,8 +12,9 @@ import graft.SparkSpec
   * readers subtract matching rows of strictly-older files
   * ([[SnapshotTable.applyEqDeletes]]'s sequence rule), and
   * [[SnapshotTable.rewriteDeletes]] settles the debt. Living under
-  * `deletes/` puts equality deletes behind every existing vector guard
-  * (DSv2 refusal, merge/DML/compaction fences, expiry) for free.
+  * `deletes/` puts equality deletes on every existing vector path
+  * (the delete-applying SQL read, merge/DML/compaction fences, expiry)
+  * for free.
   */
 class SnapshotEqDeleteSpec extends SparkSpec {
 
@@ -53,11 +54,11 @@ class SnapshotEqDeleteSpec extends SparkSpec {
     assert(SnapshotTable.rowCount(spark, root, v2).isEmpty)
     // time travel is untouched
     assert(SnapshotTable.readAt(spark, root, v1).count() == 20L)
-    // the DSv2 scan refuses rather than resurrect replaced rows
-    val e = intercept[IllegalArgumentException] {
-      spark.read.format("graft-snap").load(root).count()
-    }
-    assert(e.getMessage.contains("equality deletes"))
+    // the DSv2 read applies the equality delete like the library read
+    def bag(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    assert(bag(spark.read.format("graft-snap").load(root)) ==
+      bag(SnapshotTable.readAt(spark, root, v2)))
   }
 
   test("sequencing: a delete kills only STRICTLY older files — the " +

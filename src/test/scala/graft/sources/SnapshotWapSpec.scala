@@ -57,8 +57,7 @@ class SnapshotWapSpec extends SparkSpec {
   }
 
   test("publish REBASES over a purely-additive interleaved append " +
-      "(both deltas land); an overwrite interleave still refuses, and " +
-      "conf-off restores the strict fail-fast") {
+      "(both deltas land); an overwrite interleave still refuses") {
     import spark.implicits._
     val root = tmpRoot("div")
     seed(root)
@@ -89,18 +88,6 @@ class SnapshotWapSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("re-stage"), e.getMessage)
     assert(SnapshotTable.dropWap(spark, root, "doomed") >= 1)
-    // conf-off: even an additive interleave refuses (old contract)
-    spark.conf.set("graft.snapshot.wap.rebase", "false")
-    try {
-      SnapshotTable.commitWap(
-        Seq((70L, "w70")).toDF("k", "v"), root, "strict")
-      SnapshotTable.commit(Seq((80L, "a80")).toDF("k", "v"), root)
-      val e2 = intercept[IllegalStateException] {
-        SnapshotTable.publishWap(spark, root, "strict")
-      }
-      assert(e2.getMessage.contains("re-stage"), e2.getMessage)
-      assert(SnapshotTable.dropWap(spark, root, "strict") >= 1)
-    } finally spark.conf.unset("graft.snapshot.wap.rebase")
   }
 
   test("the DSv2 read pins at a staged snapshot via option(\"wap\"): " +
