@@ -698,7 +698,8 @@ object Profile {
 
   /** n churn passes (40 documents rewritten each) plus maintenance over a
     * 4,000-document BM25 index. Every n/6 passes records the tf/dl file
-    * counts, the maintenance pass and a search over the maintained
+    * counts, the tf + dl snapshots the maintenance pass added (`commits`:
+    * 2, plus any settle), its time and a search over the maintained
     * tables: the compaction cadence must saw-tooth the file counts under
     * the debt threshold and keep search flat. Ends with the confluence
     * audit, which must find no difference (compaction is layout-only).
@@ -718,6 +719,9 @@ object Profile {
         Bm25Index.buildBm25Index(spark, corpusRoot, indexRoot)
         def files(root: String): Int = SnapshotTable.fileList(spark, root,
           SnapshotTable.currentSnapshot(spark, root)).size
+        def snaps(): Long = Seq(Bm25Index.tfRoot(indexRoot),
+          Bm25Index.dlRoot(indexRoot))
+          .map(SnapshotTable.currentSnapshot(spark, _)).sum
         val every = math.max(1L, passes / 6)
         var maxTf = 0
         (1L to passes).foreach { i =>
@@ -727,8 +731,10 @@ object Profile {
               concat(lit("rev"), lit(i), lit(" pass "), col("id") % 11)
                 .as("text")),
             corpusRoot, "doc_id")
+          val snaps0 = snaps()
           val (_, maintS) =
             time(Bm25Index.maintainBm25Index(spark, corpusRoot, indexRoot))
+          val commits = snaps() - snaps0
           maxTf = math.max(maxTf, files(Bm25Index.tfRoot(indexRoot)))
           if (i % every == 0 || i == passes) {
             val (rows, searchS) = time(
@@ -736,7 +742,8 @@ object Profile {
             r.emit("index_maintenance", "pass" -> i,
               "tf_files" -> files(Bm25Index.tfRoot(indexRoot)),
               "dl_files" -> files(Bm25Index.dlRoot(indexRoot)),
-              "maint_s" -> maintS, "search_s" -> searchS, "rows" -> rows)
+              "commits" -> commits, "maint_s" -> maintS,
+              "search_s" -> searchS, "rows" -> rows)
           }
         }
         val ((_, diff), auditS) =

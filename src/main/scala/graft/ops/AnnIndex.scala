@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.sources.SnapshotTable
 
@@ -13,11 +14,12 @@ import graft.sources.SnapshotTable
   * from scratch:
   *
   *   - corpus appends/merge-inserts → quantize the new vectors with
-  *     the FROZEN codebook and merge them into the index;
-  *   - corpus updates (merge post-images, SQL rewrite XA rows) →
-  *     the same upsert replaces the stale codes by key;
-  *   - corpus deletes → a delta-sized equality-delete commit on the
-  *     index (zero table read; folded on the settle cadence).
+  *     the FROZEN codebook and append them to the index;
+  *   - corpus updates (merge post-images, SQL rewrite XA rows) and
+  *     deletes → an equality delete of every touched key kills the
+  *     stale codes (zero table read; folded on the settle cadence);
+  *   - both halves and the maintenance floor publish as ONE row-delta
+  *     snapshot ([[SnapshotTable.rowDelta]]) per pass.
   *
   * The CODEBOOK (per-dimension [min, range] over the build-time
   * corpus) is frozen at [[buildSq8Index]] — exactly how production
@@ -39,8 +41,8 @@ import graft.sources.SnapshotTable
   *
   * At 100 TB: maintenance cost is O(churn) — the feed is delta-priced
   * by construction, quantization is one codegen'd projection over the
-  * delta, and both the upsert and the delete are equality-delete
-  * commits that write O(delta) bytes and read NOTHING; the deferred
+  * delta, and the pass's one row-delta commit writes O(delta) bytes
+  * and reads NOTHING; the deferred
   * read-side debt folds on the [[SnapshotTable.settleOnDebt]] cadence.
   * Measured (SURVEY §6.15): maintain stays flat while rebuild grows
   * as the corpus scales ×1/×10/×100.
@@ -140,8 +142,8 @@ object AnnIndex {
   }
 
   /** Fold the corpus change feed since the last maintenance into the
-    * index: one equality-delete commit for keys that LEFT the corpus,
-    * one eq-upsert of freshly-quantized codes for keys that arrived or
+    * index: ONE row-delta commit deleting every touched key and
+    * appending freshly-quantized codes for the keys that arrived or
     * changed. O(churn) — the corpus is never re-read, the index never
     * rebuilt NOR rewritten (the deferred delete debt folds on the
     * settle cadence). Idempotent via the floor; returns the corpus
@@ -168,68 +170,45 @@ object AnnIndex {
     val from = maintainedThrough(s, indexRoot)
     if (throughSnapshot <= from) return from
     val st = statsOf(s, indexRoot)
-    val feed = feedFrame.localCheckpoint(eager = true) // two consumers
-    // a key's FINAL disposition is its LAST commit's: a key replaced
-    // at v2 and deleted at v3 must come out deleted, so the fold keys
-    // on max(_commit) per vec_id before splitting into adds and
-    // removals. Within one commit add-ops win (a replacement carries
-    // both its UB pre-image and its U post-image).
-    val lastTouch = feed.groupBy(col("vec_id").as("_lk"))
-      .agg(max(col("_commit")).as("_lc"))
-    // both sides are churn-sized; AQE picks the join strategy
-    val finalOps = feed.join(lastTouch,
-      col("vec_id") === col("_lk") && col("_commit") === col("_lc"))
-      .select(col("vec_id"), col("embedding"), col("_op"))
-    val addRows = finalOps.filter(col("_op").isin("A", "I", "U", "XA"))
-      .select("vec_id", "embedding")
-    // keys that left the corpus for good: removed minus re-added
-    // (replaced keys are handled by the merge itself)
-    val removedOnly = finalOps.filter(col("_op").isin("UB", "D", "XB"))
-      .select("vec_id").distinct()
-      .join(addRows.select("vec_id").distinct(), Seq("vec_id"),
-        "left_anti")
-    // BOTH branch probes in one aggregation (r15): the former
-    // limit(1).count pair re-ran the feed joins once per probe; one
-    // per-key flag rollup answers "any adds?" and "any removed-only
-    // keys?" together
-    val probeRow = finalOps.groupBy("vec_id").agg(
-        max(when(col("_op").isin("A", "I", "U", "XA"), 1L)
-          .otherwise(0L)).as("a"),
-        max(when(col("_op").isin("UB", "D", "XB"), 1L)
-          .otherwise(0L)).as("r"))
-      .agg(coalesce(sum(col("a")), lit(0L)),
-        coalesce(sum(when(col("r") === 1L && col("a") === 0L, 1L)
-          .otherwise(0L)), lit(0L)))
-      .head()
-    val (anyAdds, anyRemovedOnly) =
-      (probeRow.getLong(0) > 0L, probeRow.getLong(1) > 0L)
-    // r16: both halves of the fold are O(delta)-WRITE commits — the
-    // Iceberg-v2 equality-delete shape — instead of COW rewrites that
-    // read and rewrote every stats-touched index file per pass:
-    //   - departed keys publish a delta-sized eq-delete file
-    //     ([[SnapshotTable.deleteByKeysEq]] — keys stay a FRAME, the
-    //     driver never collects them);
-    //   - arrived/changed keys publish ONE commit pairing an eq-delete
-    //     of their own keys (kills the stale codes in strictly-older
-    //     files) with the freshly-quantized codes as ordinary appends
-    //     ([[SnapshotTable.upsertEq]] — the Flink-CDC upsert shape).
-    // The read-side debt (broadcast key anti-joins on each scan) is
-    // delta-sized and folded on the [[SnapshotTable.settleOnDebt]]
-    // cadence below. Replay stays idempotent: a replayed pass's
-    // deletes outrank the crashed attempt's appends (strictly-older
-    // sequence scoping) before re-appending them. The eq form won 7 of
-    // 8 alternating full-gate pairs against the COW rewrite.
-    if (anyRemovedOnly)
-      SnapshotTable.deleteByKeysEq(removedOnly, indexRoot)
-    val floor = Map(s"stream.$FloorTag.batch" -> throughSnapshot.toString,
-      StatsProp -> renderStats(st))
-    if (anyAdds)
-      SnapshotTable.upsertEq(quantize(addRows, st), indexRoot,
-        Seq("vec_id"), extraProps = floor)
-    else // deletes only: advance the floor with an empty append
-      SnapshotTable.commit(
-        SnapshotTable.read(s, indexRoot).limit(0), indexRoot,
-        props = floor)
+    // two consumers, so materialized once — and released with the pass
+    val feed = feedFrame.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      // a key's FINAL disposition is its LAST commit's: a key replaced
+      // at v2 and deleted at v3 must come out deleted, so the fold keys
+      // on max(_commit) per vec_id. Within one commit add-ops win (a
+      // replacement carries both its UB pre-image and its U post-image).
+      val lastTouch = feed.groupBy(col("vec_id").as("_lk"))
+        .agg(max(col("_commit")).as("_lc"))
+      // both sides are churn-sized; AQE picks the join strategy
+      val finalOps = feed.join(lastTouch,
+        col("vec_id") === col("_lk") && col("_commit") === col("_lc"))
+        .select(col("vec_id"), col("embedding"), col("_op"))
+      val addRows = finalOps.filter(col("_op").isin("A", "I", "U", "XA"))
+        .select("vec_id", "embedding")
+      // ONE probe: "any touched keys?" and "any adds?" (an empty key
+      // frame or an empty append would refuse or publish a zero-row file)
+      val probe = finalOps.agg(count(lit(1)),
+        coalesce(sum(when(col("_op").isin("A", "I", "U", "XA"), 1L)
+          .otherwise(0L)), lit(0L))).head()
+      // ONE row delta per pass — the Iceberg-v2 equality-delete shape,
+      // an O(delta) write that reads nothing of the index: an eq-delete
+      // of EVERY touched key (kills the stale codes in strictly-older
+      // files, whether the key left the corpus or changed) plus the
+      // freshly-quantized codes of the arrived/changed keys as ordinary
+      // appends, with the floor and the codebook — deletes, codes and
+      // floor land atomically. Keys stay a FRAME; the driver never
+      // collects them. The read-side debt (broadcast key anti-joins on
+      // each scan) is delta-sized and folded on the
+      // [[SnapshotTable.settleOnDebt]] cadence below. Replay stays
+      // idempotent: a replayed pass's delete outranks the crashed
+      // attempt's appends (strictly-older sequence scoping).
+      SnapshotTable.rowDelta(s, indexRoot,
+        Option.when(probe.getLong(0) > 0L)(
+          finalOps.select("vec_id").distinct()),
+        Option.when(probe.getLong(1) > 0L)(quantize(addRows, st)),
+        Map(s"stream.$FloorTag.batch" -> throughSnapshot.toString,
+          StatsProp -> renderStats(st)))
+    } finally feed.unpersist(blocking = false)
     // DEBT cadence: maintenance passes append churn-sized code files
     // and delta-sized eq-deletes forever; fold the deletes and
     // bin-pack once either crosses its threshold (manifest rc= check

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.sources.SnapshotTable
 
@@ -15,10 +16,11 @@ import graft.sources.SnapshotTable
   *   - token deltas are COMBINABLE: a changed document folds as
   *     "delete my old tf/dl rows, append my new ones" (a deletion is
   *     just the first half) — both keyed on `doc_id`, both O(churn);
-  *   - the tf delete is the EQUALITY-DELETE commit
-  *     [[SnapshotTable.deleteByKeysEq]] — a delta-sized key file, no
-  *     table read or rewrite; the read-side debt is one broadcast
-  *     anti-join per scan and is folded on the
+  *   - each table takes ONE row-delta commit per pass
+  *     ([[SnapshotTable.rowDelta]]): the delete half is an equality-
+  *     delete key file — delta-sized, no table read or rewrite — and
+  *     the appends ride the same snapshot; the read-side debt is one
+  *     broadcast anti-join per scan and is folded on the
   *     [[SnapshotTable.settleOnDebt]] cadence;
   *   - corpus-level stats (n_docs, total_tokens) are rollups of the dl
   *     table — one tiny aggregate at search time, never re-derived
@@ -36,8 +38,9 @@ import graft.sources.SnapshotTable
   *
   * Exactly-once: the corpus snapshot a pass folded through rides the
   * DL table's `stream.bm25maint.batch` floor — dl is the LAST table a
-  * pass updates, so a crash mid-pass leaves the floor un-advanced and
-  * the replay re-applies an idempotent delete+append per touched doc.
+  * pass updates (its row delta carries the floor), so a crash mid-pass
+  * leaves the floor un-advanced and the replay re-applies an idempotent
+  * delete+append per touched doc.
   *
   * At 100 TB: maintenance cost is O(churn tokens); the tf table is the
   * only corpus-sized artifact and it is written once at build, then
@@ -132,7 +135,8 @@ object Bm25Index {
 
   /** Fold the corpus change feed since the last maintenance into the
     * tf/dl tables: per touched doc, delete its old rows (an equality
-    * delete of its key) and append its re-tokenized new ones.
+    * delete of its key) and append its re-tokenized new ones — one
+    * commit per table.
     * O(churn tokens); idempotent via the floor. Returns the corpus
     * snapshot maintained through (no-op when already current).
     */
@@ -152,59 +156,47 @@ object Bm25Index {
       throughSnapshot: Long): Long = {
     val from = maintainedThrough(s, indexRoot)
     if (throughSnapshot <= from) return from
-    val feed = feedFrame.localCheckpoint(eager = true) // multi-consumer
-    // final disposition per doc: its LAST commit's ops win (a doc
-    // replaced at v2 and deleted at v3 comes out deleted)
-    val lastTouch = feed.groupBy(col("doc_id").as("_lk"))
-      .agg(max(col("_commit")).as("_lc"))
-    val finalOps = feed.join(lastTouch,
-        col("doc_id") === col("_lk") && col("_commit") === col("_lc"))
-      .select(col("doc_id"), col("text"), col("_op"))
-    val changed = finalOps.filter(col("_op").isin("A", "I", "U", "XA"))
-      .select("doc_id", "text")
-    val touchedKeys = finalOps.select("doc_id").distinct()
-    val floor = Map(s"stream.$FloorTag.batch" -> throughSnapshot.toString)
-    // ONE probe answers "any touched docs?" and "any re-added text?"
-    // together (the former `changed.limit(1).count()` answered only the
-    // second, and the eq-delete write below refuses empty key frames)
-    val probe = finalOps.agg(count(lit(1)).as("n"),
-      coalesce(sum(when(col("_op").isin("A", "I", "U", "XA"), 1L)
-        .otherwise(0L)), lit(0L)).as("adds")).head()
-    val (anyTouched, anyChanged) =
-      (probe.getLong(0) > 0L, probe.getLong(1) > 0L)
-    // tf first, dl (with the floor) last — the replay-idempotence order.
-    // The churn's token stream is shared by the tf and dl commits (r15:
-    // one tokenize of the delta instead of two).
-    //
-    // r16: the delete half is an EQUALITY-DELETE commit
-    // ([[SnapshotTable.deleteByKeysEq]] — a delta-sized key file,
-    // ZERO table read) instead of the COW [[SnapshotTable.deleteByKeys]]
-    // rewrite, which read AND rewrote every touched tf/dl file on every
-    // pass — O(touched files), i.e. O(corpus slice), where the churn is
-    // O(delta); the eq form won 7 of 8 alternating full-gate pairs. The
-    // read-side debt (one broadcast key anti-join per scan) is
-    // delta-sized and is settled on the [[settleOnDebt]] cadence below.
-    // Replay stays idempotent: a replayed pass's eq-delete outranks
-    // (kills) the crashed attempt's appended rows — strictly-older-
-    // sequence scoping — before re-appending them.
-    if (anyTouched)
-      SnapshotTable.deleteByKeysEq(touchedKeys, tfRoot(indexRoot))
-    if (anyChanged) {
+    // multi-consumer, so materialized once — and released with the pass
+    val feed = feedFrame.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      // final disposition per doc: its LAST commit's ops win (a doc
+      // replaced at v2 and deleted at v3 comes out deleted)
+      val lastTouch = feed.groupBy(col("doc_id").as("_lk"))
+        .agg(max(col("_commit")).as("_lc"))
+      val finalOps = feed.join(lastTouch,
+          col("doc_id") === col("_lk") && col("_commit") === col("_lc"))
+        .select(col("doc_id"), col("text"), col("_op"))
+      val changed = finalOps.filter(col("_op").isin("A", "I", "U", "XA"))
+        .select("doc_id", "text")
+      // ONE probe answers "any touched docs?" and "any re-added text?"
+      // together (an empty key frame or an empty append would refuse or
+      // publish a zero-row file)
+      val probe = finalOps.agg(count(lit(1)),
+        coalesce(sum(when(col("_op").isin("A", "I", "U", "XA"), 1L)
+          .otherwise(0L)), lit(0L))).head()
+      val keys = Option.when(probe.getLong(0) > 0L)(
+        finalOps.select("doc_id").distinct())
+      val anyAdds = probe.getLong(1) > 0L
       val toks = tokensOf(changed).cache()
+      // ONE row delta per table — "delete every touched doc's old rows,
+      // append its re-tokenized new ones" as a single snapshot — tf
+      // first, dl (with the floor) last: the replay-idempotence order.
+      // The delete half is an equality-delete key file (a delta-sized
+      // write, ZERO table read); a replayed pass's delete outranks
+      // (kills) the crashed attempt's appended rows — strictly-older-
+      // sequence scoping — while its own appends survive it. The
+      // read-side debt (one broadcast key anti-join per scan) is
+      // delta-sized and is settled on the [[settleOnDebt]] cadence
+      // below. The churn's token stream is shared by both tables.
       try {
-        SnapshotTable.commit(tfFromToks(toks), tfRoot(indexRoot),
-          statsCol = Some("doc_id"))
-        SnapshotTable.deleteByKeysEq(touchedKeys, dlRoot(indexRoot))
-        SnapshotTable.commit(dlFromToks(changed, toks), dlRoot(indexRoot),
-          statsCol = Some("doc_id"), props = floor)
+        if (keys.isDefined) // no touched doc leaves tf as it is
+          SnapshotTable.rowDelta(s, tfRoot(indexRoot), keys,
+            Option.when(anyAdds)(tfFromToks(toks)), Map.empty)
+        SnapshotTable.rowDelta(s, dlRoot(indexRoot), keys,
+          Option.when(anyAdds)(dlFromToks(changed, toks)),
+          Map(s"stream.$FloorTag.batch" -> throughSnapshot.toString))
       } finally toks.unpersist(blocking = false)
-    } else {
-      if (anyTouched)
-        SnapshotTable.deleteByKeysEq(touchedKeys, dlRoot(indexRoot))
-      SnapshotTable.commit( // deletes only: advance the floor empty
-        SnapshotTable.read(s, dlRoot(indexRoot)).limit(0),
-        dlRoot(indexRoot), props = floor)
-    }
+    } finally feed.unpersist(blocking = false)
     // DEBT cadence: every pass appends churn-sized tf/dl files AND one
     // delta-sized eq-delete; once either crosses its threshold, fold
     // the deletes and bin-pack (manifest rc= check only — a no-op on

@@ -465,13 +465,11 @@ object SnapshotTable {
     val commitId = java.util.UUID.randomUUID().toString.replace("-", "")
     val folded = consolidateShards(s, fs, root,
       refs, inline, targetLines, shardMin, commitId)
-    val staging = new Path(new Path(root), s"_staging/$commitId")
-    fs.mkdirs(staging) // empty: metadata-only commit
-    val id = publishStaged(s, root, commitId, staging, folded, cur,
-      Seq.empty, Map("maintenance" -> "rewrite_manifests"),
+    val id = metadataOnlyCommit(s, root, cur,
       storedSchema(s, root, cur).getOrElse(
         throw new IllegalStateException(
-          s"rewrite_manifests: $root v$cur carries no schema")))
+          s"rewrite_manifests: $root v$cur carries no schema")),
+      Map("maintenance" -> "rewrite_manifests"), Some(folded))
     (id, head.size, folded.size)
   }
 
@@ -1751,11 +1749,7 @@ object SnapshotTable {
     // NOT travel (publishStaged carries the CURRENT snapshot's, above)
     val shapeProps = Map("partition.cols" ->
       partitionColsOf(s, root, toId).mkString(","))
-    val fs = fsOf(s, new Path(root))
-    val commitId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val staging = new Path(new Path(root), s"_staging/$commitId")
-    fs.mkdirs(staging) // empty: a manifest-only commit moves no files
-    publishStaged(s, root, commitId, staging, carried, cur, Seq.empty,
+    metadataOnlyCommit(s, root, cur, schema,
       shapeProps + ("rollback.of" -> toId.toString) +
         // the target's column mapping travels with its file list
         // (RESTATED even when empty — the head's mapping must not
@@ -1763,7 +1757,7 @@ object SnapshotTable {
         // the head's superset via the normal carry (monotone: a name
         // once barred stays barred)
         ("col.phys" -> renderPhysMap(physMapOf(s, root, toId))),
-      schema)
+      Some(carried))
   }
 
   /** METADATA-ONLY column rename (`from` → `to`): one manifest commit
@@ -1982,9 +1976,11 @@ object SnapshotTable {
   }
 
   /** A commit that changes only metadata: entry lines carried
-    * VERBATIM, empty staging (no file moves), `props` layered over the
-    * normal carried set. The rename/drop shape; rollback keeps its own
-    * variant (it restates shape props from the restore target).
+    * VERBATIM (the head's, or `lines` when the caller rewrote them),
+    * empty staging (no file moves), `props` layered over the normal
+    * carried set. Every manifest-only shape publishes through here:
+    * rename/drop, rollback, manifest and delete rewrites, index stats,
+    * merge-on-read deletes and key-only row deltas.
     */
   private def metadataOnlyCommit(s: SparkSession, root: String, cur: Long,
       schema: StructType, props: Map[String, String],
@@ -2328,16 +2324,11 @@ object SnapshotTable {
       e.copy(stats = others :+ FileStats(s"#bloom:$physCol",
         s"b$hashes", b64.encodeToString(bytes), ""))
     }
-    val fs = fsOf(s, new Path(root))
-    val commitId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val staging = new Path(new Path(root), s"_staging/$commitId")
-    fs.mkdirs(staging) // empty: metadata-only commit
-    publishStaged(s, root, commitId, staging,
-      rewriteHeadLines(s, root, cur)(e =>
-        Some(if (e.isDelete) e else withBloom(e))),
-      cur, Seq.empty,
+    metadataOnlyCommit(s, root, cur,
+      storedSchema(s, root, cur).getOrElse(df.schema),
       Map("bloom.col" -> colName),
-      storedSchema(s, root, cur).getOrElse(df.schema))
+      Some(rewriteHeadLines(s, root, cur)(e =>
+        Some(if (e.isDelete) e else withBloom(e)))))
   }
 
   /** Build (or refresh) the per-file NDV stats group over `colName`:
@@ -2408,23 +2399,18 @@ object SnapshotTable {
       e.copy(stats = others :+ FileStats(s"#ndv:$physCol", "h",
         b64.encodeToString(regs.map(_.toByte)), ""))
     }
-    val fs = fsOf(s, new Path(root))
-    val commitId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val staging = new Path(new Path(root), s"_staging/$commitId")
-    fs.mkdirs(staging) // empty: metadata-only commit
     // record the column (PHYSICAL name) in the carried `stats.ndv.cols`
     // prop: every later commit then computes registers for ITS new
     // files ([[publishStaged]]), keeping [[ndvOf]] defined across
     // appends/merges/compactions without rebuilds — a MAINTAINED
     // stats group, not a one-shot index
-    publishStaged(s, root, commitId, staging,
-      rewriteHeadLines(s, root, cur)(e =>
-        Some(if (e.isDelete) e else withNdv(e))),
-      cur, Seq.empty,
+    metadataOnlyCommit(s, root, cur,
+      storedSchema(s, root, cur).getOrElse(df.schema),
       Map("ndv.col" -> colName,
         "stats.ndv.m" -> registers.toString,
         "stats.ndv.cols" -> (already :+ physCol).distinct.mkString(",")),
-      storedSchema(s, root, cur).getOrElse(df.schema))
+      Some(rewriteHeadLines(s, root, cur)(e =>
+        Some(if (e.isDelete) e else withNdv(e)))))
   }
 
   /** Snapshot `id`'s table-level NDV estimate for `colName` from the
@@ -3813,16 +3799,14 @@ object SnapshotTable {
     // vector's
     val keepPaths = (keep ++ ambiguous ++ dvs).map(_.path).toSet
     val carried = carriedHeadLines(s, root, cur, keepPaths) ++ newDvLine
-    val fs = fsOf(s, new Path(root))
-    val staging = new Path(new Path(root), s"_staging/$commitId")
-    fs.mkdirs(staging)
     val cdfProps =
       cdfRel.map("cdf.dir" -> _).toMap ++
         (if (drop.isEmpty) Map.empty[String, String]
          else Map("cdf.del.files" -> drop.map(_.path).mkString(",")))
-    val id = publishStaged(s, root, commitId, staging, carried, cur,
-      Seq.empty, Map("delete.mor" -> filters.mkString(" AND ")) ++ cdfProps,
-      schema.getOrElse(readAt(s, root, cur).schema))
+    val id = metadataOnlyCommit(s, root, cur,
+      schema.getOrElse(readAt(s, root, cur).schema),
+      Map("delete.mor" -> filters.mkString(" AND ")) ++ cdfProps,
+      Some(carried))
     (id, drop.size, if (newDvLine.isDefined) ambiguous.size else 0,
       keep.size)
   }
@@ -3891,9 +3875,9 @@ object SnapshotTable {
   }
 
   /** CDC UPSERT with ZERO table read at write time (Iceberg-v2
-    * EQUALITY DELETES — the Flink-CDC write shape): one commit that
-    * (a) publishes a delta-sized key file under `deletes/eq-*` killing
-    * every OLDER row carrying an incoming key, and (b) appends
+    * EQUALITY DELETES — the Flink-CDC write shape): one [[rowDelta]]
+    * that (a) publishes a delta-sized key file under `deletes/eq-*`
+    * killing every OLDER row carrying an incoming key, and (b) appends
     * `updates`' rows as ordinary data files. Nothing about the table
     * is read, scanned, or rewritten — write cost is O(delta) whatever
     * the table size, vs [[merge]]'s read-back of every touched file.
@@ -3911,22 +3895,12 @@ object SnapshotTable {
     */
   def upsertEq(updates: DataFrame, root: String, keyCols: Seq[String],
       extraProps: Map[String, String] = Map.empty): Long = {
-    val s = updates.sparkSession
-    val cur = currentSnapshot(s, root)
-    require(cur > 0L, s"upsertEq into empty table $root: commit first")
     require(keyCols.nonEmpty && keyCols.forall(updates.columns.contains),
       s"upsertEq: key columns ${keyCols.mkString(",")} must exist in " +
         s"the updates frame [${updates.columns.mkString(",")}]")
-    val line = writeEqDeleteFile(s, root, cur,
-      updates.select(keyCols.map(org.apache.spark.sql.functions.col): _*),
-      "upsertEq")
-    commitWithCarried(updates, root,
-      headEntryLines(s, root, cur) :+ line, cur,
-      statsCol = Some(keyCols.mkString(",")),
-      props = extraProps ++ Map("delete.eq" -> keyCols.mkString(","),
-        "eq.file" -> eqRelOf(line)),
-      baseSchema = storedSchema(s, root, cur),
-      partitionCols = partitionColsOf(s, root, cur))
+    rowDelta(updates.sparkSession, root,
+      Some(updates.select(keyCols.map(org.apache.spark.sql.functions.col): _*)),
+      Some(updates), extraProps, "upsertEq")
   }
 
   /** Row retraction by KEY with zero table read ([[upsertEq]]'s delete
@@ -3936,58 +3910,86 @@ object SnapshotTable {
     * The GDPR-erasure / CDC-retraction shape at 100 TB: the write
     * costs the key file, never a scan. Returns the new snapshot id.
     */
-  def deleteByKeysEq(keys: DataFrame, root: String): Long = {
-    val s = keys.sparkSession
-    val cur = currentSnapshot(s, root)
-    require(cur > 0L, s"deleteByKeysEq from empty table $root: commit first")
-    val schema = storedSchema(s, root, cur).getOrElse(
-      throw new IllegalStateException(
-        s"deleteByKeysEq: $root v$cur records no schema"))
-    require(keys.columns.nonEmpty &&
-        keys.columns.forall(schema.fieldNames.contains),
-      s"deleteByKeysEq: key columns [${keys.columns.mkString(",")}] must " +
-        s"be a subset of the table's [${schema.fieldNames.mkString(",")}]")
-    val line = writeEqDeleteFile(s, root, cur, keys, "deleteByKeysEq")
-    val commitId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val fs = fsOf(s, new Path(root))
-    val staging = new Path(new Path(root), s"_staging/$commitId")
-    fs.mkdirs(staging) // manifest-only: no data file moves
-    publishStaged(s, root, commitId, staging,
-      headEntryLines(s, root, cur) :+ line, cur, Seq.empty,
-      Map("delete.eq" -> keys.columns.mkString(","),
-        "eq.file" -> eqRelOf(line)),
-      schema)
-  }
+  def deleteByKeysEq(keys: DataFrame, root: String): Long =
+    rowDelta(keys.sparkSession, root, Some(keys), None, Map.empty,
+      "deleteByKeysEq")
 
-  private def eqRelOf(entryLine: String): String =
-    parseEntry(entryLine).path
+  /** ROW DELTA (Iceberg's `RowDelta`): "delete these keys, append those
+    * rows" as ONE snapshot `cur + 1` — the head's entries carried
+    * VERBATIM, plus the equality-delete entry of `deleteKeys` (stamped
+    * `cur + 1`, so it kills only strictly older rows and the delta's
+    * own appends survive it), plus `appends` as data files with the key
+    * columns as stats, plus `props` (and `delete.eq` / `eq.file` when
+    * there are keys). `deleteKeys`' columns ARE the key columns, a
+    * subset of the table's; the appended rows need not carry the same
+    * keys — [[changeFeed]] reads the keys as `D` and the appended files
+    * as `I`. With neither keys nor rows it is a props-only commit. A
+    * crash leaves either the whole delta or none of it; the publish is
+    * fail-fast (a concurrent commit throws, it never rebases). `op`
+    * names the caller in refusals. Returns the new snapshot id.
+    */
+  private[graft] def rowDelta(s: SparkSession, root: String,
+      deleteKeys: Option[DataFrame], appends: Option[DataFrame],
+      props: Map[String, String], op: String = "rowDelta"): Long = {
+    val cur = currentSnapshot(s, root)
+    require(cur > 0L, s"$op ${if (appends.isDefined) "into" else "from"} " +
+      s"empty table $root: commit first")
+    val schema = storedSchema(s, root, cur).getOrElse(
+      throw new IllegalStateException(s"$op: $root v$cur records no schema"))
+    // the delete half: (key file entry line, key columns)
+    val delete = deleteKeys.map { keys =>
+      require(keys.columns.nonEmpty &&
+          keys.columns.forall(schema.fieldNames.contains),
+        s"$op: key columns [${keys.columns.mkString(",")}] must be a " +
+          s"subset of the table's [${schema.fieldNames.mkString(",")}]")
+      (writeEqDeleteFile(s, root, cur, keys, op), keys.columns.mkString(","))
+    }
+    val lines = headEntryLines(s, root, cur) ++ delete.map(_._1)
+    val allProps = props ++ delete.toSeq.flatMap { case (line, cols) =>
+      Seq("delete.eq" -> cols, "eq.file" -> parseEntry(line).path)
+    }
+    appends match {
+      case Some(rows) =>
+        commitWithCarried(rows, root, lines, cur,
+          statsCol = delete.map(_._2), props = allProps,
+          baseSchema = Some(schema),
+          partitionCols = partitionColsOf(s, root, cur))
+      case None =>
+        metadataOnlyCommit(s, root, cur, schema, allProps, Some(lines))
+    }
+  }
 
   /** Write `keys` (deduplicated, PHYSICAL names, null-refused) as a
     * `deletes/eq-*` parquet and return its rendered manifest entry,
-    * stamped with the upcoming snapshot's sequence.
+    * stamped with the upcoming snapshot's sequence. One Spark job: the
+    * row and null-key counts are observed on the write itself.
     */
   private def writeEqDeleteFile(s: SparkSession, root: String, cur: Long,
       keys: DataFrame, op: String): String = {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{coalesce, col, count, lit, sum, when}
     val reservedHit = keys.columns.filter(ReservedCols)
     require(reservedHit.isEmpty,
       s"$op: key column name(s) ${reservedHit.mkString(", ")} are " +
         "reserved for the layer's merge-on-read join machinery — " +
         "rename them first")
     val pm = physMapOf(s, root, cur)
-    val distinctKeys = keys.distinct()
     val commitId = java.util.UUID.randomUUID().toString.replace("-", "")
     val fs = fsOf(s, new Path(root))
     val tmpDir = new Path(new Path(root), s"_staging/eq-$commitId")
-    toPhysical(distinctKeys, pm).coalesce(1)
-      .write.mode("overwrite").parquet(tmpDir.toString)
-    val eqRel = s"deletes/eq-$commitId.parquet"
-    val written = s.read.parquet(tmpDir.toString)
-    val n = written.count()
+    val obs = org.apache.spark.sql.Observation()
+    val anyNull = keys.columns.map(col(_).isNull).reduce(_ || _)
+    toPhysical(keys.distinct().observe(obs, count(lit(1)).as("n"),
+        coalesce(sum(when(anyNull, 1L).otherwise(0L)), lit(0L)).as("nulls")),
+      pm).coalesce(1).write.mode("overwrite").parquet(tmpDir.toString)
+    val seen = obs.get
+    val (n, nulls) =
+      (seen("n").asInstanceOf[Long], seen("nulls").asInstanceOf[Long])
+    if (n == 0L || nulls > 0L) fs.delete(tmpDir, true)
     require(n > 0L, s"$op: empty key frame")
-    require(written.na.drop("any").count() == n,
+    require(nulls == 0L,
       s"$op: null key values are not supported — a null never " +
         "equality-matches, so the delete would silently miss")
+    val eqRel = s"deletes/eq-$commitId.parquet"
     val part = fs.listStatus(tmpDir)
       .find(_.getPath.getName.startsWith("part-"))
       .getOrElse(throw new IllegalStateException(
@@ -4079,15 +4081,10 @@ object SnapshotTable {
     if (affected.isEmpty) {
       // every delete was refuted by stats (or named nothing): settle
       // is METADATA-ONLY — the del lines drop, the data carries verbatim
-      val commitId = java.util.UUID.randomUUID().toString.replace("-", "")
-      val fs = fsOf(s, new Path(root))
-      val staging = new Path(new Path(root), s"_staging/$commitId")
-      fs.mkdirs(staging)
-      return publishStaged(s, root, commitId, staging,
-        carriedHeadLines(s, root, cur, data.map(_.path).toSet),
-        cur, Seq.empty,
+      return metadataOnlyCommit(s, root, cur,
+        schema.getOrElse(readAt(s, root, cur).schema),
         Map("rewrite.deletes" -> dels.size.toString),
-        schema.getOrElse(readAt(s, root, cur).schema))
+        Some(carriedHeadLines(s, root, cur, data.map(_.path).toSet)))
     }
     val survivors = applyEqDeletes(s, root,
       applyDeleteVectors(s, root,

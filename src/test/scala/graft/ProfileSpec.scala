@@ -24,6 +24,14 @@ class ProfileSpec extends SparkSpec {
     assert(lines.head.contains(""""clusters":10,"clusters_ok":true,"ok":true}"""))
   }
 
+  test("index_maintenance reports each pass's commits: one per index table") {
+    val lines = Profile.run(spark, "index_maintenance", Params(n = Seq(2L)))
+    val passes = lines.filter(_.contains(""""pass":"""))
+    assert(passes.size == 2)
+    passes.foreach(l => assert(l.contains(""""commits":2,"""), l))
+    assert(lines.last.contains(""""confluent":true,"ok":true}"""))
+  }
+
   test("an unknown scenario or argument fails and names the valid ones") {
     val e = intercept[IllegalArgumentException](
       Profile.run(spark, "terasort", Params()))

@@ -87,7 +87,7 @@ class AnnIndexSpec extends SparkSpec {
       s"maintenance must not rewrite index files: lost " +
         s"${before.diff(after.toSet)}")
     assert(after.exists(_.startsWith("deletes/eq-")),
-      "both fold halves must be equality-delete commits")
+      "the delete half must be an equality-delete entry")
     // fold cadence: threshold 1 settles on the next pass
     spark.conf.set("graft.index.eqdelete.max.files", "1")
     try {
@@ -108,7 +108,7 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("maintenance is exactly-once (replay = no-op) and a " +
-      "deletes-only cycle advances the floor with an empty append") {
+      "deletes-only cycle advances the floor in one commit, no data file") {
     import spark.implicits._
     val (corpusRoot, indexRoot) = roots("floor")
     SnapshotTable.commit(emb.repartitionByRange(4, col("vec_id")),
@@ -121,9 +121,15 @@ class AnnIndexSpec extends SparkSpec {
     assert(SnapshotTable.currentSnapshot(spark, indexRoot) == before)
     // deletes-only churn
     val n0 = SnapshotTable.read(spark, indexRoot).count()
+    def dataFiles(): Set[String] = SnapshotTable.fileList(spark, indexRoot,
+      SnapshotTable.currentSnapshot(spark, indexRoot))
+      .filterNot(_.startsWith("deletes/")).toSet
+    val files0 = dataFiles()
     SnapshotTable.deleteWhere(spark, corpusRoot,
       Seq(GreaterThan("vec_id", 300L), LessThanOrEqual("vec_id", 320L)))
     AnnIndex.maintainSq8Index(spark, corpusRoot, indexRoot)
+    assert(SnapshotTable.currentSnapshot(spark, indexRoot) == before + 1L)
+    assert(dataFiles() == files0, "a deletes-only pass appends nothing")
     assert(AnnIndex.maintainedThrough(spark, indexRoot) ==
       SnapshotTable.currentSnapshot(spark, corpusRoot))
     val left = SnapshotTable.read(spark, indexRoot)
@@ -133,6 +139,40 @@ class AnnIndexSpec extends SparkSpec {
     // and the index equals the frozen-codebook rebuild again
     val frozen = AnnIndex.statsOf(spark, indexRoot)
     assert(left.select(col("vec_id"), col("codes").cast("string"))
+      .as[(Long, String)].collect().sorted.toSeq ==
+      AnnIndex.quantize(SnapshotTable.read(spark, corpusRoot), frozen)
+        .select(col("vec_id"), col("codes").cast("string"))
+        .as[(Long, String)].collect().sorted.toSeq)
+  }
+
+  test("a pass with both removals and adds is ONE snapshot, and the " +
+      "index stays confluent with the frozen-codebook rebuild") {
+    import spark.implicits._
+    val (corpusRoot, indexRoot) = roots("onecommit")
+    SnapshotTable.commit(emb.filter(col("vec_id") < 40L)
+        .repartitionByRange(2, col("vec_id")),
+      corpusRoot, statsCol = Some("vec_id"))
+    AnnIndex.buildSq8Index(spark, corpusRoot, indexRoot)
+    val v0 = SnapshotTable.currentSnapshot(spark, indexRoot)
+    // replace 3 and 13, insert a shifted copy of 7, delete (20, 25]
+    val e = emb.filter(col("vec_id") < 40L)
+    SnapshotTable.merge(
+      e.filter(col("vec_id").isin(3L, 13L))
+        .withColumn("embedding",
+          transform(col("embedding"), x => x * lit(2.0f)))
+        .unionByName(e.filter(col("vec_id") === 7L)
+          .select((col("vec_id") + 1000L).as("vec_id"), col("embedding"))),
+      corpusRoot, "vec_id")
+    SnapshotTable.deleteWhere(spark, corpusRoot,
+      Seq(GreaterThan("vec_id", 20L), LessThanOrEqual("vec_id", 25L)))
+    AnnIndex.maintainSq8Index(spark, corpusRoot, indexRoot)
+    assert(SnapshotTable.currentSnapshot(spark, indexRoot) == v0 + 1L,
+      "deletes, codes and floor publish as one snapshot")
+    assert(AnnIndex.maintainedThrough(spark, indexRoot) ==
+      SnapshotTable.currentSnapshot(spark, corpusRoot))
+    val frozen = AnnIndex.statsOf(spark, indexRoot)
+    assert(SnapshotTable.read(spark, indexRoot)
+      .select(col("vec_id"), col("codes").cast("string"))
       .as[(Long, String)].collect().sorted.toSeq ==
       AnnIndex.quantize(SnapshotTable.read(spark, corpusRoot), frozen)
         .select(col("vec_id"), col("codes").cast("string"))

@@ -84,17 +84,79 @@ class Bm25IndexSpec extends SparkSpec {
     val from = Bm25Index.maintainedThrough(spark, indexRoot)
     val to = SnapshotTable.currentSnapshot(spark, corpusRoot)
     val feed = SnapshotTable.changeFeed(spark, corpusRoot, from, to)
-    // simulate the crash: apply the tf half only (delete + append),
-    // floor NOT advanced — then run the real pass over the same feed
-    // (r16: the real pass's delete half is the eq-delete commit, so
-    // the simulation matches — the replayed delete must outrank and
-    // kill the crashed attempt's rows before re-appending them)
-    SnapshotTable.deleteByKeysEq(
-      feed.select("doc_id").distinct(), Bm25Index.tfRoot(indexRoot))
+    // simulate the crash: the pass's real tf row delta (delete every
+    // touched doc, append the post-images' tf rows) lands, the dl one
+    // with the floor does not — then run the real pass over the same
+    // feed: its delete must outrank and kill the crashed attempt's
+    // appended rows before re-appending them, or tf double-counts
+    val tfR = Bm25Index.tfRoot(indexRoot)
+    val tfBefore = SnapshotTable.read(spark, tfR).count()
+    SnapshotTable.rowDelta(spark, tfR,
+      Some(feed.select("doc_id").distinct()),
+      Some(Bm25Index.tfOf(feed.filter(col("_op").isin("A", "I", "U", "XA"))
+        .select("doc_id", "text"))), Map.empty)
+    assert(SnapshotTable.read(spark, tfR).count() != tfBefore,
+      "the simulated crash must have changed tf")
+    assert(Bm25Index.maintainedThrough(spark, indexRoot) == from)
     Bm25Index.applyFeed(spark, indexRoot, feed, to)
     val (_, diff) = Bm25Index.confluenceAudit(spark, corpusRoot, indexRoot)
     assert(diff == 0L,
       "replay over a half-applied pass must converge, not double-apply")
+  }
+
+  test("a pass commits ONCE per index table: without a fold tf and dl " +
+      "each advance by exactly one snapshot") {
+    import spark.implicits._
+    val b = tmp()
+    val corpusRoot = s"$b/corpus"
+    val indexRoot = s"$b/ix"
+    SnapshotTable.commit(Seq((1L, "a b a"), (2L, "b c"), (3L, "d"),
+      (4L, "e f")).toDF("doc_id", "text"), corpusRoot,
+      statsCol = Some("doc_id"))
+    Bm25Index.buildBm25Index(spark, corpusRoot, indexRoot)
+    val roots = Seq(Bm25Index.tfRoot(indexRoot), Bm25Index.dlRoot(indexRoot))
+    def heads() = roots.map(SnapshotTable.currentSnapshot(spark, _))
+    // update 2, insert 5, delete 3: deletes and appends in one pass
+    SnapshotTable.merge(Seq((2L, "x y"), (5L, "z")).toDF("doc_id", "text"),
+      corpusRoot, "doc_id")
+    SnapshotTable.deleteWhere(spark, corpusRoot,
+      Seq(org.apache.spark.sql.sources.EqualTo("doc_id", 3L)))
+    val before = heads()
+    Bm25Index.maintainBm25Index(spark, corpusRoot, indexRoot)
+    assert(heads() == before.map(_ + 1L),
+      s"one commit per table per pass: ${before} -> ${heads()}")
+    assert(Bm25Index.maintainedThrough(spark, indexRoot) ==
+      SnapshotTable.currentSnapshot(spark, corpusRoot))
+    val (_, diff) = Bm25Index.confluenceAudit(spark, corpusRoot, indexRoot)
+    assert(diff == 0L)
+  }
+
+  test("a deletes-only pass adds no data file to dl: the row delta " +
+      "publishes the key file and the floor, no empty append") {
+    import spark.implicits._
+    val b = tmp()
+    val corpusRoot = s"$b/corpus"
+    val indexRoot = s"$b/ix"
+    SnapshotTable.commit(Seq((1L, "a b"), (2L, "b c"), (3L, "d"))
+      .toDF("doc_id", "text"), corpusRoot, statsCol = Some("doc_id"))
+    Bm25Index.buildBm25Index(spark, corpusRoot, indexRoot)
+    val dlR = Bm25Index.dlRoot(indexRoot)
+    def dataFiles(root: String): Set[String] = SnapshotTable.fileList(spark,
+      root, SnapshotTable.currentSnapshot(spark, root))
+      .filterNot(_.startsWith("deletes/")).toSet
+    val before = dataFiles(dlR)
+    SnapshotTable.deleteWhere(spark, corpusRoot,
+      Seq(org.apache.spark.sql.sources.EqualTo("doc_id", 2L)))
+    Bm25Index.maintainBm25Index(spark, corpusRoot, indexRoot)
+    assert(dataFiles(dlR) == before,
+      s"a deletes-only pass must add no dl data file: " +
+        s"${dataFiles(dlR) -- before}")
+    assert(Bm25Index.maintainedThrough(spark, indexRoot) ==
+      SnapshotTable.currentSnapshot(spark, corpusRoot))
+    assert(SnapshotTable.read(spark, dlR).select("doc_id").as[Long]
+      .collect().sorted.toSeq == Seq(1L, 3L))
+    val (_, diff) = Bm25Index.confluenceAudit(spark, corpusRoot, indexRoot)
+    assert(diff == 0L)
   }
 
   test("maintenance deletes are O(delta): a pass publishes equality " +

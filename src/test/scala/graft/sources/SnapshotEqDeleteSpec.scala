@@ -178,6 +178,52 @@ class SnapshotEqDeleteSpec extends SparkSpec {
       cur.select("k", "v").as[(Long, String)].collect().sorted.toSeq)
   }
 
+  test("rowDelta publishes keys and rows that DIFFER as one snapshot: " +
+      "the read applies the delete to older rows only, and the change " +
+      "feed carries the keys as D and the rows as I") {
+    import spark.implicits._
+    val root = tmpRoot("rowdelta")
+    val v1 = seed(root)
+    // delete 3 and 7; append 21, 22 and a second row for key 5 (an
+    // append is an append — only the deleted keys lose older rows)
+    val v2 = SnapshotTable.rowDelta(spark, root,
+      Some(Seq(3L, 7L).toDF("k")),
+      Some(Seq((21L, 210L, "r21"), (22L, 220L, "r22"), (5L, -5L, "x5"))
+        .toDF("k", "m", "v")),
+      Map("delta.tag" -> "t1"))
+    assert(v2 == v1 + 1L, "one snapshot for the whole delta")
+    assert(SnapshotTable.entryLines(spark, root, v1)
+      .forall(SnapshotTable.entryLines(spark, root, v2).contains),
+      "the head's entries carry verbatim")
+    assert(SnapshotTable.snapshotProps(spark, root, v2).get("delta.tag")
+      .contains("t1"))
+    val cur = SnapshotTable.read(spark, root)
+    assert(cur.select("k").as[Long].collect().sorted.toSeq ==
+      ((1L to 22L).filterNot(Set(3L, 7L)) :+ 5L).sorted)
+    val feed = SnapshotTable.changeFeed(spark, root, v1, v2)
+    assert(feed.filter(col("_op") === "D").select("k").as[Long]
+      .collect().toSet == Set(3L, 7L))
+    assert(feed.filter(col("_op") === "D" && col("v").isNotNull)
+      .count() == 0L, "D rows carry keys only")
+    assert(feed.filter(col("_op") === "I").select("k").as[Long]
+      .collect().sorted.toSeq == Seq(5L, 21L, 22L))
+    // a keys-only and a props-only delta: no data file is written
+    val v3 = SnapshotTable.rowDelta(spark, root,
+      Some(Seq(21L).toDF("k")), None, Map.empty)
+    val v4 = SnapshotTable.rowDelta(spark, root, None, None,
+      Map("delta.tag" -> "t2"))
+    def dataFiles(id: Long) = SnapshotTable.fileList(spark, root, id)
+      .filterNot(_.startsWith("deletes/")).toSet
+    assert(dataFiles(v4) == dataFiles(v2))
+    assert(SnapshotTable.snapshotProps(spark, root, v4).get("delta.tag")
+      .contains("t2"))
+    assert(SnapshotTable.read(spark, root).count() == 20L)
+    assert(SnapshotTable.changeFeed(spark, root, v2, v4)
+      .select("k", "_op").as[(Long, String)].collect().toSeq ==
+      Seq((21L, "D")))
+    assert(v4 == v3 + 1L)
+  }
+
   test("deletes keyed by DIFFERENT column sets compose: one anti-join " +
       "per key set at read time, and the fold settles every group") {
     import spark.implicits._
