@@ -2,6 +2,7 @@ package graft
 
 import org.apache.commons.io.FileUtils
 import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -84,6 +85,38 @@ object Profile {
     val t0 = System.nanoTime()
     val r = f
     (r, (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** Runs `f` and counts the Spark jobs it started, SQL's broadcast and
+    * subquery threads included (they inherit the caller's local
+    * properties). Listener events arrive asynchronously, so a sentinel
+    * job run afterwards marks the end of the count.
+    */
+  private[graft] def jobsIn[T](spark: SparkSession)(f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val tag = s"profile.jobs.${System.nanoTime()}" // a fresh property key
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val end = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag))).foreach {
+          case "end" => end.countDown()
+          case _ => jobs.incrementAndGet()
+        }
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(tag, "f")
+    try {
+      val r = f
+      sc.setLocalProperty(tag, "end")
+      sc.parallelize(Seq(1), 1).count()
+      require(end.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "job listener timed out")
+      (r, jobs.get)
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
   }
 
   /** Runs `f` on a fresh temporary directory and deletes it afterwards. */
@@ -699,9 +732,10 @@ object Profile {
   /** n churn passes (40 documents rewritten each) plus maintenance over a
     * 4,000-document BM25 index. Every n/6 passes records the tf/dl file
     * counts, the tf + dl snapshots the maintenance pass added (`commits`:
-    * 2, plus any settle), its time and a search over the maintained
-    * tables: the compaction cadence must saw-tooth the file counts under
-    * the debt threshold and keep search flat. Ends with the confluence
+    * 2, plus any settle), the Spark jobs it started (`jobs`), its time
+    * and a search over the maintained tables: the compaction cadence
+    * must saw-tooth the file counts under the debt threshold and keep
+    * search flat. Ends with the confluence
     * audit, which must find no difference (compaction is layout-only).
     */
   private def indexMaintenance(r: Run): Unit =
@@ -732,8 +766,8 @@ object Profile {
                 .as("text")),
             corpusRoot, "doc_id")
           val snaps0 = snaps()
-          val (_, maintS) =
-            time(Bm25Index.maintainBm25Index(spark, corpusRoot, indexRoot))
+          val ((_, maintS), jobs) = jobsIn(spark)(
+            time(Bm25Index.maintainBm25Index(spark, corpusRoot, indexRoot)))
           val commits = snaps() - snaps0
           maxTf = math.max(maxTf, files(Bm25Index.tfRoot(indexRoot)))
           if (i % every == 0 || i == passes) {
@@ -742,7 +776,7 @@ object Profile {
             r.emit("index_maintenance", "pass" -> i,
               "tf_files" -> files(Bm25Index.tfRoot(indexRoot)),
               "dl_files" -> files(Bm25Index.dlRoot(indexRoot)),
-              "commits" -> commits, "maint_s" -> maintS,
+              "commits" -> commits, "jobs" -> jobs, "maint_s" -> maintS,
               "search_s" -> searchS, "rows" -> rows)
           }
         }

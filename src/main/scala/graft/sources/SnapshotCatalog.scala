@@ -339,7 +339,8 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
   private def dvRowsByFile(root: String,
       dvs: Seq[SnapshotTable.FileEntry]): Map[String, Long] =
     if (dvs.isEmpty) Map.empty
-    else spark.read.parquet(dvs.map(e => s"$root/${e.path}"): _*)
+    else spark.read.schema(SnapshotTable.DvSchema)
+      .parquet(dvs.map(e => s"$root/${e.path}"): _*)
       .groupBy("file").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
 

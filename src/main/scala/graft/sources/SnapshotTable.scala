@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DecimalType, DoubleType, FloatType, IntegerType, LongType, MapType, ShortType, StructType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DateType, DecimalType, DoubleType, FloatType, IntegerType, LongType, MapType, ShortType, StringType, StructType}
 
 /** Minimal file-level snapshot/manifest table — the metadata half of the
   * warehouse story (`wh_snapshot_asof` reconstructs AS-OF from a row
@@ -149,6 +149,11 @@ object SnapshotTable {
     def nulls: Option[Long] =
       if (tag.length > 1) Some(tag.drop(1).toLong) else None
   }
+  /** The schema of every delete-vector file: (data file name, row
+    * position), as [[deleteWhereMor]] writes it.
+    */
+  private[sources] val DvSchema: StructType =
+    StructType.fromDDL("file STRING, pos BIGINT")
   /** One manifest entry. `seq` is the entry's DATA SEQUENCE — the
     * snapshot id whose commit added the file, rendered as a trailing
     * `sq=` field (like `rc=`) by every commit since equality deletes
@@ -174,9 +179,17 @@ object SnapshotTable {
       * equality deletes — the Flink-CDC write shape). Living under
       * `deletes/` means every existing vector path (the delete-applying
       * SQL read, merge/DML/compaction fences, carry and expiry
-      * machinery) covers it with no new code path to forget.
+      * machinery) covers it with no new code path to forget. Like
+      * Iceberg's (`equality_ids` plus column bounds), the entry records
+      * the key file's footer stats and [[keySchema]], so no reader pays
+      * a job to learn the file's shape or key range.
       */
     def isEqDelete: Boolean = isDelete && fileName.startsWith("eq-")
+    /** The key file's PHYSICAL schema as written: a `#eqkeys`
+      * pseudo-stats tuple, mn = DDL ([[writeEqDeleteFile]]).
+      */
+    def keySchema: StructType =
+      StructType.fromDDL(stats.find(_.col == "#eqkeys").get.mn)
     /** The bare file name — what `_metadata.file_name` reports, and the
       * join domain delete vectors use (data file names are commit-
       * unique, so the name alone identifies the file within the table).
@@ -2678,16 +2691,7 @@ object SnapshotTable {
     }
   }
 
-  /** Subtract the snapshot's delete vectors from a data scan: each DV
-    * file holds (file, pos) pairs naming dead rows, and the read
-    * anti-joins them against the scan's own (`_metadata.file_name`,
-    * `_metadata.row_index`) — Spark's constant-cost file-source
-    * metadata columns, no row ids stored in the data. The DV side is
-    * delta-sized by construction, so the anti-join is a broadcast:
-    * at 100 TB the cost of merge-on-read is a hash probe per row,
-    * never a shuffle of the table.
-    */
-  /** Is a forced broadcast of `rows` delete-state rows safe? Delete
+  /** Is a forced broadcast of the delete files `dels` safe? Delete
     * debt is DELTA-sized by contract, so the broadcast hint is the
     * right default — but a high-churn CDC table that defers
     * [[rewriteDeletes]] accumulates unboundedly many vector/eq-delete
@@ -2702,19 +2706,35 @@ object SnapshotTable {
     * come from the manifest's own `rc=` arithmetic — no data read.
     */
   private def deleteBroadcastOk(s: SparkSession,
-      rows: Option[Long]): Boolean =
-    rows.exists(_ <= s.conf.get(
-      "graft.snapshot.delete.broadcast.max.rows", "5000000").toLong)
+      dels: Seq[FileEntry]): Boolean =
+    dels.forall(_.rows.isDefined) && dels.flatMap(_.rows).sum <= s.conf.get(
+      "graft.snapshot.delete.broadcast.max.rows", "5000000").toLong
 
+  /** The data file names delete vectors `dvs` reference: one
+    * delta-sized read.
+    */
+  private def dvFileNames(s: SparkSession, root: String,
+      dvs: Seq[FileEntry]): Set[String] =
+    if (dvs.isEmpty) Set.empty
+    else s.read.schema(DvSchema).parquet(dvs.map(e => s"$root/${e.path}"): _*)
+      .select("file").distinct().collect().map(_.getString(0)).toSet
+
+  /** Subtract the snapshot's delete vectors from a data scan: each DV
+    * file holds (file, pos) pairs naming dead rows, and the read
+    * anti-joins them against the scan's own (`_metadata.file_name`,
+    * `_metadata.row_index`) — Spark's constant-cost file-source
+    * metadata columns, no row ids stored in the data. The DV side is
+    * delta-sized by construction, so the anti-join is a broadcast:
+    * at 100 TB the cost of merge-on-read is a hash probe per row,
+    * never a shuffle of the table.
+    */
   private def applyDeleteVectors(s: SparkSession, root: String,
       base: DataFrame, dvs: Seq[FileEntry]): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col}
     if (dvs.isEmpty) return base
-    val dv = s.read.parquet(dvs.map(e => s"$root/${e.path}"): _*)
-    val dvRows: Option[Long] =
-      if (dvs.forall(_.rows.isDefined)) Some(dvs.flatMap(_.rows).sum)
-      else None
-    val dvSide = if (deleteBroadcastOk(s, dvRows)) broadcast(dv) else dv
+    val dv = s.read.schema(DvSchema)
+      .parquet(dvs.map(e => s"$root/${e.path}"): _*)
+    val dvSide = if (deleteBroadcastOk(s, dvs)) broadcast(dv) else dv
     val keep = base.columns.toSeq
     val tagged = base.select(col("*"),
       col("_metadata.file_name").as("__dv_file"),
@@ -2739,34 +2759,28 @@ object SnapshotTable {
     * the key anti-join drops the hint and shuffles instead of
     * overflowing executor memory). Key files store PHYSICAL column
     * names (stable across renames); the snapshot's own mapping
-    * renames them back here.
+    * renames them back here. Each entry records its key schema
+    * ([[FileEntry.keySchema]]), so the key side is planned from the
+    * manifest: one declared-schema scan per key schema, no job.
     */
   private def applyEqDeletes(s: SparkSession, root: String,
       base: DataFrame, eqs: Seq[FileEntry], dataEntries: Seq[FileEntry],
       physMap: Map[String, String]): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit}
+    import org.apache.spark.sql.functions.{broadcast, coalesce, col, element_at, lit, typedLit}
     if (eqs.isEmpty) return base
     val logicalOf = physMap.map(_.swap)
-    // deletes keyed by DIFFERENT column sets cannot share one
-    // anti-join: group by key set (almost always a single group — a
-    // table's CDC key is stable), one delta-sized broadcast anti-join
-    // per distinct set — broadcast GUARDED by the manifest's rc=
-    // arithmetic ([[deleteBroadcastOk]]): accumulated debt past the
-    // threshold anti-joins without the hint instead of forcing an
-    // unbounded key frame into every executor's memory
-    val frames = eqs.map { e =>
-      val df = s.read.parquet(s"$root/${e.path}")
-      (df.toDF(df.columns.map(c => logicalOf.getOrElse(c, c)): _*)
-        .withColumn("__eq_sq", lit(e.seq)), e.rows)
+    // deletes keyed by DIFFERENT schemas cannot share one anti-join:
+    // one scan and one anti-join per key schema (almost always a single
+    // group — a table's CDC key is stable), each key row tagged with
+    // its file's sequence
+    val groups = eqs.groupBy(_.keySchema).toSeq.map { case (keys, g) =>
+      val raw = s.read.schema(keys).parquet(g.map(e => s"$root/${e.path}"): _*)
+      val seqOf = typedLit(g.map(e => e.fileName -> e.seq).toMap)
+      val names = keys.fieldNames.map(c => logicalOf.getOrElse(c, c))
+      (raw.select(col("*"),
+          element_at(seqOf, col("_metadata.file_name")).as("__eq_sq"))
+        .toDF(names :+ "__eq_sq": _*), g)
     }
-    val groups = frames.groupBy(_._1.columns.filterNot(_ == "__eq_sq")
-      .sorted.toSeq).values.map { g =>
-        val df = g.map(_._1).reduce(_.unionByName(_))
-        val rows =
-          if (g.forall(_._2.isDefined)) Some(g.flatMap(_._2).sum)
-          else None
-        (df, rows)
-      }.toSeq
     import s.implicits._
     // the (file -> seq) map is O(files) METADATA, never debt: always
     // broadcast
@@ -2776,11 +2790,11 @@ object SnapshotTable {
     val tagged = base
       .select(col("*"), col("_metadata.file_name").as("__eq_file"))
       .join(fileSeq, col("__eq_file") === col("__sq_file"), "left")
-    groups.foldLeft(tagged) { case (acc, (dels, rows)) =>
+    groups.foldLeft(tagged) { case (acc, (dels, g)) =>
       val keyCols = dels.columns.filterNot(_ == "__eq_sq").toSeq
       val cond = keyCols.map(k => acc(k) <=> dels(k)).reduce(_ && _) &&
         coalesce(acc("__sq"), lit(0L)) < dels("__eq_sq")
-      val delSide = if (deleteBroadcastOk(s, rows)) broadcast(dels) else dels
+      val delSide = if (deleteBroadcastOk(s, g)) broadcast(dels) else dels
       acc.join(delSide, cond, "left_anti")
     }.select(keep.map(col): _*)
   }
@@ -2851,40 +2865,6 @@ object SnapshotTable {
       }
       (stats, rows)
     } finally rdr.close()
-  }
-
-  /** Render an EXTERNAL Row value of Spark type `dt` into the manifest
-    * stats compare domain it belongs to: (domain letter, rendering).
-    * Integral types compare as longs; date/timestamp keys live in the
-    * "i" domain their parquet INT32/INT64 stats are recorded in (days
-    * since epoch / micros); float widens to double exactly like the
-    * footer's FloatStatistics recording; None for any type (decimal,
-    * boolean, binary, nested) the stats proofs have no sound rendering
-    * for — the caller must then treat the bound as unprovable.
-    */
-  private[sources] def statDomainBound(dt: DataType,
-      v: Any): Option[(String, String)] = dt match {
-    case ByteType | ShortType | IntegerType | LongType =>
-      Some(("i", v.asInstanceOf[Number].longValue.toString))
-    case org.apache.spark.sql.types.DateType => v match {
-      case d: java.sql.Date => Some(("i", d.toLocalDate.toEpochDay.toString))
-      case ld: java.time.LocalDate => Some(("i", ld.toEpochDay.toString))
-      case _ => None
-    }
-    case org.apache.spark.sql.types.TimestampType => v match {
-      case t: java.sql.Timestamp => Some(("i",
-        org.apache.spark.sql.catalyst.util.DateTimeUtils
-          .fromJavaTimestamp(t).toString))
-      case i: java.time.Instant => Some(("i",
-        org.apache.spark.sql.catalyst.util.DateTimeUtils
-          .instantToMicros(i).toString))
-      case _ => None
-    }
-    case FloatType | DoubleType =>
-      Some(("d", v.asInstanceOf[Number].doubleValue.toString))
-    case org.apache.spark.sql.types.StringType =>
-      Some(("s", v.toString))
-    case _ => None
   }
 
   private def rangesOverlap(tag: String, mn: String, mx: String,
@@ -3017,16 +2997,11 @@ object SnapshotTable {
     import org.apache.spark.sql.functions.{col, lit}
     val (kept, _, _) = pruneFiles(s, root, id, colName, lo, hi)
     val keptSet = kept.toSet
-    val (dels, dataEs) = entries(s, root, id).partition(_.isDelete)
-    val (eqs, dvs) = dels.partition(_.isEqDelete)
     val base =
       if (kept.isEmpty) readAt(s, root, id).limit(0)
-      else applyEqDeletes(s, root,
-        applyDeleteVectors(s, root,
-          readData(s, root, kept, storedSchema(s, root, id),
-            physMapOf(s, root, id)),
-          dvs),
-        eqs, dataEs.filter(e => keptSet(e.path)), physMapOf(s, root, id))
+      else readEntries(s, root, id,
+        entries(s, root, id).filter(e => e.isDelete || keptSet(e.path)),
+        storedSchema(s, root, id), physMapOf(s, root, id))
     base.where(col(colName).between(lit(lo), lit(hi)))
   }
 
@@ -3337,7 +3312,8 @@ object SnapshotTable {
           // (others null via the union), which is exactly what the key
           // algebra consumes; the upsert's appended files follow as `I`
           val lom = physMapOf(s, root, id).map(_.swap)
-          val raw = s.read.parquet(s"$root/${props("eq.file")}")
+          val eq = entries(s, root, id).find(_.path == props("eq.file")).get
+          val raw = s.read.schema(eq.keySchema).parquet(s"$root/${eq.path}")
           val delKeys = raw.toDF(
             raw.columns.map(c => lom.getOrElse(c, c)): _*)
           val added = (cur -- prev).toSeq.sorted
@@ -3729,12 +3705,7 @@ object SnapshotTable {
       s"deleteWhereMor: snapshot v$cur of $root carries equality " +
         "deletes; fold them first with rewriteDeletes")
     val (dvs, data) = es.partition(_.isDelete)
-    // file names an existing vector references: read once, delta-sized
-    val dvRefNames: Set[String] =
-      if (dvs.isEmpty) Set.empty
-      else s.read.parquet(dvs.map(e => s"$root/${e.path}"): _*)
-        .select("file").distinct()
-        .collect().map(_.getString(0)).toSet
+    val dvRefNames = dvFileNames(s, root, dvs)
     val pm = physMapOf(s, root, cur) // filter names are LOGICAL
     val keep = data.filter(e => filters.exists(f => v1ProvesNone(e, f, pm)))
     val rest = data.diff(keep)
@@ -3760,7 +3731,8 @@ object SnapshotTable {
         val live =
           if (dvs.isEmpty) tagged
           else {
-            val dv = s.read.parquet(dvs.map(e => s"$root/${e.path}"): _*)
+            val dv = s.read.schema(DvSchema)
+              .parquet(dvs.map(e => s"$root/${e.path}"): _*)
             tagged.join(broadcast(dv),
               tagged("__dv_file") === dv("file") &&
                 tagged("__dv_pos") === dv("pos"), "left_anti")
@@ -3768,10 +3740,10 @@ object SnapshotTable {
         val fs = fsOf(s, new Path(root))
         // DELETE marks rows where cond is TRUE (null cond keeps)
         val rel = s"changes/$commitId"
-        live.where(coalesce(cond, lit(false)))
+        val marked = live.where(coalesce(cond, lit(false)))
           .withColumn("_op", lit("D"))
-          .write.mode("overwrite").parquet(s"$root/$rel")
-        val frame = s.read.parquet(s"$root/$rel")
+        marked.write.mode("overwrite").parquet(s"$root/$rel")
+        val frame = s.read.schema(marked.schema).parquet(s"$root/$rel")
         val n = frame.count() // delta-sized by construction
         if (n == 0L) { // nothing matched: no vector, no frame
           fs.delete(new Path(root, rel), true)
@@ -3860,7 +3832,7 @@ object SnapshotTable {
     keyFrame.write.mode("overwrite").parquet(s"$root/$cdfRel")
     // survivors anti-join against the WRITTEN keys: the key plan (often
     // a distinct over a change feed) is computed once, not twice
-    val keysBack = s.read.parquet(s"$root/$cdfRel")
+    val keysBack = s.read.schema(keyFrame.schema).parquet(s"$root/$cdfRel")
     val survivors = base.join(keysBack, Seq(keyCol), "left_anti")
     val statsCols = touched.flatMap(_.stats.map(_.col)).distinct
       .filterNot(_.startsWith("#"))
@@ -3961,8 +3933,12 @@ object SnapshotTable {
 
   /** Write `keys` (deduplicated, PHYSICAL names, null-refused) as a
     * `deletes/eq-*` parquet and return its rendered manifest entry,
-    * stamped with the upcoming snapshot's sequence. One Spark job: the
-    * row and null-key counts are observed on the write itself.
+    * stamped with the upcoming snapshot's sequence. The entry records
+    * what the file's readers need, so none pays a job for it: the key
+    * columns' footer stats ([[footerInfo]], the data files' domain, for
+    * [[rewriteDeletes]]) and the key schema ([[FileEntry.keySchema]],
+    * for [[applyEqDeletes]] and [[changeFeed]]). One Spark job: the row
+    * and null-key counts are observed on the write itself.
     */
   private def writeEqDeleteFile(s: SparkSession, root: String, cur: Long,
       keys: DataFrame, op: String): String = {
@@ -3978,9 +3954,10 @@ object SnapshotTable {
     val tmpDir = new Path(new Path(root), s"_staging/eq-$commitId")
     val obs = org.apache.spark.sql.Observation()
     val anyNull = keys.columns.map(col(_).isNull).reduce(_ || _)
-    toPhysical(keys.distinct().observe(obs, count(lit(1)).as("n"),
+    val phys = toPhysical(keys.distinct().observe(obs, count(lit(1)).as("n"),
         coalesce(sum(when(anyNull, 1L).otherwise(0L)), lit(0L)).as("nulls")),
-      pm).coalesce(1).write.mode("overwrite").parquet(tmpDir.toString)
+      pm)
+    phys.coalesce(1).write.mode("overwrite").parquet(tmpDir.toString)
     val seen = obs.get
     val (n, nulls) =
       (seen("n").asInstanceOf[Long], seen("nulls").asInstanceOf[Long])
@@ -3998,9 +3975,14 @@ object SnapshotTable {
     require(fs.rename(part.getPath, new Path(root, eqRel)),
       s"$op: failed to publish $eqRel")
     fs.delete(tmpDir, true)
+    val (stats, _) = footerInfo(s, new Path(root, eqRel), phys.columns.toSeq)
+    // nullable, so one key set has one schema (one anti-join) whatever
+    // frame its keys came from
+    val written = StructType(phys.schema.map(_.copy(nullable = true)))
     // publishStaged commits exactly prev + 1 or throws, so the stamp
     // is deterministic at build time
-    FileEntry(eqRel, Seq.empty, Some(n), cur + 1).render
+    FileEntry(eqRel, stats :+ FileStats("#eqkeys", "k", written.toDDL, ""),
+      Some(n), cur + 1).render
   }
 
   /** Fold the table's delete vectors into its data files: every data
@@ -4010,74 +3992,51 @@ object SnapshotTable {
     * debt, re-opens the vector-refusing paths (merge, copy-on-write
     * delete, SQL DML) and hands SQL reads back to the pruned DSv2
     * scan. IO = the referenced files once; the old files and vectors
-    * stay for time travel until [[expireSnapshots]]. No-op (returns
-    * the current id) when the table has no vectors.
+    * stay for time travel until [[expireSnapshots]]. Equality deletes
+    * fold too: which files they touch is decided from the manifest
+    * alone — each delete entry records its key file's footer stats
+    * and key schema ([[writeEqDeleteFile]]), so a fold whose deletes
+    * the stats refute everywhere starts no Spark job (keys of a type
+    * whose stats do not compare soundly refute nothing). No-op
+    * (returns the current id) when the table has no vectors.
     */
   def rewriteDeletes(s: SparkSession, root: String): Long = {
-    import org.apache.spark.sql.functions.{col, max => smax, min => smin}
     val cur = currentSnapshot(s, root)
     require(cur > 0L, s"rewriteDeletes on empty table $root")
     val es = entries(s, root, cur)
     val (dels, data) = es.partition(_.isDelete)
     if (dels.isEmpty) return cur
     val (eqs, dvs) = dels.partition(_.isEqDelete)
-    val pm = physMapOf(s, root, cur)
-    // position vectors name their files outright; delta-sized read
-    val refNames: Set[String] =
-      if (dvs.isEmpty) Set.empty
-      else s.read.parquet(dvs.map(e => s"$root/${e.path}"): _*)
-        .select("file").distinct()
-        .collect().map(_.getString(0)).toSet
+    // position vectors name their files outright
+    val refNames = dvFileNames(s, root, dvs)
     // equality deletes name KEYS, not files: a data file needs the
-    // rewrite iff some delete outranks its sequence AND the manifest
-    // stats cannot refute overlap on the first key column (sound —
-    // refuting one conjunct refutes the key match; the bounds are the
-    // union over every delete's keys, one delta-sized aggregation)
-    val eqNames: Set[String] =
-      if (eqs.isEmpty) Set.empty
-      else {
-        // per KEY-SET group (deletes keyed by different column sets
-        // never share bounds): first-key min/max over that group's
-        // keys, one delta-sized aggregation each. Bounds are rendered
-        // INTO THE STATS DOMAIN from the key column's Spark type
-        // ([[statDomainBound]]): footer stats of a FloatType column
-        // are float-widened-to-double strings ("0.10000000149...")
-        // while Row#toString of the same key renders "0.1", so a
-        // string-rendered bound can wrongly REFUTE a file that holds
-        // the key (silently resurrecting deleted rows), and a date /
-        // timestamp key's "2024-01-01" rendering crashes the "i"
-        // comparison outright. Types outside the conversion lattice
-        // (or a domain that disagrees with the file's recorded tag)
-        // yield no refutation — the file rewrites conservatively.
-        val groups: Seq[(Seq[FileEntry], String, Option[(String, String, String)])] =
-          eqs.map(e => e -> s.read.parquet(s"$root/${e.path}"))
-            .groupBy(_._2.columns.sorted.toSeq).values.map { g =>
-              val delKeys = g.map(_._2).reduce(_.unionByName(_))
-              val k0 = delKeys.columns.head // PHYSICAL name as written
-              val dt = delKeys.schema(k0).dataType
-              val r = delKeys.agg(smin(col(k0)), smax(col(k0))).head
-              val bounds =
-                if (r.isNullAt(0)) None
-                else for {
-                  (dom, lo) <- statDomainBound(dt, r.get(0))
-                  (_, hi) <- statDomainBound(dt, r.get(1))
-                } yield (dom, lo, hi)
-              (g.map(_._1), k0, bounds)
-            }.toSeq
-        data.filter { e =>
-          groups.exists { case (ents, k0, bounds) =>
-            ents.exists(_.seq > e.seq) && ((e.statsFor(k0), bounds) match {
-              case (Some(st), Some((dom, lo, hi))) if st.domain == dom =>
-                rangesOverlap(st.tag, st.mn, st.mx, lo, hi)
-              case _ => true // no stats / untyped bound / domain
-              // mismatch → cannot refute → rewrite
-            })
-          }
-        }.map(_.fileName).toSet
-      }
-    val (affected, untouched) = data.partition(e =>
-      refNames(e.fileName) || eqNames(e.fileName))
+    // rewrite iff some delete outranks its sequence AND the stats
+    // cannot refute overlap on that delete's first key column (sound —
+    // refuting one conjunct refutes the key match), taken from the
+    // delete entry's recorded footer stats. Those share the data files'
+    // domain only for a key typed as its stored column and rendered
+    // alike by both footers: decimal stats are unscaled or raw bytes,
+    // binary compares bytes read as UTF-8, and a timestamp's unit
+    // follows the writer's conf. Any other key refutes nothing
     val schema = storedSchema(s, root, cur)
+    val pm = physMapOf(s, root, cur)
+    val storedType = schema.toSeq.flatMap(_.fields) // by PHYSICAL name
+      .map(f => pm.getOrElse(f.name, f.name) -> f.dataType).toMap
+    val sound: Set[DataType] = Set(ByteType, ShortType, IntegerType,
+      LongType, DateType, FloatType, DoubleType, StringType)
+    val eqBounds = eqs.map { d =>
+      val k0 = d.keySchema.head // PHYSICAL name as written
+      (d.seq, k0.name, d.statsFor(k0.name).filter(_ => sound(k0.dataType) &&
+        storedType.get(k0.name).contains(k0.dataType)))
+    }
+    val (affected, untouched) = data.partition(e => refNames(e.fileName) ||
+      eqBounds.exists { case (seq, k0, keyStats) =>
+        seq > e.seq && ((e.statsFor(k0), keyStats) match {
+          case (Some(st), Some(ks)) if st.domain == ks.domain =>
+            rangesOverlap(st.tag, st.mn, st.mx, ks.mn, ks.mx)
+          case _ => true // no stats / other domain → cannot refute
+        })
+      })
     if (affected.isEmpty) {
       // every delete was refuted by stats (or named nothing): settle
       // is METADATA-ONLY — the del lines drop, the data carries verbatim
@@ -4086,10 +4045,7 @@ object SnapshotTable {
         Map("rewrite.deletes" -> dels.size.toString),
         Some(carriedHeadLines(s, root, cur, data.map(_.path).toSet)))
     }
-    val survivors = applyEqDeletes(s, root,
-      applyDeleteVectors(s, root,
-        readData(s, root, affected.map(_.path), schema, pm), dvs),
-      eqs, affected, pm)
+    val survivors = readEntries(s, root, cur, affected ++ dels, schema, pm)
     val statsCols = affected.flatMap(_.stats.map(_.col)).distinct
       .filterNot(_.startsWith("#"))
     commitWithCarried(survivors, root,
@@ -4451,7 +4407,7 @@ object SnapshotTable {
     val s = updates.sparkSession
     val cur = currentSnapshot(s, root)
     val physKey = physMapOf(s, root, cur).getOrElse(keyCol, keyCol)
-    val statful = entries(s, root, cur)
+    val statful = entries(s, root, cur).filterNot(_.isDelete)
       .flatMap(e => e.statsFor(physKey).map(st => (e.path, st)))
     if (statful.isEmpty) Set.empty
     else {

@@ -29,6 +29,9 @@ class ProfileSpec extends SparkSpec {
     val passes = lines.filter(_.contains(""""pass":"""))
     assert(passes.size == 2)
     passes.foreach(l => assert(l.contains(""""commits":2,"""), l))
+    // the Spark jobs each pass started, next to its commits
+    passes.foreach(l => assert(""""jobs":([1-9][0-9]*),""".r
+      .findFirstIn(l).isDefined, l))
     assert(lines.last.contains(""""confluent":true,"ok":true}"""))
   }
 

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.LessThanOrEqual
+import org.apache.spark.sql.types.LongType
 
 import graft.SparkSpec
 
@@ -244,6 +245,60 @@ class SnapshotEqDeleteSpec extends SparkSpec {
     assert(SnapshotTable.rowCount(spark, root, v4).contains(18L))
     assert(SnapshotTable.read(spark, root)
       .filter(col("k") === 5L).select("v").as[String].head() == "u5")
+  }
+
+  test("the manifest plans equality deletes: building a read over 1 or " +
+      "15 delete entries, and a fold the stats refute everywhere, start " +
+      "no Spark job") {
+    import spark.implicits._
+    def jobs(f: => Any): Int = graft.Profile.jobsIn(spark)(f)._2
+    val root = tmpRoot("jobs")
+    seed(root)
+    SnapshotTable.deleteByKeysEq(Seq(3L).toDF("k"), root)
+    assert(jobs(SnapshotTable.read(spark, root)) == 0)
+    (4L to 17L).foreach(k =>
+      SnapshotTable.deleteByKeysEq(Seq(k).toDF("k"), root))
+    val cur = SnapshotTable.currentSnapshot(spark, root)
+    assert(SnapshotTable.entries(spark, root, cur).count(_.isEqDelete) == 15)
+    assert(jobs(SnapshotTable.read(spark, root)) == 0)
+    assert(SnapshotTable.read(spark, root).select("k").as[Long].collect()
+      .sorted.toSeq == Seq(1L, 2L, 18L, 19L, 20L))
+    // keys outside every file's [min, max]: settled from the manifest
+    val root2 = tmpRoot("jobs_refuted")
+    val v1 = seed(root2)
+    Seq(101L, 102L, 103L).foreach(k =>
+      SnapshotTable.deleteByKeysEq(Seq(k).toDF("k"), root2))
+    val (v5, n) = graft.Profile.jobsIn(spark)(
+      SnapshotTable.rewriteDeletes(spark, root2))
+    assert(n == 0)
+    assert(SnapshotTable.entryLines(spark, root2, v5).toSet ==
+      SnapshotTable.entryLines(spark, root2, v1).toSet)
+  }
+
+  test("an equality delete written BEFORE its key column is renamed and " +
+      "widened still kills its rows, lists as D in the change feed, and " +
+      "folds to the rows a rebuild gives") {
+    import spark.implicits._
+    val root = tmpRoot("evolve")
+    val v1 = SnapshotTable.commit(
+      (1 to 20).map(k => (k, k * 10L, s"r$k")).toDF("k", "m", "v")
+        .repartitionByRange(4, col("k")), root, statsCol = Some("k"))
+    val v2 = SnapshotTable.deleteByKeysEq(Seq(3, 7, 18).toDF("k"), root)
+    SnapshotTable.renameColumn(spark, root, "k", "id")
+    SnapshotTable.widenColumn(spark, root, "id", LongType)
+    val rebuild = (1L to 20L).filterNot(Set(3L, 7L, 18L))
+      .map(k => (k, k * 10L, s"r$k"))
+    def rows() = SnapshotTable.read(spark, root).select("id", "m", "v")
+      .as[(Long, Long, String)].collect().sorted.toSeq
+    assert(rows() == rebuild)
+    // the delete's step keeps the names and type of its own commit
+    assert(SnapshotTable.changeFeed(spark, root, v1, v2)
+      .filter(col("_op") === "D").select("k").as[Int].collect().toSet ==
+      Set(3, 7, 18))
+    val v5 = SnapshotTable.rewriteDeletes(spark, root)
+    assert(!SnapshotTable.fileList(spark, root, v5)
+      .exists(_.startsWith("deletes/")))
+    assert(rows() == rebuild)
   }
 
   test("upsertEqWriter under a live checkpointed stream: zero-read " +

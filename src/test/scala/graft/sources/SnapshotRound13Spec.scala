@@ -7,11 +7,13 @@ import graft.SparkSpec
 /** Round-13 hardening of the snapshot layer:
   *
   *  - [[SnapshotTable.rewriteDeletes]]' equality-delete stats
-  *    refutation compares bounds in the TYPED stats domain
-  *    ([[SnapshotTable.statDomainBound]]) — a float key's
-  *    double-widened file stats no longer wrongly refute ("0.1" vs
-  *    "0.10000000149011612" silently resurrected deleted rows) and a
-  *    date/timestamp key no longer crashes the "i" comparison;
+  *    refutation compares bounds in the TYPED stats domain (the key
+  *    file's own footer stats, recorded on its manifest entry) — a
+  *    float key's double-widened file stats no longer wrongly refute
+  *    ("0.1" vs "0.10000000149011612" silently resurrected deleted
+  *    rows) and a date/timestamp key no longer crashes the "i"
+  *    comparison; a decimal key (unscaled or byte-array stats) refutes
+  *    nothing, so its deleted rows stay dead through the fold;
   *  - rename/drop refuse columns referenced by CHECK constraints
   *    (otherwise every later commit fails at the publish choke point
   *    on the vanished name);
@@ -86,6 +88,41 @@ class SnapshotRound13Spec extends SparkSpec {
     // refuted: the data file carried VERBATIM (no rewrite happened)
     assert(SnapshotTable.fileList(spark, root, cur).toSet == pre)
     assert(SnapshotTable.read(spark, root).count() == 2L)
+  }
+
+  private def foldKeepsDead(root: String, live: Seq[Long]): Unit = {
+    import spark.implicits._
+    def ids() = SnapshotTable.read(spark, root).select("id")
+      .as[Long].collect().sorted.toSeq
+    assert(ids() == live)
+    SnapshotTable.rewriteDeletes(spark, root)
+    val cur = SnapshotTable.currentSnapshot(spark, root)
+    assert(!SnapshotTable.entries(spark, root, cur).exists(_.isDelete))
+    assert(ids() == live)
+  }
+
+  test("rewriteDeletes does not stats-refute a decimal(38,18) key: its " +
+      "byte-array stats of a NEGATIVE file min must not hide the key") {
+    import spark.implicits._
+    val root = s"${tmp()}/t"
+    SnapshotTable.commit(
+      Seq((1L, BigDecimal(-5)), (2L, BigDecimal(2)), (3L, BigDecimal(3)))
+        .toDF("id", "x").coalesce(1), root, statsCol = Some("x"))
+    SnapshotTable.deleteByKeysEq(Seq(BigDecimal(2)).toDF("x"), root)
+    foldKeepsDead(root, Seq(1L, 3L))
+  }
+
+  test("rewriteDeletes does not stats-refute a decimal key at another " +
+      "scale than its column (unscaled stats compare on the wrong scale)") {
+    import spark.implicits._
+    val root = s"${tmp()}/t"
+    SnapshotTable.commit(
+      Seq((1L, "1.00"), (2L, "1.50"), (3L, "9.99")).toDF("id", "x")
+        .select($"id", $"x".cast("decimal(10,2)").as("x")).coalesce(1),
+      root, statsCol = Some("x"))
+    SnapshotTable.deleteByKeysEq(
+      Seq("1.5").toDF("x").select($"x".cast("decimal(12,4)").as("x")), root)
+    foldKeepsDead(root, Seq(1L, 3L))
   }
 
   test("renameColumn / dropColumn refuse a column referenced by a " +
