@@ -127,14 +127,8 @@ object CommitGroup {
       id: Long): DataFrame =
     if (SnapshotTable.fileList(s, root, id).nonEmpty)
       SnapshotTable.readAt(s, root, id)
-    else {
-      val schema = SnapshotTable.storedSchema(s, root, id).getOrElse(
-        throw new IllegalStateException(
-          s"group-pinned snapshot v$id of $root lists no files and " +
-            "records no schema"))
-      s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
+    else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      SnapshotTable.schemaAt(s, root, id))
 
   /** Stage `df` as `root`'s member of commit group `group` — a normal
     * WAP stage under the group's wap id: invisible to every reader

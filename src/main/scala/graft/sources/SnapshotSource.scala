@@ -225,7 +225,7 @@ private[sources] class SnapshotSourceTable(root: String, id: Long,
     * resolution cannot change what it sees.
     */
   private[sources] def deleteApplyingRead(s: SparkSession): DataFrame =
-    SnapshotTable.readEntries(s, root, id, entries, Some(tableSchema),
+    SnapshotTable.readEntries(s, root, id, entries, tableSchema,
       SnapshotTable.physMapOf(s, root, id))
 
   override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder = {

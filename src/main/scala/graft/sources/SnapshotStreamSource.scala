@@ -72,8 +72,7 @@ class SnapshotStreamSourceProvider extends StreamSourceProvider
       require(cur > 0L,
         s"graft-snap-stream: table at $root is empty (no committed " +
           "snapshot); commit one or pass .schema(...)")
-      val base = SnapshotTable.storedSchema(s, root, cur)
-        .getOrElse(SnapshotTable.read(s, root).schema)
+      val base = SnapshotTable.schemaAt(s, root, cur)
       if (cdfOf(parameters))
         StructType(base.fields.toSeq ++ Seq(
           StructField("_op", StringType), StructField("_commit", LongType)))

@@ -312,7 +312,7 @@ object SnapshotTable {
   //                                only — never props)
   //
   // A commit writes AT MOST one new shard (its own new/inlined
-  // entries, once they outgrow `graft.snapshot.manifest.shard.min.lines`)
+  // entries, once they outgrow [[ShardMinLines]])
   // plus a small head of carried REFS — the Iceberg manifest-list
   // shape. Appends, WAP stages, rollbacks, and metadata-only commits
   // carry the previous head's refs VERBATIM ([[headEntryLines]]);
@@ -332,6 +332,10 @@ object SnapshotTable {
   // lines per shard a fold packs to (commit-time auto-fold, and the
   // rewriteManifests / manifestReport default)
   private val ShardTargetLines = 4096
+
+  // inline entry lines a head carries before a commit moves them into a
+  // shard; a fold's chunk shorter than this stays inline
+  private val ShardMinLines = 32
 
   private def shardLinesOf(fs: FileSystem, root: String,
       name: String): Seq[String] = {
@@ -408,7 +412,7 @@ object SnapshotTable {
   /** Fold SMALL shards (line count < `targetLines`) plus the inline
     * lines into target-sized shards: shards already at target carry as
     * refs untouched; the fold's last partial chunk stays INLINE when
-    * below `shardMin` (so subsequent appends keep accumulating inline
+    * below [[ShardMinLines]] (so subsequent appends keep accumulating inline
     * instead of minting a near-empty shard each fold). Entry ORDER is
     * preserved (big-shard refs first, then the folded stream) — entry
     * semantics are order-independent (a set of files + stats), so
@@ -419,7 +423,7 @@ object SnapshotTable {
     */
   private def consolidateShards(s: SparkSession,
       fs: FileSystem, root: String, refs: Seq[String],
-      inline: Seq[String], targetLines: Int, shardMin: Int,
+      inline: Seq[String], targetLines: Int,
       commitId: String): Seq[String] = {
     val (big, small) = refs.partition { r =>
       shardLinesOf(fs, root, r.stripPrefix("#shard ").trim)
@@ -428,7 +432,7 @@ object SnapshotTable {
     val toFold = small.flatMap(r =>
       shardLinesOf(fs, root, r.stripPrefix("#shard ").trim)) ++ inline
     val chunks = toFold.grouped(targetLines).toSeq
-    val (full, tail) = chunks.partition(_.length >= shardMin)
+    val (full, tail) = chunks.partition(_.length >= ShardMinLines)
     val newRefs = full.zipWithIndex.map { case (lines, i) =>
       val shardName = s"s-$commitId-f$i.shard"
       val sp = new Path(manifestDir(root), shardName)
@@ -467,21 +471,16 @@ object SnapshotTable {
     val smallRefs = refs.filterNot(r =>
       shardLinesOf(fs, root, r.stripPrefix("#shard ").trim)
         .length >= targetLines)
-    val shardMin =
-      s.conf.get("graft.snapshot.manifest.shard.min.lines", "32").toInt
     // nothing to merge — the fold would reproduce the same layout:
     // no small shard and only a sub-threshold inline tail, or exactly
     // one small shard with nothing to join it
-    if ((smallRefs.isEmpty && inline.length <= shardMin) ||
+    if ((smallRefs.isEmpty && inline.length <= ShardMinLines) ||
         (smallRefs.size == 1 && inline.isEmpty))
       return (cur, head.size, head.size)
     val commitId = java.util.UUID.randomUUID().toString.replace("-", "")
     val folded = consolidateShards(s, fs, root,
-      refs, inline, targetLines, shardMin, commitId)
-    val id = metadataOnlyCommit(s, root, cur,
-      storedSchema(s, root, cur).getOrElse(
-        throw new IllegalStateException(
-          s"rewrite_manifests: $root v$cur carries no schema")),
+      refs, inline, targetLines, commitId)
+    val id = metadataOnlyCommit(s, root, cur, schemaAt(s, root, cur),
       Map("maintenance" -> "rewrite_manifests"), Some(folded))
     (id, head.size, folded.size)
   }
@@ -492,7 +491,7 @@ object SnapshotTable {
     * committing anything or writing a byte. Mirrors
     * [[consolidateShards]]'s arithmetic exactly (big shards carry as
     * refs; small-shard lines + inline lines re-chunk at targetLines;
-    * a sub-`shard.min.lines` tail stays inline), so
+    * a sub-[[ShardMinLines]] tail stays inline), so
     * `head_lines_after` here equals what `CALL
     * system.rewrite_manifests` would report. `would_fold = false`
     * reproduces [[rewriteManifests]]'s no-op condition — the head is
@@ -513,10 +512,8 @@ object SnapshotTable {
     val smallRefs = refs.filterNot(r =>
       shardLinesOf(fs, root, r.stripPrefix("#shard ").trim)
         .length >= targetLines)
-    val shardMin =
-      s.conf.get("graft.snapshot.manifest.shard.min.lines", "32").toInt
     val wouldFold =
-      !((smallRefs.isEmpty && inline.length <= shardMin) ||
+      !((smallRefs.isEmpty && inline.length <= ShardMinLines) ||
         (smallRefs.size == 1 && inline.isEmpty))
     val after =
       if (!wouldFold) head.size
@@ -527,11 +524,11 @@ object SnapshotTable {
         val nChunks = toFold / targetLines
         val tail = toFold % targetLines
         // EVERY chunk (the full targetLines-sized ones included)
-        // becomes a shard ref iff it reaches shard.min.lines, else its
-        // lines stay inline — the same `_.length >= shardMin` split as
-        // consolidateShards' (full, tail) partition; with targetLines
-        // below shardMin even full chunks inline
-        def linesOf(chunk: Int): Int = if (chunk >= shardMin) 1 else chunk
+        // becomes a shard ref iff it reaches ShardMinLines, else its
+        // lines stay inline — the same (full, tail) split as
+        // consolidateShards'; with targetLines below ShardMinLines even
+        // full chunks inline
+        def linesOf(chunk: Int): Int = if (chunk >= ShardMinLines) 1 else chunk
         (refs.size - smallRefs.size) + nChunks * linesOf(targetLines) +
           (if (tail == 0) 0 else linesOf(tail))
       }
@@ -640,12 +637,20 @@ object SnapshotTable {
         pr._1 == "col.evo")
 
   /** Snapshot N's recorded schema — the commit-time Spark schema,
-    * evolved by name across appends. None for manifests written before
-    * schema recording existed (readers then fall back to inference).
+    * evolved by name across appends. None only for a manifest this
+    * layer did not write: every [[publishStaged]] records one.
     */
   def storedSchema(s: SparkSession, root: String, id: Long): Option[StructType] =
     snapshotProps(s, root, id).get("schema")
       .map(j => DataType.fromJson(j).asInstanceOf[StructType])
+
+  /** [[storedSchema]] for a snapshot this layer wrote; a manifest
+    * without one refuses, naming the table and snapshot.
+    */
+  private[sources] def schemaAt(s: SparkSession, root: String,
+      id: Long): StructType =
+    storedSchema(s, root, id).getOrElse(throw new IllegalStateException(
+      s"$root v$id records no schema"))
 
   /** Snapshot N's logical→physical column-name mapping (only entries
     * that differ; empty = identity, the common case and the pre-rename
@@ -1208,7 +1213,7 @@ object SnapshotTable {
     // never referenced — ordinary age-gated orphan debris.
     //
     // AUTO-CONSOLIDATION: one delta shard per commit still accretes a
-    // ref per ~shardMin files FOREVER (a per-minute streaming sink =
+    // ref per ~ShardMinLines files FOREVER (a per-minute streaming sink =
     // ~1.4k refs/day) — the one snapshot-layer cost that tracked the
     // table. When the ref count crosses `fold.max.refs`, this commit
     // folds every SMALL shard (+ the inline lines) into target-sized
@@ -1219,8 +1224,6 @@ object SnapshotTable {
     // O(delta) commit text at any table size. `rewrite_manifests` is
     // the same fold forced to completion on demand.
     fs.mkdirs(manifestDir(root))
-    val shardMin =
-      s.conf.get("graft.snapshot.manifest.shard.min.lines", "32").toInt
     val foldMaxRefs =
       s.conf.get("graft.snapshot.manifest.fold.max.refs", "128").toInt
     val (carriedRefs, carriedInline) =
@@ -1229,8 +1232,8 @@ object SnapshotTable {
     val files =
       if (foldMaxRefs > 0 && carriedRefs.size >= foldMaxRefs)
         consolidateShards(s, fs, root, carriedRefs, inlineAll,
-          ShardTargetLines, shardMin, attemptId)
-      else if (inlineAll.length > shardMin) {
+          ShardTargetLines, attemptId)
+      else if (inlineAll.length > ShardMinLines) {
         val shardName = s"s-$attemptId.shard"
         val sp = new Path(manifestDir(root), shardName)
         val so = fs.create(sp, false)
@@ -1753,8 +1756,7 @@ object SnapshotTable {
       s"rollback: target v$toId must be an existing snapshot earlier " +
         s"than current v$cur of $root")
     val carried = headEntryLines(s, root, toId)
-    val schema = storedSchema(s, root, toId).getOrElse(
-      readAt(s, root, toId).schema)
+    val schema = schemaAt(s, root, toId)
     // the restore target's table-shape props (partitioning) travel with
     // its file list — RESTATED even when empty, so rolling back from a
     // partitioned head to a pre-partitioning snapshot does not let the
@@ -1820,10 +1822,7 @@ object SnapshotTable {
         "commit would fail the constraint check on the vanished name; " +
         "drop the constraint first (unsetTableProps / ALTER TABLE " +
         "UNSET TBLPROPERTIES) and re-add it under the new name")
-    val schema = storedSchema(s, root, cur).getOrElse(
-      throw new IllegalStateException(
-        s"renameColumn: $root v$cur records no schema (pre-recording " +
-          "manifest) — rewrite the table to rename"))
+    val schema = schemaAt(s, root, cur)
     require(schema.fieldNames.contains(from),
       s"renameColumn: no column '$from' in ${schema.fieldNames.mkString(",")}")
     require(!schema.fieldNames.contains(to),
@@ -1867,10 +1866,7 @@ object SnapshotTable {
         "commit would fail the constraint check on the vanished name; " +
         "drop the constraint first (unsetTableProps / ALTER TABLE " +
         "UNSET TBLPROPERTIES)")
-    val schema = storedSchema(s, root, cur).getOrElse(
-      throw new IllegalStateException(
-        s"dropColumn: $root v$cur records no schema (pre-recording " +
-          "manifest) — rewrite the table to drop"))
+    val schema = schemaAt(s, root, cur)
     require(schema.fieldNames.contains(name),
       s"dropColumn: no column '$name' in ${schema.fieldNames.mkString(",")}")
     require(schema.fields.length > 1,
@@ -1911,10 +1907,7 @@ object SnapshotTable {
       to: DataType): Long = {
     val cur = currentSnapshot(s, root)
     require(cur > 0L, s"widen on empty table $root: commit first")
-    val schema = storedSchema(s, root, cur).getOrElse(
-      throw new IllegalStateException(
-        s"widenColumn: $root v$cur records no schema (pre-recording " +
-          "manifest) — rewrite the table to retype"))
+    val schema = schemaAt(s, root, cur)
     val field = schema.fields.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(
         s"widenColumn: no column '$name' in ${schema.fieldNames.mkString(",")}"))
@@ -1971,9 +1964,7 @@ object SnapshotTable {
       newCols: Seq[String]): Long = {
     val cur = currentSnapshot(s, root)
     require(cur > 0L, s"evolvePartitioning on empty table $root: commit first")
-    val schema = storedSchema(s, root, cur).getOrElse(
-      throw new IllegalStateException(
-        s"evolvePartitioning: $root v$cur records no schema"))
+    val schema = schemaAt(s, root, cur)
     require(newCols.forall(schema.fieldNames.contains),
       s"evolvePartitioning: unknown columns " +
         s"${newCols.filterNot(schema.fieldNames.contains).mkString(",")} " +
@@ -2039,8 +2030,7 @@ object SnapshotTable {
             "clean the data first")
       }
     }
-    metadataOnlyCommit(s, root, cur,
-      storedSchema(s, root, cur).getOrElse(readAt(s, root, cur).schema),
+    metadataOnlyCommit(s, root, cur, schemaAt(s, root, cur),
       props.map { case (k, v) => s"user.$k" -> v })
   }
 
@@ -2056,8 +2046,7 @@ object SnapshotTable {
         s"${missing.mkString(", ")} on $root")
     // a carried prop cannot be un-carried by omission — restate EMPTY
     // (the parse filters empty values out of the user view)
-    metadataOnlyCommit(s, root, cur,
-      storedSchema(s, root, cur).getOrElse(readAt(s, root, cur).schema),
+    metadataOnlyCommit(s, root, cur, schemaAt(s, root, cur),
       keys.map(k => s"user.$k" -> "").toMap)
   }
 
@@ -2301,8 +2290,9 @@ object SnapshotTable {
     val es = entries(s, root, cur)
     val (dvs, data) = es.partition(_.isDelete)
     val physCol = physMapOf(s, root, cur).getOrElse(colName, colName)
-    val df = readData(s, root, data.map(_.path),
-      storedSchema(s, root, cur), physMapOf(s, root, cur))
+    val schema = schemaAt(s, root, cur)
+    val df = readData(s, root, data.map(_.path), schema,
+      physMapOf(s, root, cur))
     require(df.columns.contains(colName),
       s"buildBloomIndex: no column '$colName' in $root")
     val effBits: Int =
@@ -2337,8 +2327,7 @@ object SnapshotTable {
       e.copy(stats = others :+ FileStats(s"#bloom:$physCol",
         s"b$hashes", b64.encodeToString(bytes), ""))
     }
-    metadataOnlyCommit(s, root, cur,
-      storedSchema(s, root, cur).getOrElse(df.schema),
+    metadataOnlyCommit(s, root, cur, schema,
       Map("bloom.col" -> colName),
       Some(rewriteHeadLines(s, root, cur)(e =>
         Some(if (e.isDelete) e else withBloom(e)))))
@@ -2377,8 +2366,9 @@ object SnapshotTable {
     val es = entries(s, root, cur)
     val physCol = physMapOf(s, root, cur).getOrElse(colName, colName)
     val data = es.filterNot(_.isDelete)
-    val df = readData(s, root, data.map(_.path),
-      storedSchema(s, root, cur), physMapOf(s, root, cur))
+    val schema = schemaAt(s, root, cur)
+    val df = readData(s, root, data.map(_.path), schema,
+      physMapOf(s, root, cur))
     require(df.columns.contains(colName),
       s"buildNdvIndex: no column '$colName' in $root")
     // ONE register width per table group (the `stats.ndv.m` prop —
@@ -2417,8 +2407,7 @@ object SnapshotTable {
     // files ([[publishStaged]]), keeping [[ndvOf]] defined across
     // appends/merges/compactions without rebuilds — a MAINTAINED
     // stats group, not a one-shot index
-    metadataOnlyCommit(s, root, cur,
-      storedSchema(s, root, cur).getOrElse(df.schema),
+    metadataOnlyCommit(s, root, cur, schema,
       Map("ndv.col" -> colName,
         "stats.ndv.m" -> registers.toString,
         "stats.ndv.cols" -> (already :+ physCol).distinct.mkString(",")),
@@ -2510,8 +2499,9 @@ object SnapshotTable {
   def readWap(s: SparkSession, root: String, wapId: String): DataFrame = {
     val es = wapEntries(s, root, wapId)
     require(es.nonEmpty, s"staged snapshot '$wapId' of $root lists no files")
-    val schema = wapProps(s, root, wapId).get("schema")
-      .map(j => DataType.fromJson(j).asInstanceOf[StructType])
+    val schema = wapStoredSchema(s, root, wapId).getOrElse(
+      throw new IllegalStateException(
+        s"staged snapshot '$wapId' of $root records no schema"))
     require(!es.exists(_.isEqDelete),
       s"readWap: staged snapshot '$wapId' of $root carries equality " +
         "deletes — equality-delete commits do not stage through WAP")
@@ -2651,7 +2641,7 @@ object SnapshotTable {
     */
   def readAt(s: SparkSession, root: String, id: Long): DataFrame =
     readEntries(s, root, id, entries(s, root, id),
-      storedSchema(s, root, id), physMapOf(s, root, id))
+      schemaAt(s, root, id), physMapOf(s, root, id))
 
   /** [[readAt]] over an already-resolved snapshot: its entries, schema
     * and column mapping — data files read, then delete vectors and
@@ -2660,7 +2650,7 @@ object SnapshotTable {
     * ([[ResolveSnapshotDeletes]]), so both surfaces give one answer.
     */
   private[sources] def readEntries(s: SparkSession, root: String, id: Long,
-      es: Seq[FileEntry], schema: Option[StructType],
+      es: Seq[FileEntry], schema: StructType,
       physMap: Map[String, String]): DataFrame = {
     require(es.nonEmpty, s"snapshot v$id of $root lists no files")
     val (dels, data) = es.partition(_.isDelete)
@@ -2679,16 +2669,12 @@ object SnapshotTable {
     * path: no extra Project node, plan shapes unchanged.
     */
   private def readData(s: SparkSession, root: String,
-      rels: Seq[String], schema: Option[StructType],
-      physMap: Map[String, String] = Map.empty): DataFrame = {
-    val paths = rels.map(f => s"$root/$f")
-    schema match {
-      case Some(sch) =>
-        val raw = s.read.schema(physSchema(sch, physMap)).parquet(paths: _*)
-        if (physMap.isEmpty || !sch.fieldNames.exists(physMap.contains)) raw
-        else raw.toDF(sch.fieldNames: _*)
-      case None => s.read.parquet(paths: _*)
-    }
+      rels: Seq[String], schema: StructType,
+      physMap: Map[String, String]): DataFrame = {
+    val raw = s.read.schema(physSchema(schema, physMap))
+      .parquet(rels.map(f => s"$root/$f"): _*)
+    if (physMap.isEmpty || !schema.fieldNames.exists(physMap.contains)) raw
+    else raw.toDF(schema.fieldNames: _*)
   }
 
   /** Is a forced broadcast of the delete files `dels` safe? Delete
@@ -2697,18 +2683,23 @@ object SnapshotTable {
     * [[rewriteDeletes]] accumulates unboundedly many vector/eq-delete
     * rows, and an unconditional `broadcast()` would force them into
     * driver + every executor's memory with no fallback. Past
-    * `graft.snapshot.delete.broadcast.max.rows` (default 5M — ~tens
-    * of MB of key state, the classic autoBroadcastJoinThreshold
-    * ballpark) or when a pre-rc manifest entry leaves the size
-    * unknown, the anti-joins run WITHOUT the hint: Spark plans a
-    * shuffle join whose memory profile is flat in the debt (AQE may
+    * [[DeleteBroadcastMaxRows]] or when a pre-rc manifest entry leaves
+    * the size unknown, the anti-joins run WITHOUT the hint: Spark plans
+    * a shuffle join whose memory profile is flat in the debt (AQE may
     * still choose broadcast if the actual bytes are small). The sizes
     * come from the manifest's own `rc=` arithmetic — no data read.
+    * Every join against a delete side (reads, folds and
+    * [[deleteWhereMor]]'s marking scan) makes this one decision.
     */
-  private def deleteBroadcastOk(s: SparkSession,
-      dels: Seq[FileEntry]): Boolean =
-    dels.forall(_.rows.isDefined) && dels.flatMap(_.rows).sum <= s.conf.get(
-      "graft.snapshot.delete.broadcast.max.rows", "5000000").toLong
+  private def deleteBroadcastOk(dels: Seq[FileEntry]): Boolean =
+    dels.forall(_.rows.isDefined) &&
+      dels.flatMap(_.rows).sum <= DeleteBroadcastMaxRows
+
+  /** Delete rows above which the delete-side anti-joins drop the
+    * broadcast hint: ~tens of MB of key state, the classic
+    * autoBroadcastJoinThreshold ballpark.
+    */
+  private val DeleteBroadcastMaxRows = 5000000L
 
   /** The data file names delete vectors `dvs` reference: one
     * delta-sized read.
@@ -2729,21 +2720,30 @@ object SnapshotTable {
     * never a shuffle of the table.
     */
   private def applyDeleteVectors(s: SparkSession, root: String,
+      base: DataFrame, dvs: Seq[FileEntry]): DataFrame =
+    if (dvs.isEmpty) base
+    else liveTagged(s, root, base, dvs)
+      .select(base.columns.map(org.apache.spark.sql.functions.col): _*)
+
+  /** `base`'s rows no vector in `dvs` names, tagged with their
+    * (`__dv_file`, `__dv_pos`) position: the anti-join behind
+    * [[applyDeleteVectors]], and [[deleteWhereMor]]'s marking scan,
+    * which keeps the tags to write its own vector.
+    */
+  private def liveTagged(s: SparkSession, root: String,
       base: DataFrame, dvs: Seq[FileEntry]): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col}
-    if (dvs.isEmpty) return base
-    val dv = s.read.schema(DvSchema)
-      .parquet(dvs.map(e => s"$root/${e.path}"): _*)
-    val dvSide = if (deleteBroadcastOk(s, dvs)) broadcast(dv) else dv
-    val keep = base.columns.toSeq
     val tagged = base.select(col("*"),
       col("_metadata.file_name").as("__dv_file"),
       col("_metadata.row_index").as("__dv_pos"))
+    if (dvs.isEmpty) return tagged
+    val dv = s.read.schema(DvSchema)
+      .parquet(dvs.map(e => s"$root/${e.path}"): _*)
+    val dvSide = if (deleteBroadcastOk(dvs)) broadcast(dv) else dv
     tagged.join(dvSide,
-        tagged("__dv_file") === dvSide("file") &&
-          tagged("__dv_pos") === dvSide("pos"),
-        "left_anti")
-      .select(keep.map(col): _*)
+      tagged("__dv_file") === dvSide("file") &&
+        tagged("__dv_pos") === dvSide("pos"),
+      "left_anti")
   }
 
   /** Subtract the snapshot's EQUALITY deletes from a data scan: each
@@ -2794,7 +2794,7 @@ object SnapshotTable {
       val keyCols = dels.columns.filterNot(_ == "__eq_sq").toSeq
       val cond = keyCols.map(k => acc(k) <=> dels(k)).reduce(_ && _) &&
         coalesce(acc("__sq"), lit(0L)) < dels("__eq_sq")
-      val delSide = if (deleteBroadcastOk(s, g)) broadcast(dels) else dels
+      val delSide = if (deleteBroadcastOk(g)) broadcast(dels) else dels
       acc.join(delSide, cond, "left_anti")
     }.select(keep.map(col): _*)
   }
@@ -3001,7 +3001,7 @@ object SnapshotTable {
       if (kept.isEmpty) readAt(s, root, id).limit(0)
       else readEntries(s, root, id,
         entries(s, root, id).filter(e => e.isDelete || keptSet(e.path)),
-        storedSchema(s, root, id), physMapOf(s, root, id))
+        schemaAt(s, root, id), physMapOf(s, root, id))
     base.where(col(colName).between(lit(lo), lit(hi)))
   }
 
@@ -3058,7 +3058,7 @@ object SnapshotTable {
       s"changesBetween needs 0 <= fromId < toId, got ($fromId, $toId]")
     val added = addedFilesBetween(s, root, fromId, toId)
     if (added.isEmpty) readAt(s, root, toId).limit(0)
-    else readData(s, root, added, storedSchema(s, root, toId),
+    else readData(s, root, added, schemaAt(s, root, toId),
       physMapOf(s, root, toId))
   }
 
@@ -3156,7 +3156,7 @@ object SnapshotTable {
     // raw and would resurrect vector-deleted rows
     val (touched, carried) = split(entries(s, root, cur))
     import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val schema = storedSchema(s, root, cur)
+    val schema = schemaAt(s, root, cur)
     // r15: the delta and the touched-file read each feed BOTH eager
     // writes below (the change frame, then the commit's survivors ∪
     // updates) plus the key probes — uncached, every consumer re-ran
@@ -3221,7 +3221,7 @@ object SnapshotTable {
     val id = commitWithCarried(survivors.unionByName(updates), root,
       carriedHeadLines(s, root, cur, carriedPaths), cur, Some(keyCol),
       Map("merge.key" -> keyCol, "cdf.dir" -> cdfRel) ++ extraProps,
-      baseSchema = schema,
+      baseSchema = Some(schema),
       partitionCols = partitionColsOf(s, root, cur))
     (id, touched.size, carried.size)
     } finally {
@@ -3290,7 +3290,7 @@ object SnapshotTable {
         "column names; re-baseline the consumer from a full snapshot " +
         "read")
     def readFiles(rels: Seq[String], id: Long): DataFrame =
-      readData(s, root, rels, storedSchema(s, root, id),
+      readData(s, root, rels, schemaAt(s, root, id),
         physMapOf(s, root, id))
     var prev: Set[String] =
       if (fromId == 0L) Set.empty else fileList(s, root, fromId).toSet
@@ -3599,7 +3599,7 @@ object SnapshotTable {
     val drop = rest.filter(e => e.rows.contains(0L) ||
       filters.forall(f => v1ProvesAll(e, f, pm)))
     val rewrite = rest.diff(drop)
-    val schema = storedSchema(s, root, cur)
+    val schema = schemaAt(s, root, cur)
     val survivors =
       if (rewrite.isEmpty) {
         // metadata-only: nothing read; the empty frame just carries
@@ -3641,7 +3641,7 @@ object SnapshotTable {
       carriedHeadLines(s, root, cur, keepPaths), cur,
       if (statsCols.isEmpty) None else Some(statsCols.mkString(",")),
       Map("delete.cond" -> filters.mkString(" AND ")) ++ cdfProps,
-      baseSchema = schema, partitionCols = partitionColsOf(s, root, cur))
+      baseSchema = Some(schema), partitionCols = partitionColsOf(s, root, cur))
     lastDelete.put(root, (drop.size, rewrite.size, keep.size))
     (id, drop.size, rewrite.size, keep.size)
   }
@@ -3694,7 +3694,7 @@ object SnapshotTable {
     */
   def deleteWhereMor(s: SparkSession, root: String,
       filters: Seq[org.apache.spark.sql.sources.Filter]): (Long, Int, Int, Int) = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit}
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
     val cur = currentSnapshot(s, root)
     require(cur > 0L, s"delete from empty table $root: commit first")
     require(filters.nonEmpty && canDelete(filters),
@@ -3713,7 +3713,7 @@ object SnapshotTable {
       (e.rows.contains(0L) || filters.forall(f => v1ProvesAll(e, f, pm))) &&
         !dvRefNames.contains(e.fileName))
     val ambiguous = rest.diff(drop)
-    val schema = storedSchema(s, root, cur)
+    val schema = schemaAt(s, root, cur)
     val commitId = java.util.UUID.randomUUID().toString.replace("-", "")
     // the marking scan now lands as the commit's CHANGE FRAME (full
     // rows + op `D` + the (file, pos) tag columns), and the delete
@@ -3724,19 +3724,8 @@ object SnapshotTable {
     val newDvLine: Option[String] =
       if (ambiguous.isEmpty) None
       else {
-        val base = readData(s, root, ambiguous.map(_.path), schema)
-        val tagged = base.select(col("*"),
-          col("_metadata.file_name").as("__dv_file"),
-          col("_metadata.row_index").as("__dv_pos"))
-        val live =
-          if (dvs.isEmpty) tagged
-          else {
-            val dv = s.read.schema(DvSchema)
-              .parquet(dvs.map(e => s"$root/${e.path}"): _*)
-            tagged.join(broadcast(dv),
-              tagged("__dv_file") === dv("file") &&
-                tagged("__dv_pos") === dv("pos"), "left_anti")
-          }
+        val live = liveTagged(s, root,
+          readData(s, root, ambiguous.map(_.path), schema, pm), dvs)
         val fs = fsOf(s, new Path(root))
         // DELETE marks rows where cond is TRUE (null cond keeps)
         val rel = s"changes/$commitId"
@@ -3776,8 +3765,7 @@ object SnapshotTable {
         (if (drop.isEmpty) Map.empty[String, String]
          else Map("cdf.del.files" -> drop.map(_.path).mkString(",")))
     val id = metadataOnlyCommit(s, root, cur,
-      schema.getOrElse(readAt(s, root, cur).schema),
-      Map("delete.mor" -> filters.mkString(" AND ")) ++ cdfProps,
+      schema, Map("delete.mor" -> filters.mkString(" AND ")) ++ cdfProps,
       Some(carried))
     (id, drop.size, if (newDvLine.isDefined) ambiguous.size else 0,
       keep.size)
@@ -3815,7 +3803,7 @@ object SnapshotTable {
       case None => true // no usable stats → conservatively rewrite
     })
     if (touched.isEmpty) return (cur, 0, es.size)
-    val schema = storedSchema(s, root, cur)
+    val schema = schemaAt(s, root, cur)
     val base = readData(s, root, touched.map(_.path), schema,
       physMapOf(s, root, cur))
     // LAZY change pricing (r15): record the delete KEYS (delta-sized),
@@ -3841,7 +3829,7 @@ object SnapshotTable {
       if (statsCols.isEmpty) None else Some(statsCols.mkString(",")),
       Map("delete.cond" -> s"keysIn($keyCol)", "cdf.dir" -> cdfRel,
         "cdf.keys.col" -> keyCol),
-      baseSchema = schema, partitionCols = partitionColsOf(s, root, cur))
+      baseSchema = Some(schema), partitionCols = partitionColsOf(s, root, cur))
     lastDelete.put(root, (0, touched.size, carried.size))
     (id, touched.size, carried.size)
   }
@@ -3906,8 +3894,7 @@ object SnapshotTable {
     val cur = currentSnapshot(s, root)
     require(cur > 0L, s"$op ${if (appends.isDefined) "into" else "from"} " +
       s"empty table $root: commit first")
-    val schema = storedSchema(s, root, cur).getOrElse(
-      throw new IllegalStateException(s"$op: $root v$cur records no schema"))
+    val schema = schemaAt(s, root, cur)
     // the delete half: (key file entry line, key columns)
     val delete = deleteKeys.map { keys =>
       require(keys.columns.nonEmpty &&
@@ -4018,9 +4005,9 @@ object SnapshotTable {
     // alike by both footers: decimal stats are unscaled or raw bytes,
     // binary compares bytes read as UTF-8, and a timestamp's unit
     // follows the writer's conf. Any other key refutes nothing
-    val schema = storedSchema(s, root, cur)
+    val schema = schemaAt(s, root, cur)
     val pm = physMapOf(s, root, cur)
-    val storedType = schema.toSeq.flatMap(_.fields) // by PHYSICAL name
+    val storedType = schema.fields // by PHYSICAL name
       .map(f => pm.getOrElse(f.name, f.name) -> f.dataType).toMap
     val sound: Set[DataType] = Set(ByteType, ShortType, IntegerType,
       LongType, DateType, FloatType, DoubleType, StringType)
@@ -4040,8 +4027,7 @@ object SnapshotTable {
     if (affected.isEmpty) {
       // every delete was refuted by stats (or named nothing): settle
       // is METADATA-ONLY — the del lines drop, the data carries verbatim
-      return metadataOnlyCommit(s, root, cur,
-        schema.getOrElse(readAt(s, root, cur).schema),
+      return metadataOnlyCommit(s, root, cur, schema,
         Map("rewrite.deletes" -> dels.size.toString),
         Some(carriedHeadLines(s, root, cur, data.map(_.path).toSet)))
     }
@@ -4051,7 +4037,7 @@ object SnapshotTable {
     commitWithCarried(survivors, root,
       carriedHeadLines(s, root, cur, untouched.map(_.path).toSet), cur,
       if (statsCols.isEmpty) None else Some(statsCols.mkString(",")),
-      Map("rewrite.deletes" -> dels.size.toString), baseSchema = schema,
+      Map("rewrite.deletes" -> dels.size.toString), baseSchema = Some(schema),
       partitionCols = partitionColsOf(s, root, cur))
   }
 
@@ -4108,7 +4094,7 @@ object SnapshotTable {
     val drop = rest.filter(e =>
       e.rows.contains(0L) || v1ProvesAll(e, repFilter, pm))
     val rewrite = rest.diff(drop)
-    val schema = storedSchema(s, root, cur)
+    val schema = schemaAt(s, root, cur)
     val incoming =
       if (rewrite.isEmpty) df
       else {
@@ -4124,7 +4110,7 @@ object SnapshotTable {
     val id = commitWithCarried(incoming, root,
       carriedHeadLines(s, root, cur, keep.map(_.path).toSet), cur,
       statsCol, Map("replace.partitions" -> tuples.length.toString),
-      baseSchema = schema, partitionCols = parts)
+      baseSchema = Some(schema), partitionCols = parts)
     (id, drop.size, rewrite.size, keep.size)
   }
 
@@ -4333,8 +4319,9 @@ object SnapshotTable {
       (smallRows + targetRows - 1) / targetRows).toInt
     val statsCols = es.flatMap(_.stats.map(_.col)).distinct
     val parts = partitionColsOf(s, root, cur)
-    val packed0 = readData(s, root, small.map(_.path),
-      storedSchema(s, root, cur), physMapOf(s, root, cur))
+    val schema = schemaAt(s, root, cur)
+    val packed0 = readData(s, root, small.map(_.path), schema,
+      physMapOf(s, root, cur))
     // partitioned staging re-splits by value itself; flat tables pack
     // into the target file count directly
     val packed = if (parts.nonEmpty) packed0 else packed0.repartition(nOut)
@@ -4342,7 +4329,7 @@ object SnapshotTable {
       carriedHeadLines(s, root, cur, large.map(_.path).toSet), cur,
       Some(statsCols.mkString(",")),
       Map("compact.binpack" -> s"$minRows,$targetRows"),
-      storedSchema(s, root, cur), parts)
+      Some(schema), parts)
     (id, small.size, fileList(s, root, id).size - large.size)
   }
 
@@ -4357,17 +4344,14 @@ object SnapshotTable {
     * One manifest read decides; no data IO happens on the no-debt fast
     * path:
     *  - FOLD the deletes ([[rewriteDeletes]]) once EITHER the
-    *    delete-entry count reaches `graft.index.eqdelete.max.files`
-    *    (default 16 — read scans pay at most that many extra broadcast
-    *    probes) OR the small-file count reaches the compaction
-    *    threshold below (bin-packing is what the fold re-opens);
+    *    delete-entry count reaches [[EqDeleteFoldEntries]] OR the
+    *    small-file count reaches [[SmallFileDebt]] (bin-packing is what
+    *    the fold re-opens);
     *  - then BIN-PACK ([[compactSmallFiles]] — large files carry
-    *    verbatim) once at least `graft.index.compact.max.small`
-    *    (default 24; `<= 0` disables) data files hold fewer than
-    *    `graft.index.compact.min.rows` (default 2048) rows, towards
-    *    `graft.index.compact.target.rows` (default 65536) per file.
-    *    Skipped while delete entries are live (packing raw files would
-    *    resurrect deleted rows) or a row count is unknown.
+    *    verbatim) once at least [[SmallFileDebt]] data files hold fewer
+    *    than [[SmallFileRows]] rows, towards [[PackTargetRows]] per
+    *    file. Skipped while delete entries are live (packing raw files
+    *    would resurrect deleted rows) or a row count is unknown.
     * Both commits carry the `stream.*` floors and cross the change feed
     * as empty steps, so maintenance floors, exactly-once sinks and
     * incremental consumers are undisturbed. Returns Some((id, packed,
@@ -4376,23 +4360,36 @@ object SnapshotTable {
   def settleOnDebt(s: SparkSession, root: String): Option[(Long, Int, Int)] = {
     val cur = currentSnapshot(s, root)
     if (cur == 0L) return None
-    val maxSmall = s.conf.get("graft.index.compact.max.small", "24").toInt
-    val minRows = s.conf.get("graft.index.compact.min.rows", "2048").toLong
     def nSmall(es: Seq[FileEntry]): Int =
-      es.count(e => !e.isDelete && e.rows.exists(_ < minRows))
+      es.count(e => !e.isDelete && e.rows.exists(_ < SmallFileRows))
     val es0 = entries(s, root, cur)
     val dels = es0.count(_.isDelete)
-    val maxEq = s.conf.get("graft.index.eqdelete.max.files", "16").toInt
     val es =
-      if (dels > 0 && ((maxEq > 0 && dels >= maxEq) ||
-          (maxSmall > 0 && nSmall(es0) >= maxSmall)))
+      if (dels > 0 &&
+          (dels >= EqDeleteFoldEntries || nSmall(es0) >= SmallFileDebt))
         entries(s, root, rewriteDeletes(s, root))
       else es0
-    if (maxSmall <= 0 || es.exists(_.isDelete) ||
-        !es.forall(_.rows.isDefined) || nSmall(es) < maxSmall) None
-    else Some(compactSmallFiles(s, root, minRows,
-      s.conf.get("graft.index.compact.target.rows", "65536").toLong))
+    if (es.exists(_.isDelete) || !es.forall(_.rows.isDefined) ||
+        nSmall(es) < SmallFileDebt) None
+    else Some(compactSmallFiles(s, root, SmallFileRows, PackTargetRows))
   }
+
+  /** Delete entries a table carries before [[settleOnDebt]] folds them:
+    * a read pays one anti-join per key schema, so the cap bounds the
+    * manifest lines and key files a read lists, not its joins.
+    */
+  private[graft] val EqDeleteFoldEntries = 16
+
+  /** Small data files a table holds before [[settleOnDebt]] bin-packs
+    * them.
+    */
+  private[graft] val SmallFileDebt = 24
+
+  /** Rows below which a data file counts as small for [[settleOnDebt]]. */
+  private val SmallFileRows = 2048L
+
+  /** Rows per file a [[settleOnDebt]] bin-pack aims for. */
+  private val PackTargetRows = 65536L
 
   /** The files of the CURRENT snapshot a merge keyed on `keyCol` would
     * rewrite, decided by range-joining the manifest's per-file

@@ -88,23 +88,26 @@ class AnnIndexSpec extends SparkSpec {
         s"${before.diff(after.toSet)}")
     assert(after.exists(_.startsWith("deletes/eq-")),
       "the delete half must be an equality-delete entry")
-    // fold cadence: threshold 1 settles on the next pass
-    spark.conf.set("graft.index.eqdelete.max.files", "1")
-    try {
-      SnapshotTable.deleteWhere(spark, corpusRoot,
-        Seq(GreaterThan("vec_id", 130L), LessThanOrEqual("vec_id", 140L)))
-      AnnIndex.maintainSq8Index(spark, corpusRoot, indexRoot)
-      assert(!files().exists(_.startsWith("deletes/")),
-        "the settle cadence must fold eq-delete debt")
-      val frozen = AnnIndex.statsOf(spark, indexRoot)
-      assert(SnapshotTable.read(spark, indexRoot)
+    // fold cadence: aged one entry short of the fold with equality
+    // deletes of absent ids (the debt a long-lived index accrues between
+    // folds), the next pass adds the entry that reaches the threshold
+    // and settles it
+    def deleteEntries: Int = files().count(_.startsWith("deletes/"))
+    (deleteEntries until SnapshotTable.EqDeleteFoldEntries - 1).foreach(k =>
+      SnapshotTable.deleteByKeysEq(Seq(-1L - k).toDF("vec_id"), indexRoot))
+    assert(deleteEntries == 15)
+    SnapshotTable.deleteWhere(spark, corpusRoot,
+      Seq(GreaterThan("vec_id", 130L), LessThanOrEqual("vec_id", 140L)))
+    AnnIndex.maintainSq8Index(spark, corpusRoot, indexRoot)
+    assert(deleteEntries == 0, "the settle cadence must fold eq-delete debt")
+    val frozen = AnnIndex.statsOf(spark, indexRoot)
+    assert(SnapshotTable.read(spark, indexRoot)
+      .select(col("vec_id"), col("codes").cast("string"))
+      .as[(Long, String)].collect().sorted.toSeq ==
+      AnnIndex.quantize(SnapshotTable.read(spark, corpusRoot), frozen)
         .select(col("vec_id"), col("codes").cast("string"))
-        .as[(Long, String)].collect().sorted.toSeq ==
-        AnnIndex.quantize(SnapshotTable.read(spark, corpusRoot), frozen)
-          .select(col("vec_id"), col("codes").cast("string"))
-          .as[(Long, String)].collect().sorted.toSeq,
-        "folding the debt must preserve the rows")
-    } finally spark.conf.unset("graft.index.eqdelete.max.files")
+        .as[(Long, String)].collect().sorted.toSeq,
+      "folding the debt must preserve the rows")
   }
 
   test("maintenance is exactly-once (replay = no-op) and a " +

@@ -21,6 +21,26 @@ class Bm25IndexSpec extends SparkSpec {
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft_bm25ix").toString
 
+  private def deleteEntries(root: String): Int = SnapshotTable.fileList(
+    spark, root, SnapshotTable.currentSnapshot(spark, root))
+    .count(_.startsWith("deletes/"))
+
+  /** Tops each of `roots` up to `n` delete entries with equality
+    * deletes of doc ids no row carries, the tables side by side: the
+    * debt a long-lived index accrues between folds, without the passes
+    * that would accrue it.
+    */
+  private def ageTo(roots: Seq[String], n: Int): Unit = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.Duration
+    import spark.implicits._
+    roots.map(root => Future {
+      (deleteEntries(root) until n).foreach(k => SnapshotTable
+        .deleteByKeysEq(Seq(-1L - k).toDF("doc_id"), root))
+    }).foreach(Await.result(_, Duration.Inf))
+  }
+
   test("maintained tf/dl are confluent with a rebuild, and the index " +
       "search equals the from-scratch scorer after churn") {
     import spark.implicits._
@@ -188,19 +208,20 @@ class Bm25IndexSpec extends SparkSpec {
       "the delete half must be an equality-delete entry")
     val (_, diff) = Bm25Index.confluenceAudit(spark, corpusRoot, indexRoot)
     assert(diff == 0L, "reads must apply the eq-delete debt")
-    // fold cadence: with the threshold at 1, the next pass settles the
-    // debt — no delete entries remain and reads stay confluent
-    spark.conf.set("graft.index.eqdelete.max.files", "1")
-    try {
-      SnapshotTable.merge(Seq((3L, "q r")).toDF("doc_id", "text"),
-        corpusRoot, "doc_id")
-      Bm25Index.maintainBm25Index(spark, corpusRoot, indexRoot)
-      assert(!files(tfR).exists(_.startsWith("deletes/")),
-        "the settle cadence must fold eq-delete debt")
-      val (_, diff2) =
-        Bm25Index.confluenceAudit(spark, corpusRoot, indexRoot)
-      assert(diff2 == 0L, "folding the debt must preserve the rows")
-    } finally spark.conf.unset("graft.index.eqdelete.max.files")
+    // fold cadence: aged one entry short of the fold, both tables
+    // carry their debt through the cadence's no-op check; the next
+    // pass adds the entry that reaches the threshold and settles it —
+    // no delete entries remain and reads stay confluent
+    val roots = Seq(tfR, Bm25Index.dlRoot(indexRoot))
+    ageTo(roots, SnapshotTable.EqDeleteFoldEntries - 1)
+    assert(roots.map(deleteEntries) == Seq(15, 15))
+    SnapshotTable.merge(Seq((3L, "q r")).toDF("doc_id", "text"),
+      corpusRoot, "doc_id")
+    Bm25Index.maintainBm25Index(spark, corpusRoot, indexRoot)
+    assert(roots.map(deleteEntries) == Seq(0, 0),
+      "the settle cadence must fold eq-delete debt")
+    val (_, diff2) = Bm25Index.confluenceAudit(spark, corpusRoot, indexRoot)
+    assert(diff2 == 0L, "folding the debt must preserve the rows")
   }
 
   test("compaction cadence: repeated maintenance passes keep the index " +
@@ -215,42 +236,36 @@ class Bm25IndexSpec extends SparkSpec {
     SnapshotTable.commit(docs.repartitionByRange(4, col("doc_id")),
       corpusRoot, statsCol = Some("doc_id"))
     Bm25Index.buildBm25Index(spark, corpusRoot, indexRoot)
-    // aggressive cadence so the debt trigger fires within the spec's
-    // pass budget: every file counts as small, compact at >= 6
-    spark.conf.set("graft.index.compact.max.small", "6")
-    spark.conf.set("graft.index.compact.min.rows", "1000000")
-    spark.conf.set("graft.index.compact.target.rows", "2000000")
-    try {
-      def tfFiles(): Int = SnapshotTable.fileList(spark,
-        Bm25Index.tfRoot(indexRoot),
-        SnapshotTable.currentSnapshot(spark,
-          Bm25Index.tfRoot(indexRoot))).size
-      var maxFiles = 0
-      (1 to 12).foreach { i =>
-        SnapshotTable.merge(
-          spark.range(i * 10L, i * 10L + 10L)
-            .select(col("id").as("doc_id"),
-              concat(lit("rev"), lit(i), lit(" pass"), col("id"))
-                .as("text")),
-          corpusRoot, "doc_id")
-        Bm25Index.maintainBm25Index(spark, corpusRoot, indexRoot)
-        maxFiles = math.max(maxFiles, tfFiles())
-      }
-      // without the cadence each pass leaves +1..2 files forever; with
-      // it the count saw-tooths under (threshold + per-pass delta)
-      assert(maxFiles <= 10,
-        s"tf file count must stay bounded by the debt trigger, saw " +
-          s"$maxFiles")
-      assert(Bm25Index.maintainedThrough(spark, indexRoot) ==
-        SnapshotTable.currentSnapshot(spark, corpusRoot),
-        "the floor must ride the compaction commits")
-      val (_, diff) =
-        Bm25Index.confluenceAudit(spark, corpusRoot, indexRoot)
-      assert(diff == 0L, "compaction is layout-only: confluence holds")
-    } finally {
-      spark.conf.unset("graft.index.compact.max.small")
-      spark.conf.unset("graft.index.compact.min.rows")
-      spark.conf.unset("graft.index.compact.target.rows")
-    }
+    // every index file holds far fewer than 2,048 rows, so each counts
+    // as small; with partition coalescing off each pass appends one tf
+    // file per shuffle partition (4), as a wider churn would, so the
+    // 8-file index reaches the 24-file threshold within a few passes
+    val tfR = Bm25Index.tfRoot(indexRoot)
+    def tfDataFiles(): Int = SnapshotTable.fileList(spark, tfR,
+      SnapshotTable.currentSnapshot(spark, tfR))
+      .count(!_.startsWith("deletes/"))
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    val counts = try (1 to 5).map { i =>
+      SnapshotTable.merge(
+        spark.range(i * 10L, i * 10L + 10L)
+          .select(col("id").as("doc_id"),
+            concat(lit("rev"), lit(i), lit(" pass"), col("id"))
+              .as("text")),
+        corpusRoot, "doc_id")
+      Bm25Index.maintainBm25Index(spark, corpusRoot, indexRoot)
+      tfDataFiles()
+    } finally spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+    // without the cadence each pass leaves 4 more files forever; with
+    // it the count saw-tooths: it never ends a pass at the threshold,
+    // and the pass that reaches it packs everything into one file
+    assert(counts.max < SnapshotTable.SmallFileDebt,
+      s"tf file count must stay under the debt trigger: $counts")
+    assert(counts.contains(1), s"the debt trigger never fired: $counts")
+    assert(Bm25Index.maintainedThrough(spark, indexRoot) ==
+      SnapshotTable.currentSnapshot(spark, corpusRoot),
+      "the floor must ride the compaction commits")
+    val (_, diff) =
+      Bm25Index.confluenceAudit(spark, corpusRoot, indexRoot)
+    assert(diff == 0L, "compaction is layout-only: confluence holds")
   }
 }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.sources.{GreaterThan, LessThanOrEqual}
+import org.apache.spark.sql.sources.{EqualTo, GreaterThan, LessThanOrEqual}
 
 import graft.SparkSpec
 
@@ -88,6 +88,26 @@ class SnapshotColumnMappingSpec extends SparkSpec {
     assert(SnapshotTable.read(spark, root)
       .filter(col("key") <= 10L).count() == 0L)
     assert(touched >= 1)
+  }
+
+  test("a merge-on-read delete on a renamed column marks its rows: the " +
+      "marking scan reads under the mapping, and the change feed's D " +
+      "row carries the new name") {
+    import spark.implicits._
+    val root = tmpRoot("mordel")
+    SnapshotTable.commit((1L to 10L).map(k => (k, s"r$k")).toDF("k", "v")
+      .coalesce(1), root, statsCol = Some("k"))
+    val renamed = SnapshotTable.renameColumn(spark, root, "v", "label")
+    val (id, dropped, marked, carried) = SnapshotTable.deleteWhereMor(
+      spark, root, Seq(EqualTo("label", "r3")))
+    assert((dropped, marked, carried) == (0, 1, 0),
+      s"dropped $dropped, marked $marked, carried $carried")
+    val live = SnapshotTable.read(spark, root)
+    assert(live.count() == 9L)
+    assert(live.filter(col("label") === "r3").count() == 0L)
+    assert(SnapshotTable.changeFeed(spark, root, renamed, id)
+      .filter(col("_op") === "D").select("k", "label").as[(Long, String)]
+      .collect().toSeq == Seq((3L, "r3")))
   }
 
   test("drop is metadata-only and retires the physical name: the " +

@@ -19,7 +19,7 @@ import graft.SparkSpec
   *    on the vanished name);
   *  - reserved merge-on-read working column names refuse at commit;
   *  - the forced delete-state broadcasts carry a size guardrail
-  *    (`graft.snapshot.delete.broadcast.max.rows`) with a
+  *    (5,000,000 delete rows, `DeleteBroadcastMaxRows`) with a
   *    shuffle-join fallback producing identical rows;
   *  - [[SnapshotTable.deleteByKeys]] — the join-form keyed COW delete
   *    whose key set never visits the driver — equals the
@@ -162,49 +162,54 @@ class SnapshotRound13Spec extends SparkSpec {
   test("delete-state broadcast guardrail: past the row threshold the " +
       "anti-joins drop the hint (no forced broadcast in the plan) and " +
       "return identical rows") {
+    // the threshold is 5,000,000 delete rows: a delete side of exactly
+    // that many keeps the hint, one row more drops it, for reads and
+    // deleteWhereMor's marking scan alike
     import spark.implicits._
-    val rootDv = s"${tmp()}/dv"
-    val rootEq = s"${tmp()}/eq"
-    SnapshotTable.commit(spark.range(0, 100).select(
-      col("id").as("k"), (col("id") * 2).as("v")), rootDv,
-      statsCol = Some("k"))
-    SnapshotTable.deleteWhereMor(spark, rootDv,
-      Seq(org.apache.spark.sql.sources.LessThan("k", 10L)))
-    SnapshotTable.commit(spark.range(0, 100).select(
-      col("id").as("k"), (col("id") * 2).as("v")), rootEq,
-      statsCol = Some("k"))
-    SnapshotTable.upsertEq(
-      spark.range(0, 10).select(col("id").as("k"),
-        (col("id") * 7).as("v")), rootEq, Seq("k"))
+    val bound = 5000000L
     val prevAuto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
-      // isolate the HINT: disable size-based broadcast so the plan
-      // shape reflects exactly whether the guardrail kept it
+      // isolate the HINT: disable size-based broadcast, so a shuffle
+      // join in the plan means exactly that the guardrail dropped it
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // the DV read plan has exactly one join (the vector anti-join),
-      // so operator presence alone identifies the hint's effect
-      def dvPlanHasBroadcastAnti: Boolean =
-        SnapshotTable.read(spark, rootDv).queryExecution.sparkPlan
-          .toString.contains("BroadcastHashJoin")
-      spark.conf.unset("graft.snapshot.delete.broadcast.max.rows")
-      val hinted = SnapshotTable.read(spark, rootDv)
-        .orderBy("k").collect().toSeq
-      assert(dvPlanHasBroadcastAnti, "delta-sized debt must broadcast")
-      val hintedEq = SnapshotTable.read(spark, rootEq)
-        .orderBy("k").collect().toSeq
-      spark.conf.set("graft.snapshot.delete.broadcast.max.rows", "0")
-      assert(!dvPlanHasBroadcastAnti,
-        "past-threshold debt must not force a broadcast")
-      assert(SnapshotTable.read(spark, rootDv)
-        .orderBy("k").collect().toSeq == hinted)
-      assert(SnapshotTable.read(spark, rootEq)
-        .orderBy("k").collect().toSeq == hintedEq)
-      assert(hinted.size == 90 && hintedEq.size == 100)
-      assert(hintedEq.count(_.getLong(1) % 7 == 0) >= 10)
-    } finally {
-      spark.conf.unset("graft.snapshot.delete.broadcast.max.rows")
+      def shuffles(root: String): Boolean =
+        SnapshotTable.read(spark, root).queryExecution.sparkPlan
+          .toString.contains("SortMergeJoin")
+      // equality deletes: 5,000,000 key rows, then one more
+      val rootEq = s"${tmp()}/eq"
+      SnapshotTable.commit(spark.range(0, 100).select(
+        col("id").as("k"), (col("id") * 2).as("v")), rootEq,
+        statsCol = Some("k"))
+      SnapshotTable.deleteByKeysEq(
+        spark.range(1000, 1000 + bound).select(col("id").as("k")), rootEq)
+      assert(!shuffles(rootEq), "a delete side at the bound must broadcast")
+      SnapshotTable.deleteByKeysEq(Seq(7L).toDF("k"), rootEq)
+      assert(shuffles(rootEq), "past the bound the hint must drop")
+      assert(SnapshotTable.read(spark, rootEq).select("k").as[Long]
+        .collect().sorted.toSeq == (0L until 100L).filter(_ != 7L))
+      // delete vectors: `g` carries no stats, so every file is
+      // ambiguous and all 5,000,001 g = 0 rows land in one vector
+      val rootDv = s"${tmp()}/dv"
+      SnapshotTable.commit(spark.range(0, bound + 1).select(
+        col("id").as("k"), lit(0).as("g")), rootDv, statsCol = Some("k"))
+      SnapshotTable.commit(spark.range(bound + 1, bound + 11, 1, 1).select(
+        col("id").as("k"), lit(1).as("g")), rootDv, statsCol = Some("k"))
+      SnapshotTable.deleteWhereMor(spark, rootDv,
+        Seq(org.apache.spark.sql.sources.EqualTo("g", 0)))
+      assert(shuffles(rootDv), "past the bound the hint must drop")
+      // the next delete's marking scan joins the 10-row file against
+      // that vector: it must mark exactly the one matching row
+      val (_, dropped, marked, _) = SnapshotTable.deleteWhereMor(
+        spark, rootDv,
+        Seq(org.apache.spark.sql.sources.EqualTo("k", bound + 3)))
+      assert(dropped == 0 && marked == 1, s"dropped $dropped, marked $marked")
+      // a read filtered to the 10-row file's keys: its anti-join still
+      // takes the whole 5,000,002-row vector side
+      assert(SnapshotTable.read(spark, rootDv).where(col("k") > bound)
+        .select("k").as[Long].collect().sorted.toSeq ==
+        ((bound + 1) to (bound + 10)).filter(_ != bound + 3))
+    } finally
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
-    }
   }
 
   test("deleteByKeys (join form, no driver key collect) equals " +

@@ -13,6 +13,14 @@ class SnapshotRound15Spec extends SparkSpec {
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft_r15").toString
 
+  /** (data files, delete entries) of `root`'s head. */
+  private def headFiles(root: String): (Int, Int) = {
+    val (dels, data) = SnapshotTable.fileList(spark, root,
+      SnapshotTable.currentSnapshot(spark, root))
+      .partition(_.startsWith("deletes/"))
+    (data.size, dels.size)
+  }
+
   private def seed(root: String, n: Long): Unit = {
     SnapshotTable.commit(
       spark.range(0, n).select(col("id").as("k")), root)
@@ -89,64 +97,55 @@ class SnapshotRound15Spec extends SparkSpec {
       "the file count under the debt bound; exactly-once floor, rows, " +
       "and the change feed are undisturbed") {
     val root = s"${tmp()}/t"
-    // keep the spec fast: fire after 8 small files instead of 24
-    spark.conf.set("graft.index.compact.max.small", "8")
-    try {
-      val w = SnapshotStreamSink.writer(root, "cad", statsCol = Some("k"))
-      var maxFiles = 0
-      (0 until 60).foreach { b =>
-        w(spark.range(b * 10L, b * 10L + 10L)
-          .select(col("id").as("k")).repartition(2), b.toLong)
-        maxFiles = math.max(maxFiles,
-          SnapshotTable.fileList(spark, root,
-            SnapshotTable.currentSnapshot(spark, root)).size)
-      }
-      // without the cadence 60 batches x 2 partitions = 120 files;
-      // with it the count saw-tooths under threshold + batch size
-      assert(maxFiles <= 12,
-        s"file count not bounded by the cadence: max=$maxFiles")
-      assert(SnapshotTable.read(spark, root).count() == 600L)
-      // floor survived the interleaved compaction commits: redelivery
-      // of the last batch id is still a no-op for a FRESH writer (the
-      // recovery scan reads the carried stream.* props)
-      val head = SnapshotTable.currentSnapshot(spark, root)
-      assert(SnapshotStreamSink.lastCommittedBatch(spark, root, "cad") == 59L)
-      val w2 = SnapshotStreamSink.writer(root, "cad")
-      w2(spark.range(0, 5).select(col("id").as("k")), 59L)
-      assert(SnapshotTable.currentSnapshot(spark, root) == head)
-      // the row-level change feed crosses the compactions as empty
-      // steps: summed A rows equal exactly what the stream appended
-      val ops = SnapshotTable.changeFeed(spark, root, 0L, head)
-        .groupBy("_op").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(ops == Map("A" -> 600L), s"unexpected feed ops: $ops")
-    } finally spark.conf.unset("graft.index.compact.max.small")
+    val w = SnapshotStreamSink.writer(root, "cad", statsCol = Some("k"))
+    val counts = (0 until 60).map { b =>
+      w(spark.range(b * 10L, b * 10L + 10L)
+        .select(col("id").as("k")).repartition(2), b.toLong)
+      headFiles(root)
+    }
+    // without the cadence 60 batches x 2 partitions = 120 files; with
+    // it no batch ends at the 24-small-file threshold, and the batch
+    // that reaches it packs everything into one file
+    assert(counts.map(_._1).max < SnapshotTable.SmallFileDebt,
+      s"file count not bounded by the cadence: $counts")
+    assert(counts.map(_._1).contains(1), s"the cadence never fired: $counts")
+    assert(SnapshotTable.read(spark, root).count() == 600L)
+    // floor survived the interleaved compaction commits: redelivery
+    // of the last batch id is still a no-op for a FRESH writer (the
+    // recovery scan reads the carried stream.* props)
+    val head = SnapshotTable.currentSnapshot(spark, root)
+    assert(SnapshotStreamSink.lastCommittedBatch(spark, root, "cad") == 59L)
+    val w2 = SnapshotStreamSink.writer(root, "cad")
+    w2(spark.range(0, 5).select(col("id").as("k")), 59L)
+    assert(SnapshotTable.currentSnapshot(spark, root) == head)
+    // the row-level change feed crosses the compactions as empty
+    // steps: summed A rows equal exactly what the stream appended
+    val ops = SnapshotTable.changeFeed(spark, root, 0L, head)
+      .groupBy("_op").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(ops == Map("A" -> 600L), s"unexpected feed ops: $ops")
   }
 
   test("upsert sink gets the same cadence: merge-heavy batches do not " +
       "accrete fragments past the bound") {
     val root = s"${tmp()}/t"
-    spark.conf.set("graft.index.compact.max.small", "8")
-    try {
-      val w = SnapshotStreamSink.upsertWriter(root, "up", "k")
-      var maxFiles = 0
-      (0 until 40).foreach { b =>
-        // rolling window: half fresh keys, half rewrites of earlier ones
-        w(spark.range(b * 5L, b * 5L + 10L)
-          .select(col("id").as("k"), lit(b).as("v")).repartition(2),
-          b.toLong)
-        maxFiles = math.max(maxFiles,
-          SnapshotTable.fileList(spark, root,
-            SnapshotTable.currentSnapshot(spark, root)).size)
-      }
-      assert(maxFiles <= 12,
-        s"upsert sink file count not bounded: max=$maxFiles")
-      // last-wins semantics intact across compactions
-      val out = SnapshotTable.read(spark, root)
-      assert(out.count() == 205L) // keys 0..204
-      // k=100 is written by batch 19 (95..104) then batch 20 (100..109)
-      assert(out.filter(col("k") === 100L).select("v").head().getInt(0) == 20)
-    } finally spark.conf.unset("graft.index.compact.max.small")
+    val w = SnapshotStreamSink.upsertWriter(root, "up", "k")
+    val counts = (0 until 40).map { b =>
+      // rolling window: half fresh keys, half rewrites of earlier ones
+      w(spark.range(b * 5L, b * 5L + 10L)
+        .select(col("id").as("k"), lit(b).as("v")).repartition(2),
+        b.toLong)
+      headFiles(root)
+    }
+    assert(counts.map(_._1).max < SnapshotTable.SmallFileDebt &&
+      counts.map(_._2).max < SnapshotTable.EqDeleteFoldEntries,
+      s"upsert sink debt not bounded: $counts")
+    assert(counts.map(_._1).contains(1), s"the cadence never fired: $counts")
+    // last-wins semantics intact across compactions
+    val out = SnapshotTable.read(spark, root)
+    assert(out.count() == 205L) // keys 0..204
+    // k=100 is written by batch 19 (95..104) then batch 20 (100..109)
+    assert(out.filter(col("k") === 100L).select("v").head().getInt(0) == 20)
   }
 
   test("group publishes AUTO-TAG their pins: readAll survives an " +
@@ -191,59 +190,61 @@ class SnapshotRound15Spec extends SparkSpec {
   test("manifest_report is an EXACT dry-run of rewrite_manifests, " +
       "Scala and CALL surfaces") {
     val root = s"${tmp()}/t"
-    // low shard threshold so a handful of commits accrete shards
-    spark.conf.set("graft.snapshot.manifest.shard.min.lines", "4")
-    spark.conf.set("graft.snapshot.manifest.fold.max.refs", "0") // no auto-fold
-    try {
-      (0 until 12).foreach(i => SnapshotTable.commit(
-        spark.range(i * 100L, i * 100L + 100L).select(col("id").as("k"))
-          .repartition(6), root, statsCol = Some("k")))
-      val (now, after, nRefs, nSmall, nInline, would) =
-        SnapshotTable.manifestReport(spark, root, targetLines = 64)
-      assert(would, "12 six-file commits must leave something to fold")
-      assert(nRefs > 0 && nSmall > 0)
-      assert(after < now, s"advisor predicts no shrink: $now -> $after")
-      // the advisor's prediction equals what the fold actually does
-      val (_, before2, after2) =
-        SnapshotTable.rewriteManifests(spark, root, targetLines = 64)
-      assert(before2 == now, s"head drifted: advisor $now, fold $before2")
-      assert(after2 == after,
-        s"advisor predicted $after lines, fold produced $after2")
-      // post-fold the advisor reports minimal — the loop is closed
-      val r2 = SnapshotTable.manifestReport(spark, root, 64)
-      assert(!r2._6 && r2._1 == after2, s"post-fold report: $r2")
-      // a target BELOW shard.min.lines (full chunks inline, not
-      // sharded): the advisor must still match the fold exactly
-      val (now3, after3, _, _, _, would3) =
-        SnapshotTable.manifestReport(spark, root, targetLines = 2)
-      if (would3) {
-        val (_, before4, after4) =
-          SnapshotTable.rewriteManifests(spark, root, targetLines = 2)
-        assert(before4 == now3 && after4 == after3,
-          s"sub-shardMin advisor drift: predicted $now3->$after3, " +
-            s"fold did $before4->$after4")
-      }
-      assert(SnapshotTable.read(spark, root).count() == 1200L)
-      // the SQL surface returns the same row shape
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_r15_wh").toString
-      spark.conf.set("spark.sql.catalog.r15adv",
-        classOf[SnapshotCatalog].getName)
-      spark.conf.set("spark.sql.catalog.r15adv.warehouse", wh)
-      spark.sql("CREATE NAMESPACE IF NOT EXISTS r15adv.db")
-      spark.sql("CREATE TABLE r15adv.db.adv (k BIGINT)")
-      (0 until 6).foreach(i => spark.sql(
-        s"INSERT INTO r15adv.db.adv SELECT id FROM range(${i * 10}, ${i * 10 + 10})"))
-      val row = spark.sql(
-        "CALL r15adv.system.manifest_report('db.adv', 64)").head
-      val (n2, a2, _, _, _, w2) = SnapshotTable.manifestReport(
-        spark, s"$wh/db/adv", 64)
-      assert(row.getInt(0) == n2 && row.getInt(1) == a2 &&
-        row.getInt(5) == (if (w2) 1 else 0))
-    } finally {
-      spark.conf.unset("graft.snapshot.manifest.shard.min.lines")
-      spark.conf.unset("graft.snapshot.manifest.fold.max.refs")
+    def commitFiles(from: Long, n: Int): Unit = {
+      SnapshotTable.commit(spark.range(from, from + n, 1, n)
+        .select(col("id").as("k")), root, statsCol = Some("k"))
+      ()
     }
+    // a commit's inline entries move into a shard only past 32 lines:
+    // 32 one-row files stay inline, and nothing is left to fold
+    commitFiles(0L, 32)
+    val r0 = SnapshotTable.manifestReport(spark, root, targetLines = 100)
+    assert(r0 == (32, 32, 0, 0, 32, false), s"32 inline lines: $r0")
+    // two 33-file commits: the first shards the 65 inline lines, the
+    // second its own 33; the 98 lines fold at 100 into one shard
+    (0 until 2).foreach(i => commitFiles(100L + i * 100L, 33))
+    val (now, after, nRefs, nSmall, nInline, would) =
+      SnapshotTable.manifestReport(spark, root, targetLines = 100)
+    assert(would, "two small shards must leave something to fold")
+    assert((now, after, nRefs, nSmall, nInline) == (2, 1, 2, 2, 0),
+      s"advisor: $now -> $after, $nRefs refs ($nSmall small), $nInline inline")
+    // the advisor's prediction equals what the fold actually does
+    val (_, before2, after2) =
+      SnapshotTable.rewriteManifests(spark, root, targetLines = 100)
+    assert(before2 == now, s"head drifted: advisor $now, fold $before2")
+    assert(after2 == after,
+      s"advisor predicted $after lines, fold produced $after2")
+    // post-fold the advisor reports minimal — the loop is closed
+    val r2 = SnapshotTable.manifestReport(spark, root, 100)
+    assert(!r2._6 && r2._1 == after2, s"post-fold report: $r2")
+    // a target BELOW the 32-line shard minimum (full chunks inline,
+    // not sharded): the advisor must still match the fold exactly
+    val (now3, after3, _, _, _, would3) =
+      SnapshotTable.manifestReport(spark, root, targetLines = 2)
+    if (would3) {
+      val (_, before4, after4) =
+        SnapshotTable.rewriteManifests(spark, root, targetLines = 2)
+      assert(before4 == now3 && after4 == after3,
+        s"sub-shardMin advisor drift: predicted $now3->$after3, " +
+          s"fold did $before4->$after4")
+    }
+    assert(SnapshotTable.read(spark, root).count() == 98L)
+    // the SQL surface returns the same row shape
+    val wh = java.nio.file.Files
+      .createTempDirectory("graft_r15_wh").toString
+    spark.conf.set("spark.sql.catalog.r15adv",
+      classOf[SnapshotCatalog].getName)
+    spark.conf.set("spark.sql.catalog.r15adv.warehouse", wh)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS r15adv.db")
+    spark.sql("CREATE TABLE r15adv.db.adv (k BIGINT)")
+    (0 until 6).foreach(i => spark.sql(
+      s"INSERT INTO r15adv.db.adv SELECT id FROM range(${i * 10}, ${i * 10 + 10})"))
+    val row = spark.sql(
+      "CALL r15adv.system.manifest_report('db.adv', 64)").head
+    val (n2, a2, _, _, _, w2) = SnapshotTable.manifestReport(
+      spark, s"$wh/db/adv", 64)
+    assert(row.getInt(0) == n2 && row.getInt(1) == a2 &&
+      row.getInt(5) == (if (w2) 1 else 0))
   }
 
   test("group-consistent reads RACING aggressive expire: every readAll " +
