@@ -19,10 +19,12 @@ object TeraQueries {
     math.max(10000L, (sf * 1e7).toLong)
   }
 
-  /** Sort partitions for `n` records. Spill-aware: each holds under
-    * ~64 MB of raw records, so the per-task working set fits executor
-    * memory at any scale (empirically: 10 GB / 128 partitions OOMs an
-    * 8g heap; /512 sails through).
+  /** Sort partitions for `n` records: each holds under ~64 MB of raw
+    * records. A sort task holds its whole partition in memory, about
+    * `RecordLen + 12` bytes per record with no spill
+    * ([[graft.tera.TeraSort.sortRdd]]), so this rule bounds one task's
+    * heap at about 72 MB at any scale; more records mean more
+    * partitions, never a bigger task.
     */
   private[graft] def sortPartitions(s: SparkSession, n: Long): Int =
     math.max(s.sparkContext.defaultParallelism,

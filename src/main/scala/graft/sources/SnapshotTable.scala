@@ -482,7 +482,8 @@ object SnapshotTable {
       refs, inline, targetLines, commitId)
     val id = metadataOnlyCommit(s, root, cur, schemaAt(s, root, cur),
       Map("maintenance" -> "rewrite_manifests"), Some(folded))
-    (id, head.size, folded.size)
+    // the commit may shard the folded inline lines: report its head
+    (id, head.size, headEntryLines(s, root, id).size)
   }
 
   /** DRY-RUN of [[rewriteManifests]] — the advisor that closes the
@@ -528,9 +529,13 @@ object SnapshotTable {
         // lines stay inline — the same (full, tail) split as
         // consolidateShards'; with targetLines below ShardMinLines even
         // full chunks inline
-        def linesOf(chunk: Int): Int = if (chunk >= ShardMinLines) 1 else chunk
-        (refs.size - smallRefs.size) + nChunks * linesOf(targetLines) +
-          (if (tail == 0) 0 else linesOf(tail))
+        def shards(chunk: Int): Int = if (chunk >= ShardMinLines) 1 else 0
+        val inlined = (if (shards(targetLines) == 0) nChunks * targetLines else 0) +
+          (if (shards(tail) == 0) tail else 0)
+        // ...and the fold's commit moves more than ShardMinLines inline
+        // lines into one shard, as every commit does
+        (refs.size - smallRefs.size) + nChunks * shards(targetLines) +
+          shards(tail) + (if (inlined > ShardMinLines) 1 else inlined)
       }
     (head.size, after, refs.size, smallRefs.size, inline.size, wouldFold)
   }

@@ -52,7 +52,8 @@ object TeraIO {
         classOf[BytesWritable],
         conf)
       .map { case (_, rec) =>
-        val bytes = rec.copyBytes()
+        // the reader reuses `rec`'s buffer: slice both halves out of it
+        val bytes = rec.getBytes
         (java.util.Arrays.copyOfRange(bytes, 0, TeraGen.KeyLen),
           java.util.Arrays.copyOfRange(bytes, TeraGen.KeyLen, TeraGen.RecordLen))
       }

@@ -217,17 +217,34 @@ class SnapshotRound15Spec extends SparkSpec {
     // post-fold the advisor reports minimal — the loop is closed
     val r2 = SnapshotTable.manifestReport(spark, root, 100)
     assert(!r2._6 && r2._1 == after2, s"post-fold report: $r2")
+    // a head written before manifests were sharded lists every entry
+    // inline, and readers take it as is: rewrite the folded head in that
+    // form, 98 inline lines where a commit leaves at most 32
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def linesAt(name: String): Seq[String] = {
+      val in = fs.open(new org.apache.hadoop.fs.Path(s"$root/_manifests/$name"))
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
+      finally in.close()
+    }
+    val headName = s"v${SnapshotTable.currentSnapshot(spark, root)}.manifest"
+    val flat = linesAt(headName).flatMap(l =>
+      if (l.startsWith("#shard ")) linesAt(l.stripPrefix("#shard ").trim) else Seq(l))
+    val out = fs.create(new org.apache.hadoop.fs.Path(s"$root/_manifests/$headName"), true)
+    try out.write(flat.mkString("\n").getBytes("UTF-8")) finally out.close()
     // a target BELOW the 32-line shard minimum (full chunks inline,
     // not sharded): the advisor must still match the fold exactly
-    val (now3, after3, _, _, _, would3) =
+    val (now3, after3, _, _, nInline3, would3) =
       SnapshotTable.manifestReport(spark, root, targetLines = 2)
-    if (would3) {
-      val (_, before4, after4) =
-        SnapshotTable.rewriteManifests(spark, root, targetLines = 2)
-      assert(before4 == now3 && after4 == after3,
-        s"sub-shardMin advisor drift: predicted $now3->$after3, " +
-          s"fold did $before4->$after4")
-    }
+    assert(would3 && now3 == 98 && nInline3 == 98,
+      s"98 inline lines must leave something to fold at target 2: $now3 lines")
+    val (_, before4, after4) =
+      SnapshotTable.rewriteManifests(spark, root, targetLines = 2)
+    assert(before4 == now3 && after4 == after3,
+      s"sub-shardMin advisor drift: predicted $now3->$after3, " +
+        s"fold did $before4->$after4")
+    val r4 = SnapshotTable.manifestReport(spark, root, targetLines = 2)
+    assert(r4._1 == after4 && !r4._6, s"post-fold report at target 2: $r4")
     assert(SnapshotTable.read(spark, root).count() == 98L)
     // the SQL surface returns the same row shape
     val wh = java.nio.file.Files

@@ -52,6 +52,79 @@ class TeraSuiteSpec extends SparkSpec {
     assert(keys.map(hex).toSeq == rddKeys.map(hex).toSeq)
   }
 
+  /** Sorts `recs` with `sortRdd` and checks the result against a driver-side
+    * `byteArrayOrdering` sort that carries the values along: the same keys
+    * in the same order, the same (key, value) pairs, a valid total order.
+    * Records with equal keys may come out in any order.
+    */
+  private def assertSortsLikeDriver(recs: Seq[(Array[Byte], Array[Byte])],
+      partitions: Int): Unit = {
+    val sorted = TeraSort.sortRdd(spark.sparkContext.parallelize(recs, 3), partitions)
+    val got = sorted.collect()
+    val want = recs.sortBy(_._1)(TeraSort.byteArrayOrdering)
+    assert(got.map(r => hex(r._1)).toSeq == want.map(r => hex(r._1)))
+    def pairs(rs: Seq[(Array[Byte], Array[Byte])]) =
+      rs.map(r => hex(r._1) + hex(r._2)).sorted
+    assert(pairs(got.toSeq) == pairs(want), "values must travel with their keys")
+    val res = TeraValidate.validate(sorted)
+    assert(res.ok && res.records == recs.size, res.toString)
+  }
+
+  private def record(key: Array[Byte], tag: Int): (Array[Byte], Array[Byte]) =
+    (key, Array.tabulate[Byte](TeraGen.ValueLen)(i => (tag >>> (8 * (i % 4))).toByte))
+
+  test("RDD terasort: keys equal in their first 8 bytes order by bytes 8-9") {
+    val rnd = new scala.util.Random(11)
+    val prefix = Array.fill[Byte](8)(rnd.nextInt().toByte)
+    val recs = (0 until 3000).map { i =>
+      record(prefix ++ Array.fill[Byte](2)(rnd.nextInt().toByte), i)
+    }
+    assertSortsLikeDriver(recs, 1)
+    assertSortsLikeDriver(recs, 4)
+  }
+
+  test("RDD terasort: duplicate keys keep each of their values") {
+    val rnd = new scala.util.Random(12)
+    val keys = Array.fill(7)(Array.fill[Byte](TeraGen.KeyLen)(rnd.nextInt().toByte))
+    assertSortsLikeDriver((0 until 700).map(i => record(keys(i % 7).clone(), i)), 3)
+  }
+
+  test("RDD terasort: the all-0x00 and all-0xFF keys land at the ends") {
+    val rnd = new scala.util.Random(13)
+    val lo = Array.fill[Byte](TeraGen.KeyLen)(0)
+    val hi = Array.fill[Byte](TeraGen.KeyLen)(-1)
+    val edges = Seq(lo, hi, lo.updated(9, 1.toByte), hi.updated(9, 0xfe.toByte),
+      lo.updated(0, 0x80.toByte), hi.updated(0, 0x7f.toByte))
+    val recs = (edges ++ Seq.fill(500)(Array.fill[Byte](TeraGen.KeyLen)(rnd.nextInt().toByte)) ++
+      edges.map(_.clone())).zipWithIndex.map { case (k, i) => record(k, i) }
+    assertSortsLikeDriver(recs, 1)
+    assertSortsLikeDriver(recs, 5)
+    val parts = TeraSort.sortRdd(spark.sparkContext.parallelize(recs, 2), 5)
+      .glom().collect()
+    assert(hex(parts.head.head._1) == hex(lo), "all-0x00 key opens partition 0")
+    assert(hex(parts.last.last._1) == hex(hi), "all-0xFF key closes the last partition")
+  }
+
+  test("RDD terasort: more partitions than records") {
+    val recs = TeraGen.records(spark, 5, 1).collect().toSeq
+    assertSortsLikeDriver(recs, 16)
+    assert(TeraSort.sortRdd(spark.sparkContext.parallelize(recs, 2), 16)
+      .getNumPartitions == 16)
+  }
+
+  test("a partition too large for one sort buffer refuses, naming its record count") {
+    val max = TeraSort.MaxPartitionRecords
+    TeraSort.checkPartitionRecords(max)
+    val e = intercept[IllegalArgumentException](TeraSort.checkPartitionRecords(max + 1L))
+    assert(e.getMessage.contains(s"${max + 1L} records") &&
+      e.getMessage.contains("more partitions"), e.getMessage)
+    // the packed key keeps 64 - indexBits bits of the key prefix above a
+    // record index that must reach every record of the partition
+    assert(Seq(1, 2, 3, 4, 5, 1 << 18, (1 << 18) + 1, max).map(TeraSort.indexBits) ==
+      Seq(0, 1, 2, 2, 3, 18, 19, 31))
+    assert((max - 1).toLong < (1L << TeraSort.indexBits(max)))
+  }
+
   test("prefix range partitioner is monotone and in-bounds") {
     val p = new TeraSort.PrefixRangePartitioner(13)
     val lo = Array.fill[Byte](10)(0)

@@ -48,6 +48,22 @@ object U128Props extends Properties("U128") {
         Prop(if (c < 0) b1 <= b2 else if (c > 0) b1 >= b2 else b1 == b2) :| s"$b1 vs $b2"
     }
 
+  property("partition sort orders keys sharing a 0-10 byte prefix") =
+    forAll(Gen.choose(0, 10), Gen.choose(0, 300), Gen.long) { (shared, n, seed) =>
+      val rnd = new scala.util.Random(seed)
+      val prefix = Array.fill[Byte](shared)(rnd.nextInt().toByte)
+      val recs = Seq.tabulate(n) { i =>
+        (prefix ++ Array.fill[Byte](TeraGen.KeyLen - shared)(rnd.nextInt().toByte),
+          Array.fill[Byte](TeraGen.ValueLen)(i.toByte))
+      }
+      def hex(b: Array[Byte]) = b.map("%02x".format(_)).mkString
+      val got = TeraSort.sortPartition(recs.iterator).toSeq
+      val want = recs.sortBy(_._1)(TeraSort.byteArrayOrdering)
+      Prop(got.map(r => hex(r._1)) == want.map(r => hex(r._1)) &&
+        got.map(r => hex(r._1 ++ r._2)).sorted == want.map(r => hex(r._1 ++ r._2)).sorted) :|
+        s"$shared shared bytes, $n records"
+    }
+
   property("elf hash stays in partition range") =
     forAll(Gen.choose(1, 100), Gen.listOf(Gen.choose(0, 255))) { (parts, bytes) =>
       val bucket = new graft.core.ElfHashPartitioner(parts)
