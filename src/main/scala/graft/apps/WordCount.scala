@@ -32,21 +32,54 @@ object WordCount {
       .groupBy("word")
       .agg(count(lit(1)).as("cnt"))
 
+  /** The words of one line, upper-cased: the maximal `[A-Z]+` runs of
+    * `line.toUpperCase` with at least [[MinLetters]] letters. Like Spark's
+    * `upper`, an all-ASCII line takes a fast path — one scan for
+    * `[A-Za-z]` runs, each upper-cased on its own — and any other line
+    * the `toUpperCase.split` path, where e.g. `ß` upper-cases to `SS`.
+    */
+  def words(line: String): Iterator[String] =
+    if (line.forall(_ < 0x80)) asciiWords(line)
+    else line.toUpperCase.split("[^A-Z]+").iterator.filter(_.length >= MinLetters)
+
+  private def asciiWords(line: String): Iterator[String] = new Iterator[String] {
+    private def isLetter(ch: Char) = (ch | 0x20) >= 'a' && (ch | 0x20) <= 'z'
+    private var start, end = 0 // the next word is line(start until end)
+    seek()
+
+    private def seek(): Unit = {
+      start = end
+      while (start < line.length) {
+        while (start < line.length && !isLetter(line.charAt(start))) start += 1
+        end = start
+        while (end < line.length && isLetter(line.charAt(end))) end += 1
+        if (end - start >= MinLetters) return
+        start = end
+      }
+    }
+
+    def hasNext: Boolean = start < line.length
+    def next(): String = {
+      if (!hasNext) Iterator.empty.next()
+      val w = new Array[Char](end - start)
+      var i = 0
+      while (i < w.length) { w(i) = (line.charAt(start + i) & 0xDF).toChar; i += 1 }
+      seek()
+      new String(w)
+    }
+  }
+
   /** MapReduce-contract flavor: flatMap emit (word, 1) → combiner sums. */
   def countWordsMR(lines: RDD[String]): RDD[(String, Long)] =
-    MapReduceJob(lines) { line =>
-      line.toUpperCase.split("[^A-Z]+").iterator
-        .filter(_.length >= MinLetters)
-        .map(w => (w, 1L))
-    }.withCombiner(_ + _)
+    MapReduceJob(lines)(words(_).map(w => (w, 1L)))
+      .withCombiner(_ + _)
       .reduceByKeyToRdd(_ + _)
 
   /** Typed-Dataset flavor. */
   def countWordsDs(lines: Dataset[String]): Dataset[(String, Long)] = {
     val spark = lines.sparkSession
     import spark.implicits._
-    lines.flatMap(_.toUpperCase.split("[^A-Z]+"))
-      .filter(_.length >= MinLetters)
+    lines.flatMap(words)
       .groupByKey(identity)
       .count()
   }

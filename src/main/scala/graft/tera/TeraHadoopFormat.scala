@@ -1,7 +1,5 @@
 package graft.tera
 
-import java.io.DataOutputStream
-
 import org.apache.hadoop.fs.{FileStatus, FSDataInputStream}
 import org.apache.hadoop.mapreduce.{InputSplit, JobContext, RecordReader,
   RecordWriter, TaskAttemptContext}
@@ -83,6 +81,9 @@ class TeraInputFormat extends FileInputFormat[Array[Byte], Array[Byte]] {
 
 /** key(10) ‖ value(90) back to raw 100-byte records: the write half of
   * the verbatim-port surface, and the format [[TeraIO.write]] uses.
+  * Records are copied into a private buffer and reach the file stream
+  * one [[TeraOutputFormat.BufferBytes]] buffer at a time, not as two
+  * stream calls per record.
   */
 class TeraOutputFormat extends FileOutputFormat[Array[Byte], Array[Byte]] {
   override def getRecordWriter(ctx: TaskAttemptContext)
@@ -90,12 +91,27 @@ class TeraOutputFormat extends FileOutputFormat[Array[Byte], Array[Byte]] {
     val file = getDefaultWorkFile(ctx, "")
     val out = file.getFileSystem(ctx.getConfiguration).create(file, false)
     new RecordWriter[Array[Byte], Array[Byte]] {
-      private val stream = new DataOutputStream(out)
-      override def write(key: Array[Byte], value: Array[Byte]): Unit = {
-        stream.write(key)
-        stream.write(value)
+      private val buf = new Array[Byte](TeraOutputFormat.BufferBytes)
+      private var used = 0
+
+      private def put(bytes: Array[Byte]): Unit = {
+        if (used + bytes.length > buf.length) { out.write(buf, 0, used); used = 0 }
+        if (bytes.length > buf.length) out.write(bytes)
+        else { System.arraycopy(bytes, 0, buf, used, bytes.length); used += bytes.length }
       }
-      override def close(c: TaskAttemptContext): Unit = stream.close()
+
+      override def write(key: Array[Byte], value: Array[Byte]): Unit = {
+        put(key)
+        put(value)
+      }
+      override def close(c: TaskAttemptContext): Unit = {
+        out.write(buf, 0, used)
+        out.close()
+      }
     }
   }
+}
+
+object TeraOutputFormat {
+  private[tera] val BufferBytes: Int = 64 << 10
 }

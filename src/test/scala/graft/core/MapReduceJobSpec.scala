@@ -1,9 +1,50 @@
 package graft.core
 
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageSubmitted, SparkListenerTaskEnd}
+
 import graft.SparkSpec
 import graft.apps.WordCount
 
 class MapReduceJobSpec extends SparkSpec {
+
+  /** Runs `f` and sums the shuffle records its jobs' tasks wrote. Listener
+    * events arrive in order, so a sentinel job started afterwards marks
+    * the end of the count.
+    */
+  private def shuffleRecordsOf[T](f: => T): (T, Long) = {
+    val sc = spark.sparkContext
+    val tag = s"mrspec.shuffle.${System.nanoTime()}"
+    val stages = ConcurrentHashMap.newKeySet[Int]()
+    val records = new AtomicLong
+    val end = new CountDownLatch(1)
+    def tagOf(p: java.util.Properties) = Option(p).flatMap(p => Option(p.getProperty(tag)))
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (tagOf(e.properties).contains("f")) stages.add(e.stageInfo.stageId)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          records.addAndGet(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (tagOf(e.properties).contains("end")) end.countDown()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(tag, "f")
+    try {
+      val r = f
+      sc.setLocalProperty(tag, "end")
+      sc.parallelize(Seq(1), 1).count()
+      assert(end.await(60, TimeUnit.SECONDS), "listener timed out")
+      (r, records.get)
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+  }
 
   test("wordcount: MR-contract, DataFrame, and Dataset flavors agree") {
     import spark.implicits._
@@ -75,6 +116,61 @@ class MapReduceJobSpec extends SparkSpec {
       .collect().toMap
     assert(out.size == n)
     assert(out(0) == 1L + (1L + n) && out(n - 1) == n.toLong + 2L * n)
+  }
+
+  test("combiner: one map task past 2 x CombineKeys distinct keys sums exactly in every arm") {
+    // keys 0..n-1 twice over, so the task's combine map fills and is
+    // emitted several times and the two values of a key meet only in the
+    // reduce-side merge
+    val n = 2 * MapReduceJob.CombineKeys + 1000
+    val emits = () => Iterator.range(0, 2 * n).map(i => (i % n, i.toLong))
+    val want = new Array[Long](n)
+    emits().foreach { case (k, v) => want(k) += v }
+    val job = MapReduceJob(spark.sparkContext.parallelize(Seq(0), 1))(_ => emits())
+      .withCombiner(_ + _)
+      .withPartitioner(new HashPartitioner(4))
+    def check(arm: String, got: Array[(Int, Long)]): Unit = {
+      assert(got.length == n, arm)
+      assert(got.iterator.map(_._1).toSet.size == n, arm)
+      val wrong = got.find { case (k, v) => v != want(k) }
+      assert(wrong.isEmpty, s"$arm: $wrong")
+    }
+    val grouped = job.grouped().collect()
+    assert(grouped.forall(_._2.size == 1))
+    check("grouped", grouped.map { case (k, vs) => (k, vs.head) })
+    check("reduce", job.reduce((k, vs) => Iterator.single((k, vs.sum))).collect())
+    check("reduce ordered", job.withOrdering(Ordering[Int])
+      .reduce((k, vs) => Iterator.single((k, vs.sum))).collect())
+    check("reduceByKeyToRdd", job.reduceByKeyToRdd(_ + _).collect())
+  }
+
+  test("combiner: each map task shuffles one record per distinct key it emitted") {
+    // 4 map tasks of 2,500 values over the same 37 keys: 4 x 37 records
+    val input = spark.sparkContext.parallelize(1 to 10000, 4)
+    val job = MapReduceJob(input)(i => Iterator.single((i % 37, i.toLong)))
+      .withCombiner(_ + _)
+    val sum = (_: Int, vs: Iterator[Long]) => Iterator.single(vs.sum)
+    val arms = Seq[(String, () => Long)](
+      "grouped" -> (() => job.grouped().count()),
+      "reduce" -> (() => job.reduce(sum).count()),
+      "reduce ordered" -> (() => job.withOrdering(Ordering[Int]).reduce(sum).count()),
+      "reduceByKeyToRdd" -> (() => job.reduceByKeyToRdd(_ + _).count()))
+    arms.foreach { case (arm, run) =>
+      assert(shuffleRecordsOf(run()) == ((37L, 4L * 37)), arm)
+    }
+  }
+
+  test("combiner: a null key combines like any other key") {
+    val input = spark.sparkContext.parallelize(
+      Seq("a", null, "b", null, "a", null, null), 3)
+    val job = MapReduceJob(input)(w => Iterator.single((w, 1L))).withCombiner(_ + _)
+    val want = Map[String, Long]("a" -> 2L, (null: String) -> 4L, "b" -> 1L)
+    val sum = (k: String, vs: Iterator[Long]) => Iterator.single((k, vs.sum))
+    assert(job.reduceByKeyToRdd(_ + _).collect().toMap == want)
+    assert(job.grouped().mapValues(_.sum).collect().toMap == want)
+    assert(job.reduce(sum).collect().toMap == want)
+    val nullFirst = Ordering.by[String, Option[String]](Option(_))
+    assert(job.withOrdering(nullFirst).reduce(sum).collect().toMap == want)
   }
 
   test("grouped returns all values per key") {

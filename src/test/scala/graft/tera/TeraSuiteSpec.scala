@@ -196,6 +196,24 @@ class TeraSuiteSpec extends SparkSpec {
     } finally TeraIO.delete(spark, dir)
   }
 
+  test("TeraOutputFormat writes the pairs back to back across its buffer boundaries") {
+    // 2,000 records fill three write buffers and part of a fourth; the
+    // pairs of other lengths include one longer than a whole buffer
+    val recs = TeraGen.records(spark, 2000, 1).rdd.collect()
+    val odd = Seq(
+      (Array.fill[Byte](3)(1), Array.fill[Byte](TeraOutputFormat.BufferBytes + 7)(2)),
+      (Array.emptyByteArray, Array.fill[Byte](5)(3)))
+    val pairs = recs ++ odd ++ recs.take(10)
+    val dir = java.nio.file.Files.createTempDirectory("tera").toString + "/out"
+    try {
+      TeraIO.write(spark.sparkContext.parallelize(pairs.toSeq, 1), dir)
+      val part = new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
+      assert(part.length == 1)
+      val bytes = java.nio.file.Files.readAllBytes(part.head.toPath)
+      assert(bytes.sameElements(pairs.flatMap { case (k, v) => k.toSeq ++ v }))
+    } finally TeraIO.delete(spark, dir)
+  }
+
   test("sorted output survives a file round-trip (partition order intact)") {
     val dir = java.nio.file.Files.createTempDirectory("tera").toString + "/sorted"
     try {
