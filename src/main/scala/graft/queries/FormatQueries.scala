@@ -721,9 +721,13 @@ object FormatQueries {
     * delta, never the table; exact touched/carried counts are
     * spec-locked (`SnapshotTableSpec`).
     */
-  def snapshotMerge(s: SparkSession, d: String): DataFrame = {
+  def snapshotMerge(s: SparkSession, d: String): DataFrame =
+    snapshotMergeAt(s, d, "snap_merge")
+
+  private def snapshotMergeAt(s: SparkSession, d: String,
+      scratchName: String): DataFrame = {
     import graft.sources.SnapshotTable
-    val root = scratch("snap_merge")
+    val root = scratch(scratchName)
     graft.tera.TeraIO.delete(s, root)
     val o = graft.Tables.orders(s, d)
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -1823,40 +1827,12 @@ object FormatQueries {
       .withColumn("pruned_some", lit(if (kept < total) 1L else 0L))
   }
 
-  /** [[graft.sources.SnapshotTable.mergeLarge]] — the big-delta merge
-    * whose touched-file pruning is a range JOIN against the manifest
-    * stats frame (update keys never collected to the driver) — run on
-    * the exact fixture of `fmt_snapshot_merge` and hash-gated against
-    * the SAME oracle: the two merge forms are interchangeable by
-    * construction (`SnapshotRound11Spec` additionally proves the
-    * touched/carried splits identical). This is the form a 100 TB
-    * merge with a billion-key delta uses.
+  /** `fmt_snapshot_merge` on a scratch root of its own, kept under its
+    * registry name and oracle: [[graft.sources.SnapshotTable.merge]]
+    * never collects a delta's keys, so it is also the big-delta merge.
     */
-  def snapshotMergeLarge(s: SparkSession, d: String): DataFrame = {
-    import graft.sources.SnapshotTable
-    val root = scratch("snap_merge_lg")
-    graft.tera.TeraIO.delete(s, root)
-    val o = graft.Tables.orders(s, d)
-      .select("o_orderkey", "o_orderstatus", "o_totalprice")
-    val v1 = SnapshotTable.commit(
-      o.repartitionByRange(16, col("o_orderkey")), root,
-      statsCol = Some("o_orderkey"))
-    val updates = o.filter(col("o_orderkey").between(1000, 3000))
-      .withColumn("o_totalprice", col("o_totalprice") + 500.0)
-      .unionByName(o.filter(col("o_orderkey") < 500)
-        .withColumn("o_orderkey", col("o_orderkey") + 10000000L))
-    val (v2, nRewritten, nCarried) =
-      SnapshotTable.mergeLarge(updates, root, "o_orderkey")
-    val merged = SnapshotTable.readAt(s, root, v2)
-      .groupBy("o_orderstatus")
-      .agg(count(lit(1)).as("n_merged"),
-        money(sum(col("o_totalprice"))).as("total_merged"),
-        sum(col("o_orderkey")).as("okey_merged"))
-    val preMerge = SnapshotTable.readAt(s, root, v1)
-      .groupBy("o_orderstatus").agg(count(lit(1)).as("n_v1"))
-    merged.join(preMerge, "o_orderstatus")
-      .withColumn("pruned_some", lit(if (nCarried > nRewritten) 1L else 0L))
-  }
+  def snapshotMergeLarge(s: SparkSession, d: String): DataFrame =
+    snapshotMergeAt(s, d, "snap_merge_lg")
 
   /** OPTIMIZE ZORDER BY through the snapshot layer
     * ([[graft.sources.SnapshotTable.compactZorder]] + multi-column
@@ -2067,8 +2043,8 @@ object FormatQueries {
     val preDelete = SnapshotTable.currentSnapshot(s, root)
     val hi = cust.agg(max(col("c_custkey"))).head.getLong(0) / 2
     s.sql(s"DELETE FROM gsnapd.db.cust WHERE c_custkey <= $hi")
-    val (dropped, _, carried) =
-      SnapshotTable.lastDeleteStats(root).getOrElse((0, 0, 0))
+    val (dropped, _, carried) = SnapshotTable.deleteStats(s, root,
+      SnapshotTable.currentSnapshot(s, root))
     val after = s.sql("SELECT * FROM gsnapd.db.cust")
       .agg(count(lit(1)).as("n_after"),
         money(sum(col("c_acctbal"))).as("bal_after"))
@@ -2964,8 +2940,7 @@ object FormatQueries {
         |  sum(o_orderkey)::BIGINT AS okey_cur,
         |  3::BIGINT AS n_snapshots, 1::BIGINT AS pruned_some
         |FROM v2rows GROUP BY 1""".stripMargin,
-    // mergeLarge shares fmt_snapshot_merge's fixture AND truth: the
-    // two pruning forms must be observationally identical
+    // the same merge as fmt_snapshot_merge, so the same truth
     "fmt_snapshot_merge_large" ->
       """WITH up AS (
         |  SELECT o_orderkey, o_orderstatus, o_totalprice + 500.0 AS p

@@ -3081,112 +3081,45 @@ object SnapshotTable {
     *
     * Returns (new snapshot id, files rewritten, files carried).
     *
-    * Contract: `updates`' DISTINCT keys are collected to the driver to
-    * drive the per-file pruning — the updates batch is the SMALL side
+    * Contract: `keyCol` is a row key — an empty batch or a null key
+    * refuses before anything is written (a null never equality-matches,
+    * so neither this merge nor an [[applyChanges]] consumer could ever
+    * replace or retract that row). The updates batch is the SMALL side
     * of a merge (the delta), which is what makes copy-on-write merge
-    * cheap at 100 TB: IO = touched files + delta, never the table.
-    * [[mergeLarge]] is the same merge with the pruning done as a
-    * range JOIN against the manifest stats (no driver key collect) for
-    * deltas whose distinct keys don't fit driver memory. Because a
+    * cheap at 100 TB: IO = touched files + delta, never the table. The
+    * touched-file decision ([[touchedSplit]]) collects only the touched
+    * FILE set to the driver, never the delta's keys. Because a
     * merge rewrites history, [[changesBetween]] ranges that cross it
     * refuse, by design; the row-level [[changeFeed]] survives it.
     */
   def merge(updates0: DataFrame, root: String, keyCol: String,
       extraProps: Map[String, String] = Map.empty): (Long, Int, Int) = {
-    val s = updates0.sparkSession
-    // cache HERE so the key-probe collect below, the change-frame
-    // write, and the commit write all share one execution of the
-    // caller's delta plan (mergeCore sees the frame already pinned and
-    // leaves it to this finally). Track whether THIS call created the
-    // cache: unpersisting in the finally otherwise evicts a
-    // caller-owned cache entry when the caller pre-cached the frame
-    // (ADVICE r15)
-    val didCache =
-      updates0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val updates = if (didCache) updates0.cache() else updates0
-    try {
-    val keys: Array[Any] = updates.select(keyCol).distinct()
-      .collect().map(_.get(0))
-    require(keys.nonEmpty, "merge with an empty updates batch")
-    // typed sorted key array for the per-file containment probe
-    def anyKeyIn(st: FileStats): Boolean = st.domain match {
-      case "i" =>
-        val sorted = keys.map(_.asInstanceOf[Number].longValue).sorted
-        val lo = st.mn.toLong; val hi = st.mx.toLong
-        val i = java.util.Arrays.binarySearch(sorted, lo)
-        val at = if (i >= 0) i else -i - 1
-        at < sorted.length && sorted(at) <= hi
-      case "d" =>
-        val sorted = keys.map(_.asInstanceOf[Number].doubleValue).sorted
-        val lo = st.mn.toDouble; val hi = st.mx.toDouble
-        val i = java.util.Arrays.binarySearch(sorted, lo)
-        val at = if (i >= 0) i else -i - 1
-        at < sorted.length && sorted(at) <= hi
-      case _ =>
-        // unsigned UTF-8 order end-to-end: the sort, the insertion
-        // search, and the upper-bound check all in the stats' domain
-        val sorted = keys.map(_.toString).sorted(Utf8Ord)
-        var lo = 0; var hi = sorted.length
-        while (lo < hi) { // lower_bound of st.mn under Utf8Ord
-          val mid = (lo + hi) >>> 1
-          if (utf8Cmp(sorted(mid), st.mn) < 0) lo = mid + 1 else hi = mid
-        }
-        lo < sorted.length && utf8Cmp(sorted(lo), st.mx) <= 0
-    }
-    val physKey = physMapOf(s, root, currentSnapshot(s, root))
-      .getOrElse(keyCol, keyCol)
-    mergeCore(updates, root, keyCol, es => es.partition { e =>
-      e.statsFor(physKey) match {
-        case Some(st) => anyKeyIn(st)
-        case None => true // no usable stats → conservatively rewrite
-      }
-    }, cacheWorkingSet = true, extraProps)
-    } finally if (didCache) updates.unpersist(blocking = false)
-  }
-
-  /** The shared merge core: `split` partitions the current entries into
-    * (touched, carried); touched files are rewritten as
-    * anti-join(updates' keys) ∪ updates, carried entries pass through
-    * VERBATIM, and the whole thing commits with `expectedBase` pinned
-    * to the merge's base snapshot so a racing writer fails loudly.
-    */
-  private def mergeCore(updates0: DataFrame, root: String, keyCol: String,
-      split: Seq[FileEntry] => (Seq[FileEntry], Seq[FileEntry]),
-      cacheWorkingSet: Boolean,
-      extraProps: Map[String, String] = Map.empty): (Long, Int, Int) = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
     val s = updates0.sparkSession
     val cur = currentSnapshot(s, root)
     require(cur > 0L, s"merge into empty table $root: commit first")
     requireNoDv(s, root, cur, "merge") // the COW rewrite reads files
     // raw and would resurrect vector-deleted rows
-    val (touched, carried) = split(entries(s, root, cur))
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val schema = schemaAt(s, root, cur)
-    // r15: the delta and the touched-file read each feed BOTH eager
-    // writes below (the change frame, then the commit's survivors ∪
-    // updates) plus the key probes — uncached, every consumer re-ran
-    // the caller's delta plan and re-read every touched file (~3 full
-    // touched-set reads per merge). Pin both for the call, release in
-    // the finally. Memory: executor-side MEMORY_AND_DISK, spills
-    // gracefully — both frames are the COW working set this path
-    // materializes into new files anyway. Measured 20–24% faster than
-    // the uncached merge (r15). [[mergeLarge]] turns it off: its deltas
-    // are the ones too big to pin.
-    // Don't re-cache a frame the public merge() wrapper already pinned
-    // (same entry — but Spark logs a WARN per redundant call), and only
-    // unpersist in the finally when THIS call created the cache —
-    // unpersisting unconditionally evicted a caller-owned entry when
-    // the caller pre-cached the frame (ADVICE r15)
-    val didCache = cacheWorkingSet && updates0.storageLevel ==
-      org.apache.spark.storage.StorageLevel.NONE
+    // The delta and the touched-file read each feed several consumers
+    // (the probe, the change-frame write, the commit's survivors ∪
+    // updates); uncached, every one re-ran the caller's delta plan and
+    // re-read every touched file. Both are pinned for the call
+    // (MEMORY_AND_DISK: the COW working set this path materializes into
+    // new files anyway; measured 20–24% faster than uncached, r15), and
+    // only what THIS call pinned is released — unpersisting a delta the
+    // caller cached would evict the caller's entry (ADVICE r15).
+    val didCache =
+      updates0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     val updates = if (didCache) updates0.cache() else updates0
+    try {
+    val (touched, carried, nonEmpty) =
+      touchedSplit(updates, root, cur, keyCol, "merge")
+    require(nonEmpty, "merge with an empty updates batch")
+    val schema = schemaAt(s, root, cur)
     val base: Option[DataFrame] =
       if (touched.isEmpty) None
-      else {
-        val b = readData(s, root, touched.map(_.path), schema,
-          physMapOf(s, root, cur))
-        Some(if (cacheWorkingSet) b.cache() else b)
-      }
+      else Some(readData(s, root, touched.map(_.path), schema,
+        physMapOf(s, root, cur)).cache())
     try {
     val updKeys = updates.select(col(keyCol)).distinct()
     val survivors = base match {
@@ -3229,10 +3162,79 @@ object SnapshotTable {
       baseSchema = Some(schema),
       partitionCols = partitionColsOf(s, root, cur))
     (id, touched.size, carried.size)
-    } finally {
-      if (didCache) updates.unpersist(blocking = false)
-      if (cacheWorkingSet) base.foreach(_.unpersist(blocking = false))
+    } finally base.foreach(_.unpersist(blocking = false))
+    } finally if (didCache) updates.unpersist(blocking = false)
+  }
+
+  /** The entries of snapshot `cur` a copy-on-write write keyed on
+    * `keyCol` must rewrite, the ones it carries verbatim, and whether
+    * `keys` has any row: (touched, carried, nonEmpty). A file is
+    * touched iff some key falls in its recorded [min, max] on the
+    * physical key column; a file whose stats cannot refute a key — none
+    * recorded, or a domain the key's type does not compare in soundly —
+    * is touched too. The per-file bounds ride in the plan as one literal
+    * array (the manifest is driver metadata already) that each key row
+    * filters down to the indices of the files it falls in; one pass
+    * over the keys (one Spark job, no shuffle) folds those indices, the
+    * key rows and the null keys per partition, so the driver receives
+    * the touched files' indices — O(files), never O(keys). A null key
+    * refuses (`op` names the caller): a null never equality-matches, so
+    * the write would silently miss the row it was meant to replace or
+    * remove.
+    */
+  private[sources] def touchedSplit(keys: DataFrame, root: String, cur: Long,
+      keyCol: String, op: String): (Seq[FileEntry], Seq[FileEntry], Boolean) = {
+    import scala.reflect.runtime.universe.TypeTag
+    import org.apache.spark.sql.functions.{col, filter, typedLit, unix_date}
+    val s = keys.sparkSession
+    val es = entries(s, root, cur)
+    val physKey = physMapOf(s, root, cur).getOrElse(keyCol, keyCol)
+    // the key in footerInfo's stats domains: integers and dates (int
+    // days) as longs, floats as doubles, strings in UTF8String's own
+    // unsigned-byte order; any other type refutes nothing
+    val k = col(keyCol)
+    val (domain, probe) = keys.select(k).schema.head.dataType match {
+      case ByteType | ShortType | IntegerType | LongType => ("i", k.cast(LongType))
+      case DateType => ("i", unix_date(k).cast(LongType))
+      case FloatType | DoubleType => ("d", k.cast(DoubleType))
+      case StringType => ("s", k)
+      case _ => ("", k)
     }
+    val statful = es.indices.flatMap(i =>
+      es(i).statsFor(physKey).filter(_.domain == domain).map(i -> _))
+    def hitsIn[T: TypeTag](v: String => T) = filter(
+      typedLit(statful.map { case (i, st) => (i, v(st.mn), v(st.mx)) }),
+      b => probe >= b("_2") && probe <= b("_3"))("_1")
+    val hits = domain match {
+      case _ if statful.isEmpty => typedLit(Seq.empty[Int])
+      case "i" => hitsIn(_.toLong)
+      case "d" => hitsIn(_.toDouble)
+      case _ => hitsIn(identity)
+    }
+    // per partition: (key rows, null keys, indices of the files hit)
+    val parts = keys.select(probe.isNull, hits).queryExecution.toRdd
+      .mapPartitions { rows =>
+        var n = 0L; var nulls = 0L
+        val hit = scala.collection.mutable.BitSet.empty
+        rows.foreach { r =>
+          n += 1
+          if (r.getBoolean(0)) nulls += 1
+          else {
+            val a = r.getArray(1)
+            (0 until a.numElements).foreach(j => hit += a.getInt(j))
+          }
+        }
+        Iterator((n, nulls, hit.toArray))
+      }.collect()
+    require(parts.forall(_._2 == 0L),
+      s"$op: null values in key column $keyCol are not supported — a " +
+        "null never equality-matches, so the row could never be " +
+        "replaced or removed")
+    val hit = parts.flatMap(_._3).toSet
+    val refutable = statful.map(_._1).toSet
+    val (touched, carried) = es.indices
+      .partition(i => !refutable(i) || hit(i))
+    (touched.map(es), carried.map(es), parts.exists(_._1 > 0L))
   }
 
   /** Row-level change feed over `(fromId, toId]` — the incremental read
@@ -3514,35 +3516,6 @@ object SnapshotTable {
     }
   }
 
-  /** [[merge]] for BIG deltas: identical semantics and commit, but the
-    * touched-file decision is a range JOIN of the manifest's per-file
-    * [min, max] entries (a small driver-resident frame — the manifest
-    * is already driver metadata) against the updates' distinct keys as
-    * a DataFrame — the update keys are never collected to the driver.
-    * The join output is just the touched FILE set (O(files), aggregated
-    * distinct), so driver memory scales with the table's file count,
-    * not the delta. `MergeLargeSpec` proves the touched/carried split
-    * identical to [[merge]]'s collect form; the join form measured
-    * flat as the delta grows ×100 (SURVEY §6.10).
-    */
-  def mergeLarge(updates: DataFrame, root: String,
-      keyCol: String): (Long, Int, Int) = {
-    val s = updates.sparkSession
-    val cur = currentSnapshot(s, root)
-    require(cur > 0L, s"merge into empty table $root: commit first")
-    val touchedPaths = touchedFiles(updates, root, keyCol)
-    // mergeLarge exists for deltas too big for the collect path, so
-    // mergeCore's MEMORY_AND_DISK pin of the delta plus every touched
-    // file is exactly the storage pressure this entry point is meant
-    // to dodge: the working-set cache is OFF here (ADVICE r15)
-    mergeCore(updates, root, keyCol, allEs => allEs.partition { e =>
-      e.statsFor(keyCol) match {
-        case Some(_) => touchedPaths.contains(e.path)
-        case None => true // no usable stats → conservatively rewrite
-      }
-    }, cacheWorkingSet = false)
-  }
-
   /** OPTIMIZE ZORDER BY for the snapshot layer: rewrite the current
     * snapshot as an overwrite commit clustered on the z-order (Morton)
     * curve over `(xCol, yCol)` — [[graft.ops.PipelineOps.zorderIndex]],
@@ -3647,20 +3620,25 @@ object SnapshotTable {
       if (statsCols.isEmpty) None else Some(statsCols.mkString(",")),
       Map("delete.cond" -> filters.mkString(" AND ")) ++ cdfProps,
       baseSchema = Some(schema), partitionCols = partitionColsOf(s, root, cur))
-    lastDelete.put(root, (drop.size, rewrite.size, keep.size))
     (id, drop.size, rewrite.size, keep.size)
   }
 
-  // the last (dropped, rewritten, carried) delete decision per root —
-  // driver-side observability for gates and specs
-  private[sources] val lastDelete =
-    new scala.collection.concurrent.TrieMap[String, (Int, Int, Int)]
-
-  /** The most recent [[deleteWhere]] decision for `root`:
-    * (files dropped metadata-only, files rewritten, files carried).
+  /** The file decision of the delete that published snapshot `id`
+    * ([[deleteWhere]], SQL `DELETE FROM`, [[deleteByKeys]]), read from
+    * its manifest and its parent's alone: (files dropped metadata-only
+    * — the ones its `cdf.del.files` prop names —, files rewritten — the
+    * parent's other data files `id` no longer lists —, files carried —
+    * the data files both list).
     */
-  def lastDeleteStats(root: String): Option[(Int, Int, Int)] =
-    lastDelete.get(root)
+  def deleteStats(s: SparkSession, root: String, id: Long): (Int, Int, Int) = {
+    require(id > 1L, s"deleteStats: snapshot v$id of $root has no parent")
+    val dropped = snapshotProps(s, root, id).get("cdf.del.files").toSeq
+      .flatMap(_.split(",")).filter(_.nonEmpty).toSet
+    def dataPaths(v: Long) = entries(s, root, v).filterNot(_.isDelete).map(_.path)
+    val now = dataPaths(id).toSet
+    val (carried, gone) = dataPaths(id - 1).partition(now)
+    (dropped.size, gone.count(p => !dropped(p)), carried.size)
+  }
 
   private def requireNoDv(s: SparkSession, root: String, id: Long,
       op: String): Unit =
@@ -3777,37 +3755,33 @@ object SnapshotTable {
   }
 
   /** Copy-on-write DELETE by KEY FRAME — the retraction shape whose
-    * key set never visits the driver: `keys` (one column, `keyCol`)
-    * is range-joined against the manifest's per-file [min, max]
-    * stats ([[touchedFiles]] — the [[mergeLarge]] pattern) to pick
-    * the files that CAN hold a doomed row; those are rewritten as an
-    * anti-join of the key frame, everything else carries VERBATIM.
-    * Driver memory is O(files), whatever the retraction size — the
-    * mass-GDPR-sweep case an `In(collect())` delete would make
-    * driver-bound. The removed rows land as the commit's op-`D`
-    * change frame (delta-priced: the touched files are already being
-    * read), so [[changeFeed]] crosses it exactly like a
-    * [[deleteWhere]]. Refuses vectored tables like every COW rewrite.
+    * key set never visits the driver: [[touchedSplit]] tests `keys`
+    * (one column, `keyCol`) against the manifest's per-file [min, max]
+    * stats to pick the files that CAN hold a doomed row; those are
+    * rewritten as an anti-join of the key frame, everything else
+    * carries VERBATIM. Driver memory is O(files), whatever the
+    * retraction size — the mass-GDPR-sweep case an `In(collect())`
+    * delete would make driver-bound. The removed rows land as the
+    * commit's op-`D` change frame (delta-priced: the touched files are
+    * already being read), so [[changeFeed]] crosses it exactly like a
+    * [[deleteWhere]]. Refuses vectored tables like every COW rewrite,
+    * and a null key (it would match no row) before anything is written.
     * Returns (new snapshot id, files rewritten, files carried);
-    * a key set provably absent everywhere is a no-op returning the
-    * current id.
+    * an empty key set, or one provably absent everywhere, is a no-op
+    * returning the current id.
     */
   def deleteByKeys(keys: DataFrame, root: String,
       keyCol: String): (Long, Int, Int) = {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.col
     val s = keys.sparkSession
     val cur = currentSnapshot(s, root)
     require(cur > 0L, s"deleteByKeys from empty table $root: commit first")
     requireNoDv(s, root, cur, "deleteByKeys")
+    val (touched, carried, nonEmpty) =
+      touchedSplit(keys, root, cur, keyCol, "deleteByKeys")
+    if (!nonEmpty || touched.isEmpty)
+      return (cur, 0, touched.size + carried.size)
     val keyFrame = keys.select(col(keyCol)).distinct()
-    val physKey = physMapOf(s, root, cur).getOrElse(keyCol, keyCol)
-    val touchedPaths = touchedFiles(keyFrame, root, keyCol)
-    val es = entries(s, root, cur)
-    val (touched, carried) = es.partition(e => e.statsFor(physKey) match {
-      case Some(_) => touchedPaths.contains(e.path)
-      case None => true // no usable stats → conservatively rewrite
-    })
-    if (touched.isEmpty) return (cur, 0, es.size)
     val schema = schemaAt(s, root, cur)
     val base = readData(s, root, touched.map(_.path), schema,
       physMapOf(s, root, cur))
@@ -3835,7 +3809,6 @@ object SnapshotTable {
       Map("delete.cond" -> s"keysIn($keyCol)", "cdf.dir" -> cdfRel,
         "cdf.keys.col" -> keyCol),
       baseSchema = Some(schema), partitionCols = partitionColsOf(s, root, cur))
-    lastDelete.put(root, (0, touched.size, carried.size))
     (id, touched.size, carried.size)
   }
 
@@ -4355,8 +4328,11 @@ object SnapshotTable {
     *  - then BIN-PACK ([[compactSmallFiles]] — large files carry
     *    verbatim) once at least [[SmallFileDebt]] data files hold fewer
     *    than [[SmallFileRows]] rows, towards [[PackTargetRows]] per
-    *    file. Skipped while delete entries are live (packing raw files
-    *    would resurrect deleted rows) or a row count is unknown.
+    *    file, even when the fold just emptied or merged some of them
+    *    (the pack would otherwise wait for a later pass and rewrite the
+    *    fold's files again). Skipped while a row count is unknown; the
+    *    fold has always run first, so no raw file with deleted rows is
+    *    ever packed.
     * Both commits carry the `stream.*` floors and cross the change feed
     * as empty steps, so maintenance floors, exactly-once sinks and
     * incremental consumers are undisturbed. Returns Some((id, packed,
@@ -4365,17 +4341,11 @@ object SnapshotTable {
   def settleOnDebt(s: SparkSession, root: String): Option[(Long, Int, Int)] = {
     val cur = currentSnapshot(s, root)
     if (cur == 0L) return None
-    def nSmall(es: Seq[FileEntry]): Int =
-      es.count(e => !e.isDelete && e.rows.exists(_ < SmallFileRows))
-    val es0 = entries(s, root, cur)
-    val dels = es0.count(_.isDelete)
-    val es =
-      if (dels > 0 &&
-          (dels >= EqDeleteFoldEntries || nSmall(es0) >= SmallFileDebt))
-        entries(s, root, rewriteDeletes(s, root))
-      else es0
-    if (es.exists(_.isDelete) || !es.forall(_.rows.isDefined) ||
-        nSmall(es) < SmallFileDebt) None
+    val (dels, data) = entries(s, root, cur).partition(_.isDelete)
+    val debt = data.count(_.rows.exists(_ < SmallFileRows)) >= SmallFileDebt
+    if (dels.nonEmpty && (debt || dels.size >= EqDeleteFoldEntries))
+      rewriteDeletes(s, root)
+    if (!debt || !data.forall(_.rows.isDefined)) None
     else Some(compactSmallFiles(s, root, SmallFileRows, PackTargetRows))
   }
 
@@ -4395,45 +4365,4 @@ object SnapshotTable {
 
   /** Rows per file a [[settleOnDebt]] bin-pack aims for. */
   private val PackTargetRows = 65536L
-
-  /** The files of the CURRENT snapshot a merge keyed on `keyCol` would
-    * rewrite, decided by range-joining the manifest's per-file
-    * [min, max] stats (a driver-resident frame — the manifest is
-    * already driver metadata) against `updates`' distinct keys — the
-    * keys are never collected to the driver, so this scales to deltas
-    * of any size. Files without `keyCol` stats are NOT returned here;
-    * [[mergeLarge]] conservatively rewrites them regardless.
-    */
-  def touchedFiles(updates: DataFrame, root: String,
-      keyCol: String): Set[String] = {
-    val s = updates.sparkSession
-    val cur = currentSnapshot(s, root)
-    val physKey = physMapOf(s, root, cur).getOrElse(keyCol, keyCol)
-    val statful = entries(s, root, cur).filterNot(_.isDelete)
-      .flatMap(e => e.statsFor(physKey).map(st => (e.path, st)))
-    if (statful.isEmpty) Set.empty
-    else {
-      import org.apache.spark.sql.functions.{broadcast, col}
-      import s.implicits._
-      val tag = statful.head._2.domain
-      val keysDf = updates.select(col(keyCol).as("k")).distinct()
-      // per-tag typed bounds frame; string bounds compare as Spark
-      // UTF8String = unsigned UTF-8 bytes, the stats' own domain
-      val boundsDf = tag match {
-        case "i" => statful.map { case (p, st) =>
-          (p, st.mn.toLong, st.mx.toLong) }.toDF("path", "mn", "mx")
-        case "d" => statful.map { case (p, st) =>
-          (p, st.mn.toDouble, st.mx.toDouble) }.toDF("path", "mn", "mx")
-        case _ => statful.map { case (p, st) =>
-          (p, st.mn, st.mx) }.toDF("path", "mn", "mx")
-      }
-      // keys STREAM against the broadcast bounds frame (files are
-      // driver metadata, always the small side); the distinct
-      // collapses to the touched-file set — O(files) on the driver,
-      // never O(keys)
-      keysDf.join(broadcast(boundsDf),
-          col("k") >= col("mn") && col("k") <= col("mx"))
-        .select("path").distinct().as[String].collect().toSet
-    }
-  }
 }

@@ -356,7 +356,7 @@ private[sources] class SnapshotGroupScan(root: String, tableName: String,
   * values before planning the rewrite, and the manifest stats drop
   * every file provably holding none of them — the merge rewrites the
   * touched files, like the library's stats-pruned
-  * [[SnapshotTable.merge]]/[[SnapshotTable.mergeLarge]].
+  * [[SnapshotTable.merge]].
   */
 private[sources] class SnapshotRowLevelOperation(root: String,
     pinnedId: Long, entries: Seq[SnapshotTable.FileEntry],

@@ -13,9 +13,8 @@ import org.apache.hadoop.mapreduce.lib.output.FileOutputFormat
   * (reference `apps/terasort/TeraSort.scala:60-63`), so a user ports a
   * job verbatim by switching the import to `graft.tera`. The engine's
   * own paths ([[TeraIO]], the `graft-fixed` DataSourceV2 source) remain
-  * the preferred Spark-native surface: [[TeraIO.write]] writes through
-  * [[TeraOutputFormat]], and [[TeraInputFormat]] exists for source
-  * compatibility.
+  * the preferred Spark-native surface; [[TeraIO]] reads and writes
+  * through these two formats.
   *
   * Independent implementation, not the reference's (which buffers chunk
   * reads and drives termination off EOFException — reference

@@ -1,8 +1,6 @@
 package graft.tera
 
 import org.apache.hadoop.fs.Path
-import org.apache.hadoop.io.{BytesWritable, LongWritable}
-import org.apache.hadoop.mapreduce.lib.input.FixedLengthInputFormat
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 
@@ -10,10 +8,10 @@ import org.apache.spark.sql.SparkSession
   * key(10) ‖ value(90), no framing — reference
   * `apps/terasort/TeraInputFormat.scala:47-113` / `TeraOutputFormat.scala`).
   *
-  * Reading uses Hadoop's stock `FixedLengthInputFormat` (record-aligned
-  * splits for free); writing uses [[TeraOutputFormat]], which
-  * concatenates the pair back to 100 bytes. Both scale with partition
-  * count — one split/file per task, no driver involvement.
+  * Reading uses [[TeraInputFormat]] (record-aligned splits); writing
+  * uses [[TeraOutputFormat]], which concatenates the pair back to
+  * 100 bytes. Both scale with partition count — one split/file per
+  * task, no driver involvement.
   */
 object TeraIO {
 
@@ -25,39 +23,14 @@ object TeraIO {
       classOf[Array[Byte]],
       classOf[TeraOutputFormat])
 
-  /** FixedLengthInputFormat with the file listing sorted by path, so the
-    * RDD's partition order follows part-file order — without this a
-    * sorted directory reads back with permuted partitions and global
-    * order validation fails (same fix as reference
-    * `apps/terasort/TeraInputFormat.scala:47-113`).
+  /** Reads back what [[write]] wrote, through [[TeraInputFormat]]: its
+    * file listing is sorted by path, so the RDD's partition order
+    * follows part-file order (a sorted directory reads back globally
+    * sorted), and each record arrives as a fresh key and value array.
     */
-  final class SortedFixedLengthInputFormat extends FixedLengthInputFormat {
-    override def listStatus(job: org.apache.hadoop.mapreduce.JobContext)
-        : java.util.List[org.apache.hadoop.fs.FileStatus] = {
-      val files = new java.util.ArrayList(super.listStatus(job))
-      files.sort((a, b) => a.getPath.toString.compareTo(b.getPath.toString))
-      files
-    }
-  }
-
-  def read(spark: SparkSession, path: String): RDD[(Array[Byte], Array[Byte])] = {
-    val conf = new org.apache.hadoop.conf.Configuration(
-      spark.sparkContext.hadoopConfiguration)
-    conf.setInt(FixedLengthInputFormat.FIXED_RECORD_LENGTH, TeraGen.RecordLen)
-    spark.sparkContext
-      .newAPIHadoopFile(
-        path,
-        classOf[SortedFixedLengthInputFormat],
-        classOf[LongWritable],
-        classOf[BytesWritable],
-        conf)
-      .map { case (_, rec) =>
-        // the reader reuses `rec`'s buffer: slice both halves out of it
-        val bytes = rec.getBytes
-        (java.util.Arrays.copyOfRange(bytes, 0, TeraGen.KeyLen),
-          java.util.Arrays.copyOfRange(bytes, TeraGen.KeyLen, TeraGen.RecordLen))
-      }
-  }
+  def read(spark: SparkSession, path: String): RDD[(Array[Byte], Array[Byte])] =
+    spark.sparkContext.newAPIHadoopFile(path, classOf[TeraInputFormat],
+      classOf[Array[Byte]], classOf[Array[Byte]])
 
   /** Recursively delete a local/HDFS path (test + bench helper). */
   def delete(spark: SparkSession, path: String): Unit = {

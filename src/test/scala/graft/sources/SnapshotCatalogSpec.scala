@@ -98,7 +98,8 @@ class SnapshotCatalogSpec extends SparkSpec {
     // x < 20: files covering x in [0,16) drop wholesale, the file
     // straddling 20 rewrites, the rest carry verbatim
     spark.sql(s"DELETE FROM $cat.db.del WHERE x < 20")
-    val (dropped, rewritten, carried) = SnapshotTable.lastDelete(root)
+    val (dropped, rewritten, carried) = SnapshotTable.deleteStats(spark, root,
+      SnapshotTable.currentSnapshot(spark, root))
     assert(dropped >= 2 && rewritten <= 2 && carried >= 4,
       s"dropped=$dropped rewritten=$rewritten carried=$carried")
     assert(spark.sql(s"SELECT count(*), min(x) FROM $cat.db.del").head
@@ -129,7 +130,8 @@ class SnapshotCatalogSpec extends SparkSpec {
     // the one DATA file must be rewritten (its null cells bar the
     // whole-file proof); the only droppable entry is CREATE TABLE's
     // zero-row schema file, collected by the rc=0 fast path
-    val (dropped, rewritten, _) = SnapshotTable.lastDelete(root)
+    val (dropped, rewritten, _) = SnapshotTable.deleteStats(spark, root,
+      SnapshotTable.currentSnapshot(spark, root))
     assert(dropped <= 1 && rewritten == 1,
       s"dropped=$dropped rewritten=$rewritten")
     val left = spark.sql(s"SELECT v FROM $cat.db.delnull").collect()
@@ -302,7 +304,8 @@ class SnapshotCatalogSpec extends SparkSpec {
     assert(snaps == Map(1L -> 0L, 2L -> 100L, 3L -> 150L), snaps)
     // TRUNCATE: AlwaysTrue proves every file all-match → all dropped
     spark.sql(s"TRUNCATE TABLE $cat.db.tt")
-    val (dropped, rewritten, _) = SnapshotTable.lastDelete(root)
+    val (dropped, rewritten, _) = SnapshotTable.deleteStats(spark, root,
+      SnapshotTable.currentSnapshot(spark, root))
     assert(rewritten == 0 && dropped >= 1, s"$dropped/$rewritten")
     assert(spark.sql(s"SELECT count(*) FROM $cat.db.tt").head.getLong(0)
       == 0L)

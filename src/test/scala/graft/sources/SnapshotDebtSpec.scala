@@ -66,6 +66,29 @@ class SnapshotDebtSpec extends SparkSpec {
     assert(SnapshotTable.read(spark, root).count() == 2048L + 2047L + 23L)
   }
 
+  test("the 16th delete entry and the 24th small file in one pass: one " +
+      "call folds and then bin-packs, although the fold empties two of " +
+      "the small files") {
+    import spark.implicits._
+    val root = tmpRoot()
+    // 23 one-row files, keys 0 to 22, with key stats: the fold rewrites
+    // only the files the deletes' key bounds overlap
+    SnapshotTable.commit(spark.range(0L, 23L, 1, 23).select(col("id").as("k")),
+      root, statsCol = Some("k"))
+    (1 to 15).foreach(i =>
+      SnapshotTable.deleteByKeysEq(Seq(-i.toLong).toDF("k"), root))
+    assert(SnapshotTable.settleOnDebt(spark, root).isEmpty)
+    SnapshotTable.commit(Seq(100L).toDF("k"), root, statsCol = Some("k"))
+    // the 24th small file above, and the 16th delete entry
+    SnapshotTable.deleteByKeysEq(Seq(5L, 6L).toDF("k"), root)
+    val (_, packed, written) = SnapshotTable.settleOnDebt(spark, root)
+      .getOrElse(fail("24 small files before the fold must bin-pack"))
+    assert(written == 1 && packed >= 22, s"packed $packed, wrote $written")
+    assert(head(root).size == 1 && !head(root).exists(_.isDelete))
+    assert(SnapshotTable.read(spark, root).select("k").as[Long].collect()
+      .sorted.toSeq == (0L to 22L).filter(k => k != 5L && k != 6L) :+ 100L)
+  }
+
   test("a bin-pack writes one file for 65,536 small-file rows and two " +
       "for 65,537") {
     Seq(65536L -> 1, 65537L -> 2).foreach { case (rows, files) =>

@@ -6,7 +6,7 @@ import graft.SparkSpec
 
 /** Round-11 snapshot-layer contracts: UTF-8 stats ordering, claim
   * liveness, vacuum scoping, stream-floor carry-forward, manifest row
-  * counts, the big-delta merge, the merge change feed, schema
+  * counts, the merge's touched-file probe, the merge change feed, schema
   * evolution, and the DSv2 write path.
   */
 class SnapshotRound11Spec extends SparkSpec {
@@ -131,46 +131,110 @@ class SnapshotRound11Spec extends SparkSpec {
     assert(SnapshotTable.rowCount(spark, root, 2L) == Some(1050L))
   }
 
-  test("mergeLarge (range-join pruning, no driver key collect) produces " +
-      "the identical touched/carried split and final content as merge") {
+  /** Commits each of `files` as one data file with stats on `keyName`
+    * (then renames it to `k` when it is not `k`), merges one row per key
+    * of `delta` on `k`, and returns merge's (touched, carried) counts
+    * and the merged table as key -> value (stored rows 0, updates 1).
+    */
+  private def mergeSplit[K: scala.reflect.runtime.universe.TypeTag](
+      tag: String, files: Seq[Seq[K]], delta: Seq[K],
+      keyName: String = "k"): (Int, Int, Map[K, Long]) = {
     import spark.implicits._
-    val rootA = tmpRoot("mla")
-    SnapshotTable.commit(
-      spark.range(0, 10000).toDF("k")
-        .withColumn("p", col("k") * 2)
-        .repartitionByRange(8, col("k")),
-      rootA, statsCol = Some("k"))
-    // the two roots must share ONE physical layout (repartitionByRange
-    // SAMPLES its boundaries, so two independent commits can split
-    // the key space differently and the touched counts would diverge
-    // for honest reasons): copy A's directory verbatim
-    val rootB = tmpRoot("mlb")
-    def cp(src: java.io.File, dst: java.io.File): Unit = {
-      if (src.isDirectory) {
-        dst.mkdirs(); src.listFiles().foreach(f =>
-          cp(f, new java.io.File(dst, f.getName)))
-      } else java.nio.file.Files.copy(src.toPath, dst.toPath)
-    }
-    cp(new java.io.File(new java.net.URI(s"file:$rootA").getPath),
-      new java.io.File(new java.net.URI(s"file:$rootB").getPath))
-    val updates = spark.range(2000, 2500).toDF("k")
-      .withColumn("p", lit(-1L))
-      .unionByName(spark.range(100000, 100100).toDF("k")
-        .withColumn("p", lit(-2L)))
-    val (idA, touchedA, carriedA) = SnapshotTable.merge(updates, rootA, "k")
-    val (idB, touchedB, carriedB) =
-      SnapshotTable.mergeLarge(updates, rootB, "k")
-    assert((touchedA, carriedA) == (touchedB, carriedB))
-    assert(touchedA > 0 && carriedA > 0, s"($touchedA, $carriedA)")
-    val a = SnapshotTable.readAt(spark, rootA, idA)
-      .as[(Long, Long)].collect().sorted.toSeq
-    val b = SnapshotTable.readAt(spark, rootB, idB)
-      .as[(Long, Long)].collect().sorted.toSeq
-    assert(a == b)
+    val root = tmpRoot(tag)
+    files.foreach(ks => SnapshotTable.commit(
+      ks.map(k => (k, 0L)).toDF(keyName, "v").coalesce(1), root,
+      statsCol = Some(keyName)))
+    if (keyName != "k") SnapshotTable.renameColumn(spark, root, keyName, "k")
+    val (_, touched, carried) = SnapshotTable.merge(
+      delta.map(k => (k, 1L)).toDF("k", "v"), root, "k")
+    val rows = SnapshotTable.read(spark, root).as[(K, Long)].collect().toSeq
+    assert(rows.map(_._1).distinct.length == rows.length,
+      s"$tag: a replaced row survived the merge")
+    (touched, carried, rows.toMap)
   }
 
-  test("merge and mergeLarge leave persisted RDDs and the cache manager " +
-      "as they found them, and keep a caller-cached delta cached") {
+  test("merge rewrites exactly the files whose key bounds can hold an " +
+      "update key: long, int, double and string keys, a supplementary-" +
+      "plane string next to U+FFFD, and a renamed key column") {
+    val longs = Seq(0L to 9L, 10L to 19L, 20L to 29L, 30L to 39L)
+    val (t, c, got) = mergeSplit("long", longs, Seq(5L, 25L, 100L))
+    assert((t, c) == (2, 2))
+    assert(got == (0L to 39L).map(_ -> 0L).toMap ++
+      Seq(5L, 25L, 100L).map(_ -> 1L))
+    val (tr, cr, _) =
+      mergeSplit("renamed", longs, Seq(5L, 25L, 100L), keyName = "k0")
+    assert((tr, cr) == (2, 2))
+    val (ti, ci, _) =
+      mergeSplit("int", longs.map(_.map(_.toInt)), Seq(5, 25, 100))
+    assert((ti, ci) == (2, 2))
+    val (td, cd, _) = mergeSplit("double",
+      Seq(Seq(0.5, 1.5), Seq(2.5, 3.5), Seq(4.5, 5.5)), Seq(3.0, 9.0))
+    assert((td, cd) == (1, 2))
+    // UTF-8 byte order puts "\uFFFDa" < "😀a" < "😀z" (file 2's bounds);
+    // Java's UTF-16 order puts "😀a" below "\uFFFDa" and would carry
+    // file 2, leaving the old "😀a" row beside the new one
+    val (ts, cs, gotS) = mergeSplit("string",
+      Seq(Seq("b", "c"), Seq("\uFFFDa", "😀a", "😀z")), Seq("😀a"))
+    assert((ts, cs) == (1, 1))
+    assert(gotS == Map("b" -> 0L, "c" -> 0L, "\uFFFDa" -> 0L,
+      "😀a" -> 1L, "😀z" -> 0L))
+  }
+
+  test("the touched-file probe starts one Spark job, for merge's " +
+      "cached delta and for deleteByKeys' key frame") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val root = tmpRoot("probejobs")
+    SnapshotTable.commit(spark.range(0, 4000).toDF("k")
+        .withColumn("p", col("k") * 2).repartitionByRange(8, col("k")),
+      root, statsCol = Some("k"))
+    val cur = SnapshotTable.currentSnapshot(spark, root)
+    val sc = spark.sparkContext
+    val tag = s"r11.probe.${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val end = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag))) match {
+          case Some("probe") => jobs.incrementAndGet()
+          case Some("end") => end.countDown()
+          case _ =>
+        }
+    }
+    def probeJobs(keys: org.apache.spark.sql.DataFrame, op: String)
+        : (Int, Int, Int) = {
+      jobs.set(0)
+      sc.setLocalProperty(tag, "probe")
+      val (touched, carried, _) =
+        SnapshotTable.touchedSplit(keys, root, cur, "k", op)
+      sc.setLocalProperty(tag, null)
+      (jobs.get, touched.size, carried.size)
+    }
+    sc.addSparkListener(listener)
+    // merge probes its pinned delta; whichever consumer of a fresh pin
+    // runs first also pays the pin's own materialization job, so the
+    // pin is materialized here and only the probe's jobs are counted
+    val delta = spark.range(1000, 1040).toDF("k").withColumn("p", lit(-1L))
+      .cache()
+    delta.count()
+    try {
+      val forMerge = probeJobs(delta, "merge")
+      val forDelete = probeJobs(Seq(5L, 17L, 3999L).toDF("k"), "deleteByKeys")
+      sc.setLocalProperty(tag, "end")
+      sc.parallelize(Seq(1), 1).count()
+      assert(end.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(forMerge._1 == 1 && forMerge._2 >= 1, s"merge probe $forMerge")
+      assert(forDelete._1 == 1 && forDelete._2 >= 1,
+        s"deleteByKeys probe $forDelete")
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+      delta.unpersist(blocking = true)
+    }
+  }
+
+  test("merge leaves persisted RDDs and the cache manager as it found " +
+      "them, and keeps a caller-cached delta cached") {
     import spark.implicits._
     import org.apache.spark.storage.StorageLevel
     val root = tmpRoot("mcache")
@@ -182,26 +246,19 @@ class SnapshotRound11Spec extends SparkSpec {
       .withColumn("p", lit(-lo))
     def cacheState() = (spark.sparkContext.getPersistentRDDs.keySet,
       org.apache.spark.sql.SpecShim.cachedPlans(spark))
-    val merges: Seq[(String, org.apache.spark.sql.DataFrame => Unit)] = Seq(
-      "merge" -> (u => SnapshotTable.merge(u, root, "k")),
-      "mergeLarge" -> (u => SnapshotTable.mergeLarge(u, root, "k")))
-    merges.zipWithIndex.foreach { case ((name, run), i) =>
-      val before = cacheState()
-      run(delta(1000L * i))
-      assert(cacheState() == before, s"$name left cached state behind")
-    }
+    val before = cacheState()
+    SnapshotTable.merge(delta(1000L), root, "k")
+    assert(cacheState() == before, "merge left cached state behind")
     // a delta the CALLER cached is the caller's: still cached after
-    // each merge, and nothing else is left behind
+    // the merge, and nothing else is left behind
     val own = delta(3000L).cache()
     try {
       own.count()
-      merges.foreach { case (name, run) =>
-        val before = cacheState()
-        run(own)
-        assert(own.storageLevel != StorageLevel.NONE,
-          s"$name evicted the caller's cache entry")
-        assert(cacheState() == before, s"$name left cached state behind")
-      }
+      val before = cacheState()
+      SnapshotTable.merge(own, root, "k")
+      assert(own.storageLevel != StorageLevel.NONE,
+        "merge evicted the caller's cache entry")
+      assert(cacheState() == before, "merge left cached state behind")
     } finally own.unpersist(blocking = true)
     val got = SnapshotTable.read(spark, root).as[(Long, Long)].collect()
     assert(got.length == 4000 &&

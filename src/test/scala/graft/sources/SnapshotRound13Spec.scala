@@ -21,7 +21,7 @@ import graft.SparkSpec
   *  - the forced delete-state broadcasts carry a size guardrail
   *    (5,000,000 delete rows, `DeleteBroadcastMaxRows`) with a
   *    shuffle-join fallback producing identical rows;
-  *  - [[SnapshotTable.deleteByKeys]] — the join-form keyed COW delete
+  *  - [[SnapshotTable.deleteByKeys]] — the keyed COW delete
   *    whose key set never visits the driver — equals the
   *    deleteWhere(In) collect form row-for-row and change-feeds like
   *    any delete;
@@ -247,6 +247,80 @@ class SnapshotRound13Spec extends SparkSpec {
     val folded = SnapshotTable.applyChanges(
       SnapshotTable.readAt(spark, rootA, v0), feed, "k")
     assert(folded.orderBy("k").collect().toSeq == a)
+  }
+
+  test("merge and deleteByKeys refuse a null key before writing " +
+      "anything, with and without key stats, and the head stays put") {
+    import spark.implicits._
+    def files(root: String): Set[String] = {
+      val dir = new java.io.File(new java.net.URI(s"file:$root").getPath)
+      def walk(f: java.io.File): Seq[String] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f.getPath)
+      walk(dir).toSet
+    }
+    Seq(Some("k"), None).foreach { stats =>
+      val root = s"${tmp()}/t"
+      SnapshotTable.commit(Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+        .coalesce(1), root, statsCol = stats)
+      val head = SnapshotTable.currentSnapshot(spark, root)
+      val before = files(root)
+      val nullKey = Seq((Some(1L), "x"), (None, "y"))
+        .toDF("k", "v")
+      Seq[(String, () => Any)](
+        "merge" -> (() => SnapshotTable.merge(nullKey, root, "k")),
+        "deleteByKeys" -> (() =>
+          SnapshotTable.deleteByKeys(nullKey.select("k"), root, "k"))
+      ).foreach { case (op, run) =>
+        val e = intercept[IllegalArgumentException](run())
+        assert(e.getMessage.contains(s"$op: null values in key column k"),
+          e.getMessage)
+        assert(SnapshotTable.currentSnapshot(spark, root) == head,
+          s"$op with stats $stats moved the head")
+        assert(files(root) == before, s"$op with stats $stats wrote files")
+      }
+    }
+  }
+
+  test("deleteStats reads each delete's (dropped, rewritten, carried) " +
+      "from its own manifests: two tables deleting from two threads " +
+      "each get the tuple their own call returned") {
+    import spark.implicits._
+    import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan}
+    val roots = Seq(s"${tmp()}/a", s"${tmp()}/b")
+    roots.foreach(r => SnapshotTable.commit(
+      spark.range(0, 400).select(col("id").as("k"))
+        .repartitionByRange(8, col("k")).sortWithinPartitions("k"),
+      r, statsCol = Some("k")))
+    // a's deletes drop whole low files and rewrite a boundary file; b's
+    // rewrite one boundary file and carry the rest
+    val deletes = Seq(
+      Seq(130L, 140L, 260L).map(v => LessThan("k", v)),
+      Seq(395L, 390L, 300L).map(v => GreaterThanOrEqual("k", v)))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val calls = roots.zip(deletes).map { case (r, fs) =>
+        pool.submit(() => fs.map { f =>
+          val (id, dropped, rewritten, carried) =
+            SnapshotTable.deleteWhere(spark, r, Seq(f))
+          (id, (dropped, rewritten, carried))
+        })
+      }
+      roots.zip(calls.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS)))
+        .foreach { case (r, results) =>
+          results.foreach { case (id, returned) =>
+            assert(SnapshotTable.deleteStats(spark, r, id) == returned,
+              s"$r v$id")
+          }
+        }
+      assert(calls.head.get().head._2._1 >= 1,
+        "a's first delete must drop whole files")
+    } finally pool.shutdown()
+    // deleteByKeys drops nothing: rewritten and carried only
+    val (id, rewritten, carried) =
+      SnapshotTable.deleteByKeys(Seq(320L).toDF("k"), roots.head, "k")
+    assert(rewritten == 1)
+    assert(SnapshotTable.deleteStats(spark, roots.head, id) ==
+      (0, rewritten, carried))
   }
 
   test(".partitions subtracts delete-vector rows per file; eq-burdened" +
